@@ -8,8 +8,11 @@ JSON object with every operation it attempted on stdout.
 Query mix (``dashboard``): each client walks a fixed cycle of slots, each
 a channel (``/query``; ``/immediate`` with ``Cache-control: no-cache``;
 RPC ``Client.query``) and a kind: a hot text (drawn once from the seed, one
-per hot template) or a fresh draw, whose distinct ``LIMIT`` misses the
-engine's 64-entry plan cache.
+per hot template) or a fresh draw of one of the fresh templates, whose
+distinct ``LIMIT`` misses the engine's 64-entry plan cache. The slot order
+and the template rotation do not depend on the seed, and each client
+starts at another point of both, so every run sends the same mix and every
+template is reached in every window.
 
 ``ingest_mix`` runs one writer, streaming fixed-size batches through the
 RPC ``Inserter``, and one reader sending hot texts to ``/query``.
@@ -97,7 +100,8 @@ class Clients:
             return _rows_from_result(res)
         return _rows_from_columns(res["columns"], res["rows"])
 
-    def query_op(self, rng: random.Random, tmpl: str, args: dict, chan: str, hot: bool) -> None:
+    def query_op(self, rng: random.Random, seen: set, tmpl: str, args: dict, chan: str,
+                 hot: bool) -> None:
         sql = BY_NAME[tmpl].sql(args)
         start = time.perf_counter()
         rec = {"t": tmpl, "a": args, "sql": sql, "chan": chan, "hot": hot,
@@ -109,23 +113,34 @@ class Clients:
         except Exception as e:  # every failure is counted, never fatal
             rec["ok"], rec["err"] = False, f"{type(e).__name__}: {e}"[:300]
         rec["ms"] = (time.perf_counter() - start) * 1000.0
-        if rec["ok"] and rng.random() < self.cfg["sample_share"]:
+        # the first response of each template on each channel is always
+        # checked, so every template is checked in every run
+        first = (tmpl, chan) not in seen
+        seen.add((tmpl, chan))
+        if rec["ok"] and (first or rng.random() < self.cfg["sample_share"]):
             rec["rows"] = rows
         with self.lock:
             self.queries.append(rec)
 
     # -- client loops -----------------------------------------------------------
     def reader(self, cid: int, hot: list[tuple[str, dict]], cycle: list) -> None:
-        """Closed loop over a fixed cycle of (channel, hot|fresh) slots in a
-        seeded order; hot texts and fresh templates are taken in turn, so
-        every run sends the same mix."""
+        """Closed loop over a fixed cycle of (channel, hot|fresh) slots, each
+        kind spaced evenly through the cycle; hot texts and fresh templates
+        are taken in turn. Client ``cid`` of ``clients`` starts that share
+        of the way into the cycle and into each template pool, so the
+        clients do not send the same query at the same time and between
+        them reach every template early in the window."""
         rng = random.Random(self.cfg["seed"] * 1009 + cid)
         n = self.cfg["n_points"]
-        slots = [(chan, kind) for chan, kind, k in cycle for _ in range(k)]
-        rng.shuffle(slots)
+        share = cid / self.cfg.get("clients", 1)
+        slots = sorted(((j + 0.5) / k, i, chan, kind)
+                       for i, (chan, kind, k) in enumerate(cycle) for j in range(k))
+        slots = [(chan, kind) for *_, chan, kind in slots]
+        fresh = [BY_NAME[t] for t in self.cfg.get("fresh_templates", [])]
         turn: dict[tuple[str, str], int] = {}
+        seen: set = set()
         self.first_ack.wait()  # ingest_mix: the store is empty until then
-        i = 0
+        i = int(share * len(slots))
         while time.perf_counter() < self.deadline:
             chan, kind = slots[i % len(slots)]
             i += 1
@@ -133,11 +148,12 @@ class Clients:
             imm = chan == "immediate"
             if kind == "hot":
                 pool = [h for h in hot if not imm or BY_NAME[h[0]].immediate]
-                self.query_op(rng, *pool[k % len(pool)], chan, True)
+                tmpl, args = pool[(k + int(share * len(pool))) % len(pool)]
             else:
-                pool = [t for t in TEMPLATES if t.fresh and (not imm or t.immediate)]
-                t = pool[k % len(pool)]
-                self.query_op(rng, t.name, t.draw(rng, n), chan, False)
+                pool = [t for t in fresh if not imm or t.immediate]
+                t = pool[(k + int(share * len(pool))) % len(pool)]
+                tmpl, args = t.name, t.draw(rng, n)
+            self.query_op(rng, seen, tmpl, args, chan, kind == "hot")
 
     def writer(self) -> None:
         cfg = self.cfg

@@ -20,8 +20,7 @@ response is compared:
   descending, compared as the sorted ``cnt`` list plus per-row fields;
 - ``multiset``: the rows of a ``UNION ALL``, compared as a sorted list;
 - ``approx``: COUNTDISTINCT sketch fields lie within 40 % of the exact count;
-- ``bounds``: PERCENTILE and CROSSHIFT fields are present and lie inside
-  ``bounds``.
+- ``bounds``: PERCENTILE fields are present and lie inside ``bounds``.
 """
 
 from __future__ import annotations
@@ -94,9 +93,6 @@ class Template:
     # cheap enough for /immediate, which lowers afresh and persists the
     # table's state on every no-cache request (its short timeout is 5 s)
     immediate: bool = False
-    # drawn with fresh literals (plan-cache misses); the others are sent
-    # only as hot texts, because a miss on them costs several seconds
-    fresh: bool = True
 
 
 TEMPLATES = [
@@ -156,11 +152,20 @@ TEMPLATES = [
             f"SELECT CROSSHIFT(cnt, '-{a['a']}d', '1d') AS cs FROM hourly "
             f"WHERE region = '{a['r']}' GROUP BY event_type, period('1d')"
         ),
-        lambda a: "",
+        # one base column plus one per day back, each a shifted daily count
+        lambda a: (
+            f"WITH d AS (SELECT {_bucket(1)} AS _time, event_type, count(*) AS cnt "
+            f"FROM points WHERE region = '{a['r']}' GROUP BY ALL) "
+            f"SELECT d._time, d.event_type, d.cnt AS cs, "
+            + ", ".join(f"coalesce(p{k}.cnt, 0) AS cs_{k}d" for k in range(1, a["a"] + 1))
+            + " FROM d "
+            + " ".join(
+                f"LEFT JOIN d p{k} ON p{k}.event_type = d.event_type "
+                f"AND p{k}._time + {k * DAY} = d._time"
+                for k in range(1, a["a"] + 1)
+            )
+        ),
         ("event_type",),
-        check="bounds",
-        bounds={"cs": (0.0, 1e9)},
-        fresh=False,
     ),
     Template(
         "crosstabt",
@@ -212,7 +217,6 @@ TEMPLATES = [
             f"'{a['e']}' GROUP BY region HAVING count(*) > {a['k']}) GROUP BY ALL"
         ),
         ("region",),
-        fresh=False,
     ),
     Template(
         "from_subquery",
@@ -249,11 +253,11 @@ TEMPLATES = [
     ),
     Template(
         "asof_until",
-        lambda r, n: {"d0": r.randint(0, 50)},
+        lambda r, n: {"d0": r.randint(0, 50), "lim": _lim(r)},
         lambda a: (
             f"SELECT cnt, total FROM hourly ASOF '{_iso(START + a['d0'] * DAY)}' "
             f"UNTIL '{_iso(START + (a['d0'] + 7) * DAY)}' "
-            f"GROUP BY region, period('1d')"
+            f"GROUP BY region, period('1d') LIMIT {a['lim']}"
         ),
         lambda a: (
             f"SELECT {_bucket(1)} AS _time, region, {_aggs('cnt', 'total')} FROM points "
