@@ -221,3 +221,80 @@ def test_multimodal_frame_sample(spark):
     # doc 2: 10 bytes -> 1 frame
     assert [r["frame_idx"] for r in by_id["2"]] == [0]
     assert bytes(by_id["2"][0]["frame_payload"]) == b"y" * 10
+
+
+class TestShare:
+    """share() checkpoints a shared subtree unless its scan input is
+    provably small; every unknown fails toward checkpointing."""
+
+    @staticmethod
+    def _checkpointed(df, out) -> bool:
+        # a localCheckpoint returns a new frame whose plan is a bare
+        # LogicalRDD leaf (an in-memory frame may already be one)
+        plan = out._jdf.queryExecution().analyzed().toString()
+        return out is not df and plan.startswith("LogicalRDD")
+
+    @staticmethod
+    def _scan(spark, tmp_path, n=100):
+        p = str(tmp_path / "src.parquet")
+        spark.range(n).write.parquet(p)
+        return spark.read.parquet(p)
+
+    def test_small_input_passes_through(self, spark, tmp_path):
+        from zenodb_spark.operators.util import share
+
+        df = self._scan(spark, tmp_path).withColumn("y", F.col("id") * 2)
+        assert share(df) is df
+
+    def test_big_input_checkpoints(self, spark, tmp_path, monkeypatch):
+        from zenodb_spark.operators import util
+
+        monkeypatch.setattr(util, "CHECKPOINT_MIN_BYTES", 1)
+        df = self._scan(spark, tmp_path).withColumn("y", F.col("id") * 2)
+        out = util.share(df)
+        assert self._checkpointed(df, out)
+        assert sorted(r["y"] for r in out.collect()) == [2 * i for i in range(100)]
+
+    def test_stat_error_checkpoints(self, spark, tmp_path, monkeypatch):
+        import os
+
+        from zenodb_spark.operators.util import share
+
+        df = self._scan(spark, tmp_path)
+
+        def unreadable(path):
+            raise OSError(path)
+
+        monkeypatch.setattr(os.path, "getsize", unreadable)
+        assert self._checkpointed(df, share(df))
+
+    def test_input_files_error_checkpoints(self, spark, tmp_path, monkeypatch):
+        from zenodb_spark.operators.util import share
+
+        df = self._scan(spark, tmp_path)
+
+        def failing_probe(self):
+            raise RuntimeError("inputFiles unavailable")
+
+        monkeypatch.setattr(type(df), "inputFiles", failing_probe)
+        assert self._checkpointed(df, share(df))
+
+    def test_file_less_frame_checkpoints(self, spark):
+        from zenodb_spark.operators.util import share
+
+        df = spark.createDataFrame([Row(x=1), Row(x=2)])
+        out = share(df)
+        assert self._checkpointed(df, out)
+        assert sorted(r["x"] for r in out.collect()) == [1, 2]
+
+    def test_source_sizes_on_the_raw_scan(self, spark, tmp_path, monkeypatch):
+        """A frame above another checkpoint reports no scan files of its
+        own; ``source`` sizes the decision on the raw scan instead."""
+        from zenodb_spark.operators import util
+
+        src = self._scan(spark, tmp_path, n=50)
+        derived = src.localCheckpoint().withColumn("y", F.col("id") + 1)
+        assert derived.inputFiles() == []
+        assert util.share(derived, source=src) is derived
+        monkeypatch.setattr(util, "CHECKPOINT_MIN_BYTES", 1)
+        assert self._checkpointed(derived, util.share(derived, source=src))

@@ -1,6 +1,7 @@
-"""Round-7 (second optimization round) pins: the size-adaptive checkpoint
-gate, the CC fast-lane byte gate, the 64-bit lsh_fingerprint base, and the
-q68 null-user-id fixture assumption."""
+"""Round-7 (second optimization round) pins: the CC fast-lane byte gate,
+the 64-bit lsh_fingerprint base, and the q68 null-user-id fixture
+assumption. The size-adaptive checkpoint rule is tested with the operators
+(tests/test_operators.py, TestShare)."""
 
 from __future__ import annotations
 
@@ -11,71 +12,6 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_ORACLE, SF_SMOKE
-
-
-def _is_checkpointed(df) -> bool:
-    # a localCheckpoint truncates the plan to a LogicalRDD leaf
-    return "LogicalRDD" in df._jdf.queryExecution().analyzed().toString()
-
-
-class TestMaybeCheckpoint:
-    """maybe_checkpoint materializes a shared subtree only above the input
-    size gate; below it the frame passes through untouched (round 7 — the
-    fix for round 6's bench-scale checkpoint regressions)."""
-
-    def test_small_input_passes_through(self, spark, monkeypatch, tmp_path):
-        from zenodb_spark.operators.util import maybe_checkpoint
-
-        monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_MIN_BYTES", raising=False)
-        p = str(tmp_path / "small.parquet")
-        spark.range(100).write.parquet(p)
-        df = spark.read.parquet(p).withColumn("y", F.col("id") * 2)
-        out = maybe_checkpoint(df)
-        assert out is df  # pass-through, no materialization
-        assert out.count() == 100
-
-    def test_env_zero_forces_checkpoint(self, spark, monkeypatch, tmp_path):
-        from zenodb_spark.operators.util import maybe_checkpoint
-
-        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_MIN_BYTES", "0")
-        df = spark.range(10).withColumn("y", F.col("id") * 2)
-        out = maybe_checkpoint(df)
-        assert _is_checkpointed(out)
-        assert sorted(r["y"] for r in out.collect()) == [2 * i for i in range(10)]
-
-    def test_big_input_checkpoints(self, spark, monkeypatch, tmp_path):
-        from zenodb_spark.operators.util import maybe_checkpoint
-
-        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_MIN_BYTES", "1")
-        p = str(tmp_path / "big.parquet")
-        spark.range(100).write.parquet(p)
-        df = spark.read.parquet(p)
-        assert _is_checkpointed(maybe_checkpoint(df))
-
-    def test_in_memory_frame_passes_through(self, spark, monkeypatch):
-        from zenodb_spark.operators.util import maybe_checkpoint
-
-        monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_MIN_BYTES", raising=False)
-        df = spark.createDataFrame([Row(x=1), Row(x=2)])
-        assert maybe_checkpoint(df) is df
-
-    def test_gate_df_sizes_on_the_source(self, spark, monkeypatch, tmp_path):
-        """A frame above another checkpoint reports no input files; gate_df
-        lets it size the decision on the raw source scan (q165's w)."""
-        from zenodb_spark.operators.util import maybe_checkpoint
-
-        p = str(tmp_path / "src.parquet")
-        spark.range(50).write.parquet(p)
-        src = spark.read.parquet(p)
-        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_MIN_BYTES", "1")
-        base = maybe_checkpoint(src)
-        assert _is_checkpointed(base)
-        derived = base.withColumn("y", F.col("id") + 1)
-        assert len(derived.inputFiles()) == 0  # why gate_df exists
-        out = maybe_checkpoint(derived, gate_df=src)
-        assert _is_checkpointed(out)
-        # and without gate_df the derived frame would (wrongly) skip
-        assert maybe_checkpoint(derived) is derived
 
 
 class TestCcDriverByteGate:

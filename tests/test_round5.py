@@ -427,47 +427,3 @@ def test_q140_estimate_tracks_exact(spark):
     for r in rows:
         assert abs(r.est_jaccard - r.exact_jaccard) < 0.25
 
-
-def test_stream_value_totals_tws_when_protobuf_available(spark, tmp_path):
-    """transformWithStateInPandas twin of the keyed counter: runs only
-    where Spark's TWS python worker can import protobuf (not in this
-    container — the operator is shipped gated, the test documents the
-    requirement and exercises the path wherever it CAN run)."""
-    import pytest
-
-    pytest.importorskip("google.protobuf.descriptor")
-    from zenodb_spark.streaming.stateful import stream_value_totals_tws
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        src = str(tmp_path / "src")
-        spark.createDataFrame(
-            [Row(k="a", v=1), Row(k="a", v=2), Row(k="b", v=5)]
-        ).write.parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-        )
-        out = stream_value_totals_tws(stream, "k", "v")
-        q = (
-            out.writeStream.format("memory")
-            .queryName("t_tws")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        totals = {
-            r.key: r.total
-            for r in spark.table("t_tws")
-            .groupBy("key")
-            .agg(F.max("total").alias("total"))
-            .collect()
-        }
-        assert totals == {"a": 3, "b": 5}
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")

@@ -1,7 +1,9 @@
 """Per-query optimization probe (guide §1: measure first).
 
 For each named query: capture ``explain("formatted")`` to
-``plans/r06/<name>_<tag>.txt`` and (optionally) time the query with the
+``plans/r06/<name>_<tag>.txt`` — normalized: expression ids (``#N``), RDD
+ids, exchange ``plan_id``s and the data directory are stripped, so a
+before/after pair of an unchanged plan diffs clean — and (optionally) time the query with the
 noop sink — which materializes EVERY column (bench.py's ``count()`` lets
 the optimizer prune) — after one untimed warm pass at sf0.001 to absorb
 codegen/JIT cost. Jobs are labeled so a live UI run is readable.
@@ -9,17 +11,28 @@ codegen/JIT cost. Jobs are labeled so a live UI run is readable.
 Usage:
   python tools/opt_probe.py q64_bm25_topk q187_rrf_hybrid --tag before
   python tools/opt_probe.py all --tag before --no-time       # plans only
+  python tools/opt_probe.py q165_dup_span_strike --no-time --tag after --plans-dir plans/r08
   python tools/opt_probe.py q64_bm25_topk --passes 5 --no-plan
 """
 
 from __future__ import annotations
 
 import argparse
+import re
 import sys
 import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+
+def normalize_plan(plan: str, sf_dir: str) -> str:
+    """Strip the per-session ids and the data directory from an explain
+    string."""
+    plan = plan.replace(str(Path(sf_dir).resolve()), "<sf_dir>")
+    plan = re.sub(r"#\d+", "#", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD[]", plan)
+    return re.sub(r"plan_id=\d+", "plan_id=", plan)
 
 
 def main() -> None:
@@ -66,7 +79,7 @@ def main() -> None:
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            (plans_dir / f"{name}_{args.tag}.txt").write_text(plan)
+            (plans_dir / f"{name}_{args.tag}.txt").write_text(normalize_plan(plan, args.sf_dir))
             print(f"# plan -> {name}_{args.tag}.txt", file=sys.stderr)
         if args.no_time:
             continue

@@ -21,19 +21,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def epoch_us_col(col: Column | str, dtype: str) -> Column:
     """Epoch-microseconds BIGINT from a timestamp column, timezone-free.
@@ -83,12 +70,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = normalize_points(df)
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (for spark.sql paths)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

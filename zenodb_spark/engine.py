@@ -868,17 +868,6 @@ class DB:
             df.unpersist(False)
         self._coalesced_scans.clear()
 
-    def explain(self, sql: str, mode: str = "formatted") -> str:
-        """Formatted physical plan of a dialect query — the reference logs
-        its operator tree via FormatSource (core/format.go:8-29,
-        query.go:50); here Catalyst's plan IS the operator tree, which is
-        strictly more informative (exchanges, pushed filters, codegen
-        spans)."""
-        df = self.plan(parse(sql))
-        return df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), mode
-        )
-
     _PLAN_CACHE_MAX = 64
 
     def _invalidate_plans(self) -> None:

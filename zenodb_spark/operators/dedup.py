@@ -192,6 +192,21 @@ def ngram_jaccard_pairs(
     )
 
 
+def _shared_fingerprint_arrays(
+    df: DataFrame, text_col: str, id_col: str, n: int
+) -> DataFrame:
+    """Fingerprinted shingle arrays shared by several plan branches, lazily
+    localCheckpointed. No size-filter: shingle_arrays guarantees nonempty
+    arrays, and re-filtering would push the shingle expr below the exchange.
+    localCheckpoint, NOT persist: a persist on a frame returned lazily can
+    never be unpersisted by the operator, so long driver sessions leak
+    CacheManager entries; checkpoint blocks are freed by the ContextCleaner
+    once the frame is garbage collected (same fix as operators/prefix.py)."""
+    return shingle_arrays(df, text_col, id_col, n, fingerprint=True).localCheckpoint(
+        eager=False
+    )
+
+
 def ngram_jaccard_pairs_prefix(
     df: DataFrame,
     text_col: str,
@@ -223,18 +238,7 @@ def ngram_jaccard_pairs_prefix(
     WWW'08).
     """
     if arrays is None:
-        arrays = (
-            shingle_arrays(df, text_col, id_col, n, fingerprint=True)
-            # no size-filter here: shingle_arrays guarantees nonempty arrays,
-            # and re-filtering would push the shingle expr below the exchange.
-            # localCheckpoint(eager=False), NOT persist: a persist on a frame
-            # returned lazily can never be unpersisted by the operator, so
-            # long driver sessions leak CacheManager entries; checkpoint
-            # blocks are freed by the ContextCleaner once the frame is
-            # garbage collected (same fix as operators/prefix.py, round-4
-            # ADVICE item 4).
-            .localCheckpoint(eager=False)
-        )
+        arrays = _shared_fingerprint_arrays(df, text_col, id_col, n)
     sh = arrays.select(
         "doc", F.size("shingles").alias("sz"), F.explode("shingles").alias("shingle")
     )
@@ -595,11 +599,7 @@ def ngram_jaccard_pairs_pairtoken(
     if K is None or small_max is None:
         raise ValueError("pairtoken requires planner-provided K and small_max")
     if arrays is None:
-        # localCheckpoint, not persist — leak-free shared materialization
-        # (see ngram_jaccard_pairs_prefix)
-        arrays = shingle_arrays(
-            df, text_col, id_col, n, fingerprint=True
-        ).localCheckpoint(eager=False)
+        arrays = _shared_fingerprint_arrays(df, text_col, id_col, n)
     sh = arrays.select(
         "doc", F.size("shingles").alias("sz"), F.explode("shingles").alias("s")
     )
@@ -643,11 +643,7 @@ def containment_pairs_pairtoken(
     if K is None or small_max is None:
         raise ValueError("pairtoken requires planner-provided K and small_max")
     if arrays is None:
-        # localCheckpoint, not persist — leak-free shared materialization
-        # (see ngram_jaccard_pairs_prefix)
-        arrays = shingle_arrays(
-            df, text_col, id_col, n, fingerprint=True
-        ).localCheckpoint(eager=False)
+        arrays = _shared_fingerprint_arrays(df, text_col, id_col, n)
     sh = arrays.select(
         "doc", F.size("shingles").alias("sz"), F.explode("shingles").alias("s")
     )
@@ -1075,7 +1071,7 @@ def minhash_lsh_pairs(
         shingle_arrays(df, text_col, id_col, n)
         # no size-filter here: shingle_arrays guarantees nonempty arrays.
         # localCheckpoint, not persist — leak-free shared materialization
-        # (see ngram_jaccard_pairs_prefix)
+        # (see _shared_fingerprint_arrays)
         .localCheckpoint(eager=False)
     )
     # signatures straight off the array, NO groupBy shuffle. Hash family is
@@ -1352,7 +1348,7 @@ def _cc_star(
     # lists don't produce them, and dedup_clusters unions labels over the
     # pair frame's own nodes anyway.
 
-    def _sig(df: DataFrame):
+    def _sig(df: DataFrame, *extra):
         r = df.agg(
             F.count(F.lit(1)).alias("n"),
             # try_cast: numeric ids sum exactly; non-numeric (string) ids
@@ -1360,15 +1356,29 @@ def _cc_star(
             # to detect the fixpoint (ANSI cast would throw on strings)
             F.sum(F.col("a").try_cast("decimal(38,0)")).alias("sa"),
             F.sum(F.col("b").try_cast("decimal(38,0)")).alias("sb"),
+            *extra,
         ).collect()[0]
-        return (r["n"], r["sa"], r["sb"])
+        return (r["n"], r["sa"], r["sb"]), r
 
-    prev_sig = _sig(e)
+    # the first signature also estimates the fast lane's collected
+    # footprint: id bytes plus ~60 B/edge of Row/tuple overhead, so fat
+    # string ids the edge count under-estimates stay distributed
+    prev_sig, r = _sig(
+        e,
+        F.sum(
+            F.octet_length(F.col("a").cast("string"))
+            + F.octet_length(F.col("b").cast("string"))
+            + F.lit(60)
+        ).alias("bytes"),
+    )
     if driver_max_edges is None:
         driver_max_edges = int(
             os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "1000000")
         )
-    if prev_sig[0] <= driver_max_edges and _cc_driver_bytes_ok(e):
+    max_bytes = int(
+        os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_BYTES", str(64 * 1024 * 1024))
+    )
+    if prev_sig[0] <= driver_max_edges and (r["bytes"] or 0) <= max_bytes:
         if stats is not None:
             stats["rounds"] = 0  # driver fast lane: no distributed rounds
         return _cc_union_find_driver(e)
@@ -1405,7 +1415,7 @@ def _cc_star(
             .distinct()
             .localCheckpoint()
         )
-        sig = _sig(e_new)
+        sig, _ = _sig(e_new)
         if sig == prev_sig and e_new.exceptAll(e).union(e.exceptAll(e_new)).isEmpty():
             e = e_new
             break
@@ -1419,29 +1429,6 @@ def _cc_star(
         .groupBy("node")
         .agg(F.min("lab").alias("lab"))
     )
-
-
-def _cc_driver_bytes_ok(e: DataFrame) -> bool:
-    """Second fast-lane gate (round 7, VERDICT r6 item 6): the edge-count
-    gate is calibrated for long ids, but 1e6 edges of fat STRING ids
-    collected as Python objects are far more than "tens of MB". Estimate
-    the collected footprint as id bytes plus ~60 B/edge of Row/tuple
-    overhead and require it under ``SPARK_GRAFT_CC_DRIVER_MAX_BYTES``
-    (default 64 MiB). This runs only when the edge count is already under
-    the edge gate, so the aggregate scans at most ``driver_max_edges``
-    already-materialized checkpoint blocks — one cheap extra job on small
-    graphs, zero cost on large ones."""
-    max_bytes = int(
-        os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_BYTES", str(64 * 1024 * 1024))
-    )
-    est = e.agg(
-        F.sum(
-            F.octet_length(F.col("a").cast("string"))
-            + F.octet_length(F.col("b").cast("string"))
-            + F.lit(60)
-        )
-    ).collect()[0][0]
-    return (est or 0) <= max_bytes
 
 
 def _cc_union_find_driver(e: DataFrame) -> DataFrame:
@@ -1702,14 +1689,7 @@ def containment_pairs(
         )
 
     if arrays is None:
-        arrays = (
-            shingle_arrays(df, text_col, id_col, n, fingerprint=True)
-            # no size-filter here: shingle_arrays guarantees nonempty arrays,
-            # and re-filtering would push the shingle expr below the exchange.
-            # localCheckpoint, not persist — leak-free shared materialization
-            # (see ngram_jaccard_pairs_prefix)
-            .localCheckpoint(eager=False)
-        )
+        arrays = _shared_fingerprint_arrays(df, text_col, id_col, n)
     sh = arrays.select(
         "doc", F.size("shingles").alias("sz"), F.explode("shingles").alias("shingle")
     )

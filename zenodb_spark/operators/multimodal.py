@@ -18,7 +18,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Callable, Iterator
 from typing import Any
 
@@ -52,12 +51,6 @@ _DECODERS: dict[str, Callable[[bytes], dict[str, Any]]] = {}
 
 def register_decoder(kind: str, fn: Callable[[bytes], dict[str, Any]]) -> None:
     _DECODERS[kind] = fn
-
-
-def _default_decode(payload: bytes) -> dict[str, Any]:
-    """Deterministic fake decode: real deployments replace via register_decoder."""
-    digest = hashlib.md5(payload).hexdigest()
-    return {"digest": digest, "n_bytes": len(payload)}
 
 
 def attach_media(df: DataFrame, text_col: str, id_col: str) -> DataFrame:

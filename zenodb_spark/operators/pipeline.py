@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from zenodb_spark.operators.dedup import normalize_text
-from zenodb_spark.operators.util import maybe_checkpoint, spread
+from zenodb_spark.operators.util import share, spread
 
 # Redaction patterns restricted to syntax with identical semantics in Java
 # regex (Spark) and RE2 (DuckDB): no lookaround, no backrefs.
@@ -215,7 +215,7 @@ def decontaminate_bloom(
     )
     # the benchmark gram set feeds both the bit table and the verify join;
     # checkpoint so the eval-set scan + gram explode runs once
-    bench_g = maybe_checkpoint(grams(benchmark).select("gram").distinct())
+    bench_g = share(grams(benchmark).select("gram").distinct())
     bits = bench_g.select(F.explode(positions).alias("pos")).distinct()
 
     cand = (

@@ -12,7 +12,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from zenodb_spark.operators.util import maybe_checkpoint
+from zenodb_spark.operators.util import share
 
 
 def ks_distance_by_group(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
@@ -35,9 +35,7 @@ def ks_distance_by_group(df: DataFrame, group_col: str, value_col: str) -> DataF
     # totals, grand total) would each recompute the caller's value
     # expression over the full frame (q192 pays a regex-normalize + split
     # per consumer); checkpoint the narrow (g, x) projection once
-    d = maybe_checkpoint(
-        df.select(F.col(group_col).alias("g"), F.col(value_col).alias("x"))
-    )
+    d = share(df.select(F.col(group_col).alias("g"), F.col(value_col).alias("x")))
     c1 = d.groupBy("g", "x").agg(F.count(F.lit(1)).alias("c"))
     grps = d.groupBy("g").agg(F.count(F.lit(1)).alias("n1"))
     xs = d.select("x").distinct()
@@ -101,7 +99,7 @@ def chi2_contingency(df: DataFrame, row_col: str, col_col: str) -> DataFrame:
     # o is category-grid-sized but feeds four consumers (row totals, col
     # totals, grand total, the grid join) — without a checkpoint each one
     # re-aggregates the raw frame from the scan (round-6 measured plan)
-    o = maybe_checkpoint(
+    o = share(
         df.groupBy(F.col(row_col).alias("r_"), F.col(col_col).alias("c_"))
         .agg(F.count(F.lit(1)).alias("o"))
     )
@@ -210,9 +208,7 @@ def mann_whitney_u(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     by the value domain), never a sort of the raw frame."""
     # three consumers of the narrow projection (cell counts, value totals,
     # grand total) — checkpoint once, same rationale as ks_distance_by_group
-    d = maybe_checkpoint(
-        df.select(F.col(group_col).alias("g"), F.col(value_col).alias("x"))
-    )
+    d = share(df.select(F.col(group_col).alias("g"), F.col(value_col).alias("x")))
     cgx = d.groupBy("g", "x").agg(F.count(F.lit(1)).alias("c"))
     ct = d.groupBy("x").agg(F.count(F.lit(1)).alias("ct"))
     nn = d.agg(F.count(F.lit(1)).alias("nn"))
@@ -310,7 +306,7 @@ def poisson_bootstrap_mean_ci(
     # two consumers (the ×reps replicate explode and the per-group base
     # stats) — checkpoint the narrow projection so the caller's value/id
     # expressions run once over the scan
-    d = maybe_checkpoint(
+    d = share(
         df.select(
             F.col(group_col).alias("g"),
             F.col(value_col).alias("x"),

@@ -236,11 +236,9 @@ def unigram_logprob(
         F.col(id_col).alias("doc"),
         F.explode(F.split(normalize_text(text_col), " ")).alias("tok"),
     ).filter(F.length("tok") > 0)
-    from zenodb_spark.operators.util import maybe_checkpoint
+    from zenodb_spark.operators.util import share
 
-    doc_tok = maybe_checkpoint(
-        toks.groupBy("doc", "tok").agg(F.count(F.lit(1)).alias("occ"))
-    )
+    doc_tok = share(toks.groupBy("doc", "tok").agg(F.count(F.lit(1)).alias("occ")))
     freq = doc_tok.groupBy("tok").agg(F.sum("occ").alias("cnt"))
     total = freq.agg(F.sum("cnt").alias("t"))
     lp = freq.crossJoin(F.broadcast(total)).select(

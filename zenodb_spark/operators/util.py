@@ -62,27 +62,6 @@ def lit_mat(rows) -> Column:
     )
 
 
-def _scan_file_size(spark, uri: str) -> int:
-    """Byte size of one scan file (driver-side, no job). Local paths are
-    stat'ed directly; anything else goes through the Hadoop FileSystem of
-    its own scheme. Unknown/unreadable files count as 0 — the caller's
-    threshold errs toward NOT materializing, which is only ever a local
-    fixed-cost question (see maybe_checkpoint)."""
-    p = urlparse(uri)
-    if p.scheme in ("", "file"):
-        try:
-            return os.path.getsize(unquote(p.path))
-        except OSError:
-            return 0
-    try:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(uri)
-        fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-        return fs.getFileStatus(jpath).getLen()
-    except Exception:
-        return 0
-
-
 # Below this input size, recomputing a shared subtree once per consumer is
 # cheaper than the extra materialization job a localCheckpoint schedules:
 # the whole input fits in one or two scan tasks, so each re-scan costs
@@ -91,65 +70,56 @@ def _scan_file_size(spark, uri: str) -> int:
 # count action). The break-even is a LOCAL fixed-cost question, independent
 # of cluster size — at any real corpus size the gate fires and the
 # round-6 one-pass shape (N corpus scans -> 1) is preserved unchanged.
-_CKPT_MIN_BYTES_DEFAULT = 3 * 1024 * 1024
+CHECKPOINT_MIN_BYTES = 3 * 1024 * 1024
 # At or above this many scan files the input is assumed big without
 # stat'ing each file: checkpointing data this size is at worst a small
 # fixed cost, while per-file driver-side stats are not.
 _CKPT_MANY_FILES = 64
 
 
-def checkpoint_worthwhile(df: DataFrame) -> bool:
-    """True when ``df``'s scan input is big enough that materializing a
-    shared subtree derived from it beats re-scanning once per consumer.
-
-    Input size is the summed byte size of the frame's scan files
-    (``inputFiles`` — analysis-only, no job, the same probe ``spread``
-    uses), with early exit once the threshold is crossed. Frames with no
-    scan files (in-memory test frames, already-checkpointed parents)
-    report False: callers whose subtree sits ABOVE another checkpoint
-    must gate on the original SOURCE frame, not the derived one.
-
-    ``SPARK_GRAFT_CHECKPOINT_MIN_BYTES`` overrides the threshold
-    (<= 0 forces checkpointing unconditionally — used by tests and by
-    deployments whose scan cost per byte is unusually high)."""
+def _scan_files(df: DataFrame) -> list[str]:
+    """The frame's scan files (``inputFiles``: analysis only, no job); empty
+    when it has none (in-memory or checkpointed leaves) or the probe fails."""
     try:
-        min_bytes = int(
-            os.environ.get(
-                "SPARK_GRAFT_CHECKPOINT_MIN_BYTES", _CKPT_MIN_BYTES_DEFAULT
-            )
-        )
-    except ValueError:
-        min_bytes = _CKPT_MIN_BYTES_DEFAULT
-    if min_bytes <= 0:
-        return True
-    try:
-        files = df.inputFiles()
+        return df.inputFiles()
     except Exception:
-        files = []
-    if len(files) >= _CKPT_MANY_FILES:
-        return True
-    total = 0
-    for uri in files:
-        total += _scan_file_size(df.sparkSession, uri)
-        if total >= min_bytes:
-            return True
-    return False
+        return []
 
 
-def maybe_checkpoint(df: DataFrame, eager: bool = True, gate_df: DataFrame | None = None) -> DataFrame:
-    """Size-adaptive ``localCheckpoint``: materialize a shared
-    multi-consumer subtree only when its input scan is big enough that
-    re-scanning it once per consumer costs more than one materialization
-    job (guide §2.4 / §5; the round-7 fix for round 6's bench-scale
-    checkpoint regressions). Semantically a no-op either way — consumers
-    see identical rows whether the subtree is materialized or recomputed.
+def _file_bytes(spark, uri: str) -> int:
+    """Byte size of one scan file (driver-side, no job); raises when the
+    file cannot be stat'ed. Local paths are stat'ed directly, anything else
+    through the Hadoop FileSystem of its own scheme."""
+    p = urlparse(uri)
+    if p.scheme in ("", "file"):
+        return os.path.getsize(unquote(p.path))
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(uri)
+    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs.getFileStatus(jpath).getLen()
 
-    ``gate_df`` sizes the decision on a different frame (the raw source)
-    when ``df`` itself sits above another checkpoint, whose LogicalRDD
-    reports no input files."""
-    if checkpoint_worthwhile(df if gate_df is None else gate_df):
-        return df.localCheckpoint(eager=eager)
-    return df
+
+def share(df: DataFrame, source: DataFrame | None = None) -> DataFrame:
+    """Materialize a shared multi-consumer subtree with an eager
+    ``localCheckpoint`` unless its scan input is provably small. Consumers
+    see identical rows either way; only the number of scans changes.
+
+    The input is sized on ``source`` (default ``df``): its scan files are
+    summed against :data:`CHECKPOINT_MIN_BYTES`, and 64+ files count as big
+    without stat'ing. Every unknown fails toward checkpointing — the choice
+    that is at worst a small fixed cost, where skipping it re-scans a big
+    input once per consumer: a failed probe or stat, and a sized frame with
+    no scan files. A subtree derived from another checkpoint reports no
+    files of its own, so such callers pass the raw scan as ``source``."""
+    src = df if source is None else source
+    files = _scan_files(src)
+    if 0 < len(files) < _CKPT_MANY_FILES:
+        try:
+            size = sum(_file_bytes(src.sparkSession, u) for u in files)
+            if size < CHECKPOINT_MIN_BYTES:
+                return df
+        except Exception:
+            pass
+    return df.localCheckpoint(eager=True)
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -166,10 +136,6 @@ def spread(df: DataFrame) -> DataFrame:
     single-file local read (or an in-memory test frame, which reports zero
     input files) gets one explicit round-robin spread."""
     sc = df.sparkSession.sparkContext
-    try:
-        nfiles = len(df.inputFiles())
-    except Exception:
-        nfiles = 0
-    if nfiles < sc.defaultParallelism:
+    if len(_scan_files(df)) < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism)
     return df

@@ -493,11 +493,6 @@ def _hist_bin_expr(v: Column, lo: float, hi: float, precision: int) -> Column:
     return F.when((v >= lo) & (v <= hi), F.least(idx, F.lit(nbins - 1)))
 
 
-def hist_nbins(meta: tuple) -> int:
-    lo, hi, precision = meta
-    return int(round((hi - lo) * float(10**precision))) + 1
-
-
 def _raw_state_agg(e: MExpr, spec: StateSpec, has_col, dim_resolve) -> list[Column]:
     """Aggregate Columns producing this leaf's state from raw points."""
     gate = None
@@ -555,24 +550,6 @@ def _raw_state_agg(e: MExpr, spec: StateSpec, has_col, dim_resolve) -> list[Colu
 # --------------------------------------------------------------------------
 # public lowering entry points
 # --------------------------------------------------------------------------
-
-
-@dataclass
-class TableMeta:
-    """Compiled shape of a stored table: dims, resolution, field IR and the
-    state registry mapping aggregate leaves → state columns."""
-
-    name: str
-    dims: list[str]
-    resolution: float
-    fields: list[SelectField]
-    registry: StateRegistry
-
-    def field_expr(self, name: str) -> MExpr | None:
-        for f in self.fields:
-            if f.name == name:
-                return f.expr
-        return None
 
 
 def raw_field_lookup(fields: list[SelectField]):

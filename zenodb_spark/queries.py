@@ -53,7 +53,7 @@ from zenodb_spark.functions.dims import CONCAT, DECODE, LEN, REPLACEALL, SPLIT, 
 from zenodb_spark.operators import dedup, similarity, textstats, timeops
 from zenodb_spark.operators.crosstab import crosstab
 from zenodb_spark.operators.percentile import hist_agg, hist_quantile, percentile_exact
-from zenodb_spark.operators.util import maybe_checkpoint
+from zenodb_spark.operators.util import share
 from zenodb_spark.operators.topk import topk
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -3178,9 +3178,7 @@ def q71_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (round 6; Catalyst cannot stage-reuse subtrees that prune apart);
     # size-gated round 7 — below the gate the rescans are cheaper than the
     # materialization job
-    tf = maybe_checkpoint(
-        toks.groupBy("doc", "tok").agg(F.count(F.lit(1)).alias("tf"))
-    )
+    tf = share(toks.groupBy("doc", "tok").agg(F.count(F.lit(1)).alias("tf")))
     stats = tf.agg(F.count_distinct("doc").alias("n_docs"))
     idf = (
         tf.groupBy("tok")
@@ -4994,7 +4992,7 @@ def q106_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dt feeds five differently-pruned consumers (raw LM, target LM, the
     # two totals, scoring); checkpoint so the corpus is scanned + exploded
     # once, not five times (round-6 measured plan; size-gated round 7)
-    dt = maybe_checkpoint(
+    dt = share(
         toks.groupBy("doc_id", "lang", "tok").agg(F.count(F.lit(1)).alias("occ"))
     )
     raw = dt.groupBy("tok").agg(F.sum("occ").alias("cr"))
@@ -6071,7 +6069,7 @@ def q124_cooccurrence_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the deduped (user, day, type) frame is BOTH sides of the self-join;
     # checkpoint so the scan + distinct shuffle runs once, not twice
     # (size-gated round 7)
-    dt = maybe_checkpoint(
+    dt = share(
         ev.select("user_id", F.to_date("ts").alias("day"), "event_type").distinct()
     )
     left = dt.withColumnRenamed("event_type", "type_a")
@@ -8659,9 +8657,7 @@ def q162_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # boundary polynomial above is the query's dominant compute — without
     # a checkpoint the whole chunking pipeline ran twice (round-6 measured
     # plan: two full Generate subtrees; size-gated round 7)
-    f = maybe_checkpoint(
-        ch.select("source", "doc_id", F.md5("chunk").alias("h"))
-    )
+    f = share(ch.select("source", "doc_id", F.md5("chunk").alias("h")))
     g = f.groupBy("h").agg(F.countDistinct("doc_id").alias("nd"))
     return (
         f.join(g, "h")
@@ -8886,7 +8882,7 @@ def q165_dup_span_strike(spark: SparkSession, sf_dir: str) -> DataFrame:
     # w feeds the per-hash aggregate and the strike join. Checkpoint both:
     # without it the tokenize ran ~4x and the O(tokens) window-md5 pass —
     # the dominant compute — ran twice (round-6 measured plan)
-    tt = maybe_checkpoint(
+    tt = share(
         docs.select(
             "doc_id",
             F.filter(
@@ -8896,9 +8892,9 @@ def q165_dup_span_strike(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("toks") > 0)
         .withColumn("n", F.size("toks").cast("long"))
     )
-    # gate_df=docs: when tt IS checkpointed its LogicalRDD reports no input
-    # files, so w must size its own decision on the raw corpus scan
-    w = maybe_checkpoint(
+    # source=docs: when tt IS checkpointed its LogicalRDD reports no input
+    # files, so w sizes its decision on the raw corpus scan like tt does
+    w = share(
         tt.filter(F.col("n") >= W)
         .select(
             "doc_id",
@@ -8910,7 +8906,7 @@ def q165_dup_span_strike(spark: SparkSession, sf_dir: str) -> DataFrame:
             "p",
             F.md5(F.concat_ws(" ", F.expr(f"slice(toks, int(p), {W})"))).alias("h"),
         ),
-        gate_df=docs,
+        source=docs,
     )
     key = F.col("doc_id") * F.lit(1_000_000_000) + F.col("p")
     g = w.groupBy("h").agg(
@@ -10046,7 +10042,7 @@ def q180_contamination_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.conv(F.substring(F.md5(F.col("doc").cast("string")), 1, 4), 16, 10)
         .cast("long") % 50 == 0
     )
-    t = maybe_checkpoint(sh.withColumn("bench", bench))
+    t = share(sh.withColumn("bench", bench))
     bs = t.filter("bench").select("shingle").distinct()
     ev = t.filter(~F.col("bench")).select("doc", "shingle")
     marked = ev.join(bs.withColumn("hitm", F.lit(1)), "shingle", "left")
@@ -10296,7 +10292,7 @@ def q183_heaps_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint the token arrays so the regex-normalize + split runs
     # once over the corpus instead of three times (round-6 measured plan;
     # size-gated round 7)
-    d = maybe_checkpoint(
+    d = share(
         docs.filter(F.length(normalize_text("text")) > 0).select(
             "doc_id", bkt.alias("bkt"), toks.alias("toks")
         )
@@ -12247,7 +12243,7 @@ def q209_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join) feeds star-CC AND the pair count — without the checkpoint each
     # consumer re-runs the full upstream pipeline (prune-divergent copies,
     # no AQE reuse). Each materialization is at most O(docs)/O(pairs) rows.
-    t = maybe_checkpoint(
+    t = share(
         docs.select(
             "doc_id",
             F.md5(normalize_text("text")).alias("fp"),
@@ -12256,11 +12252,12 @@ def q209_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("fp")
     tk = t.withColumn("keeper", F.min("doc_id").over(w))
-    # gate_df=docs: the prefix operator checkpoints its shingle arrays
-    # internally, so the pairs frame reports no input files of its own
-    pairs = maybe_checkpoint(
+    # source=docs: the prefix operator checkpoints its shingle arrays
+    # internally, so the pairs frame reports no input files of its own and
+    # would always be checkpointed
+    pairs = share(
         dedup.ngram_jaccard_pairs_prefix(docs, "text", "doc_id", n=3, threshold=0.5),
-        gate_df=docs,
+        source=docs,
     )
     labels = dedup.connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("lab").alias("cluster_id")

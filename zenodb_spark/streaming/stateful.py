@@ -160,55 +160,3 @@ def stream_zscore_alerts(
         fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
 
-
-def stream_value_totals_tws(stream_df: DataFrame, key_col: str, value_col: str) -> DataFrame:
-    """Running per-key totals on the transformWithStateInPandas API —
-    Spark 4's arbitrary-state surface (typed ValueState/ListState/
-    MapState + timers, RocksDB-backed) that supersedes
-    applyInPandasWithState for new pipelines. Functionally the twin of
-    ``stream_key_counts``: emits the running total on every batch a key
-    appears in; totals only grow, so max-over-emissions == the batch
-    aggregate (the oracle-gate trick).
-
-    The processor class is defined INSIDE this factory so cloudpickle
-    serializes it by value — executor workers do not have the repo on
-    sys.path, and a module-level class would pickle by reference and
-    fail to import there. State per key is one long.
-
-    RUNTIME REQUIREMENTS: the RocksDB state store provider
-    (spark.sql.streaming.stateStore.providerClass) AND the pure-Python
-    ``protobuf`` package — Spark's transformWithState driver worker
-    speaks protobuf to the state server and dies with
-    "cannot import name 'descriptor' from 'google.protobuf'" without
-    it. This container lacks protobuf, so the oracle-gated streaming
-    suite stays on applyInPandasWithState (q108/q113); the test for
-    this operator importorskips on google.protobuf.descriptor."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("total", "total LONG")
-
-        def handleInputRows(self, key, rows, timerValues):
-            total = self._state.get()[0] if self._state.exists() else 0
-            for pdf in rows:
-                total += int(pdf["v"].sum())
-            self._state.update((total,))
-            yield pd.DataFrame({"key": [key[0]], "total": [total]})
-
-        def close(self) -> None:
-            pass
-
-    prepped = stream_df.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("long").alias("v"),
-    )
-    return prepped.groupBy("key").transformWithStateInPandas(
-        statefulProcessor=_Totals(),
-        outputStructType="key string, total long",
-        outputMode="Update",
-        timeMode="None",
-    )
