@@ -298,3 +298,43 @@ class TestShare:
         assert util.share(derived, source=src) is derived
         monkeypatch.setattr(util, "CHECKPOINT_MIN_BYTES", 1)
         assert self._checkpointed(derived, util.share(derived, source=src))
+
+
+class TestSpread:
+    """spread() repartitions a frame with fewer scan files than the cluster
+    has cores; a failed file probe counts as under-partitioned."""
+
+    @staticmethod
+    def _scan(spark, tmp_path, n_files):
+        p = str(tmp_path / "src.parquet")
+        spark.range(0, 100 * n_files, numPartitions=n_files).write.parquet(p)
+        return spark.read.parquet(p)
+
+    @staticmethod
+    def _repartitioned_to(out) -> int | None:
+        plan = out._jdf.queryExecution().logical()
+        if plan.nodeName() == "Repartition" and plan.shuffle():
+            return plan.numPartitions()
+        return None
+
+    def test_input_files_error_repartitions(self, spark, tmp_path, monkeypatch):
+        from zenodb_spark.operators.util import spread
+
+        n = spark.sparkContext.defaultParallelism
+        df = self._scan(spark, tmp_path, n)
+
+        def failing_probe(self):
+            raise RuntimeError("inputFiles unavailable")
+
+        monkeypatch.setattr(type(df), "inputFiles", failing_probe)
+        out = spread(df)
+        assert self._repartitioned_to(out) == n
+        assert out.count() == 100 * n
+
+    def test_enough_scan_files_pass_through(self, spark, tmp_path):
+        from zenodb_spark.operators.util import spread
+
+        n = spark.sparkContext.defaultParallelism
+        df = self._scan(spark, tmp_path, n)
+        assert len(df.inputFiles()) >= n
+        assert spread(df) is df

@@ -54,6 +54,14 @@ def _rows(cols, data):
     return sorted(out, key=repr)
 
 
+def test_inventory():
+    """All 256 queries are registered, each with an oracle. A domain module
+    the package forgets to import, or a query name registered twice, would
+    otherwise only shrink the parametrized parity test below."""
+    assert len(Q.QUERIES) == 256
+    assert set(Q.ORACLE) == set(Q.QUERIES)
+
+
 @pytest.fixture(scope="module")
 def duck():
     return _duck(SF_ORACLE)

@@ -10,7 +10,7 @@ codegen/JIT cost. Jobs are labeled so a live UI run is readable.
 
 Usage:
   python tools/opt_probe.py q64_bm25_topk q187_rrf_hybrid --tag before
-  python tools/opt_probe.py all --tag before --no-time       # plans only
+  python tools/opt_probe.py all --tag before --no-time       # plans only, sorted by name
   python tools/opt_probe.py q165_dup_span_strike --no-time --tag after --plans-dir plans/r08
   python tools/opt_probe.py q64_bm25_topk --passes 5 --no-plan
 """
@@ -51,7 +51,7 @@ def main() -> None:
     from zenodb_spark import queries as Q
     from zenodb_spark.session import get_spark
 
-    names = list(Q.QUERIES) if args.names == ["all"] else args.names
+    names = sorted(Q.QUERIES) if args.names == ["all"] else args.names
     spark = get_spark("opt_probe")
     sc = spark.sparkContext
     plans_dir = Path(args.plans_dir)

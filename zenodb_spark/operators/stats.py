@@ -4,7 +4,7 @@ exact two-sample Kolmogorov–Smirnov distance per group, and Pearson
 chi-square contingency contributions. Both are engine-exact: every
 comparison happens on integer cross-products, with a single trailing
 IEEE division (KS) or per-cell micro-quantization before integer sums
-(chi-square, the ln() policy from queries.py's determinism rules)."""
+(chi-square, the ln() policy of the queries package's determinism rules)."""
 
 from __future__ import annotations
 
@@ -141,7 +141,7 @@ def anova_oneway(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     Returns ONE row (n_groups, n, ssb, ssw, f_stat). Exactness: per-group
     sums/counts and the global Σx² are exact BIGINTs; each group's
     between-term s_g²/n_g is one fixed IEEE expression micro-quantized
-    per DISTINCT group before the integer sum (queries.py's ln() policy),
+    per DISTINCT group before the integer sum (the queries ln() policy),
     so SSB/SSW are exact integer micro-units with a fixed trailing IEEE
     F ratio. Overflow: needs Σx²·10⁶ < 2⁶³ — fine to ~9e12 of summed
     squares (e.g. 9e6 rows of values ≤ 1000).

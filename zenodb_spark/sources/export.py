@@ -9,7 +9,7 @@ plan of the moment.
 
 ``export_training_shards`` pins all three: shard = md5(id) % n_shards
 (engine-independent — the same rule the deterministic samplers in
-queries.py use), one directory per shard via ``partitionBy``, rows sorted
+queries/ use), one directory per shard via ``partitionBy``, rows sorted
 within each shard by (md5(id), id). ``shard_manifest`` recomputes per-shard
 row counts and an order-insensitive content fingerprint from the written
 files, so a consumer can verify an export without trusting the writer.
