@@ -12,6 +12,7 @@ from zenodb_spark.engine import DB
 from zenodb_spark.functions.dims import DIM_FUNCTIONS, register_dim_function, register_lookup
 from zenodb_spark.sources.maintenance import check, file_info, filter_and_merge
 from zenodb_spark.sqlparser.parser import parse, register_alias
+from zenodb_spark.streaming.ingest import ingest_stream_batch
 
 EPOCH = dt.datetime(2015, 1, 1, tzinfo=dt.timezone.utc)
 E = EPOCH.timestamp()
@@ -84,6 +85,41 @@ def test_maintenance_info_check_merge(db, spark):
     rows = {r["ip"]: r["requests"] for r in out.collect()}
     assert rows == {"1.1.1.1": 10.0, "2.2.2.2": 3.0}
     assert len(db2.tables["reqs"]._parts) == 1
+
+
+@pytest.mark.parametrize("fold", ["filter_and_merge", "compact"])
+def test_fold_clears_stream_parts_on_disk(spark, tmp_path, fold):
+    """A compacted insert plus one streamed micro-batch, folded by
+    FilterAndMerge or by compact(), reads the same total after a reopen:
+    both go through Table.fold, which removes the folded stream_part=
+    directories and marks their batches as folded."""
+    wd = str(tmp_path / "store")
+    schema = {"sums": {"sql": "SELECT v FROM inbound GROUP BY k, period('10s')"}}
+    sql = "SELECT v FROM sums GROUP BY k, period('100s')"
+
+    def total(d) -> float:
+        return sum(r["v"] for r in d.query(sql).collect())
+
+    db1 = DB(spark, workdir=wd, now=E + 100)
+    db1.apply_schema(schema)
+    table = db1.tables["sums"]
+    db1.insert("inbound", spark.createDataFrame([Row(ts=ts(1), k="a", v=3.0)]))
+    table.compact()
+    batch = spark.createDataFrame([Row(ts=ts(2), k="a", v=4.0)])
+    ingest_stream_batch(db1, table, "sums", batch, batch_id=0)
+    if fold == "compact":
+        table.compact()
+    else:
+        filter_and_merge(table)
+    assert total(db1) == 7.0
+
+    db2 = DB(spark, workdir=wd, now=E + 100)
+    db2.apply_schema(schema)
+    assert total(db2) == 7.0
+    assert len(db2.tables["sums"]._parts) == 1
+
+    ingest_stream_batch(db1, table, "sums", batch, batch_id=0)  # late replay
+    assert total(db1) == 7.0
 
 
 def test_parser_force_fresh_comment():

@@ -24,26 +24,26 @@ class TestCcDriverByteGate:
         return sorted((r["node"], r["lab"]) for r in df.collect())
 
     def test_fat_string_ids_choose_distributed(self, spark, monkeypatch):
+        from zenodb_spark.operators import dedup
         from zenodb_spark.operators.dedup import connected_components
 
         fat = "x" * 2000
         e = spark.createDataFrame(
             [Row(doc_a=f"{fat}{i}", doc_b=f"{fat}{i + 1}") for i in range(20)]
         )
-        monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_MAX_BYTES", str(8 * 1024))
+        monkeypatch.setattr(dedup, "CC_DRIVER_MAX_BYTES", 8 * 1024)
         st = {}
         dist = connected_components(e, stats=st)
         assert st["rounds"] >= 1, st  # byte gate forced the distributed path
-        monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_MAX_BYTES", str(64 * 1024 * 1024))
+        monkeypatch.setattr(dedup, "CC_DRIVER_MAX_BYTES", 64 * 1024 * 1024)
         st2 = {}
         fast = connected_components(e, stats=st2)
         assert st2["rounds"] == 0, st2
         assert self._labels(fast) == self._labels(dist)
 
-    def test_long_ids_unchanged(self, spark, monkeypatch):
+    def test_long_ids_unchanged(self, spark):
         from zenodb_spark.operators.dedup import connected_components
 
-        monkeypatch.delenv("SPARK_GRAFT_CC_DRIVER_MAX_BYTES", raising=False)
         rng = random.Random(3)
         e = spark.createDataFrame(
             [Row(doc_a=rng.randrange(40), doc_b=rng.randrange(40)) for _ in range(30)]

@@ -398,9 +398,9 @@ def test_dedup_apply_null_text_not_dropped(spark):
     assert kept == {1, 3}
 
 
-def test_query_many_coalesced_scan(db, spark):
-    """query_many shares one persisted state scan across concurrent
-    queries; results match running the same queries one by one."""
+def test_query_many_matches_single_queries(db):
+    """query_many plans each statement through query: results equal the
+    same statements run one by one, and no plan reads a persisted scan."""
     sqls = [
         "SELECT total FROM metrics GROUP BY host, period('100s')",
         "SELECT total FROM metrics WHERE host = 'h1' GROUP BY host, period('100s')",
@@ -408,16 +408,44 @@ def test_query_many_coalesced_scan(db, spark):
     ]
     singles = [sorted(map(tuple, db.query(s).collect())) for s in sqls]
     many = db.query_many(sqls)
-    # the shared scan is persisted while plans are alive
-    assert len(db._coalesced_scans) == 1
-    plan = many[0]._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan
-    got = [sorted(map(tuple, df.collect())) for df in many]
-    assert got == singles
-    db.release_scan_cache()
-    assert db._coalesced_scans == []
-    # subsequent single queries are unaffected by the cleared cache
-    assert sorted(map(tuple, db.query(sqls[0]).collect())) == singles[0]
+    assert [sorted(map(tuple, df.collect())) for df in many] == singles
+    for df in many:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" not in plan
+
+
+def test_query_many_returns_plan_cache_entry(db):
+    """A repeated cacheable statement through query_many is a plan-cache
+    hit, the same prepared frame query() returns."""
+    sql = "SELECT total FROM metrics GROUP BY host, period('1000s')"
+    [first] = db.query_many([sql])
+    [again] = db.query_many([sql])
+    assert again is first
+    assert db.query(sql) is first
+
+
+def test_query_many_force_fresh_drains_streams(db):
+    """`-- force_fresh` through query_many drains the registered streams
+    before planning, as it does through query()."""
+
+    class Stream:
+        drains = 0
+
+        def drain(self):
+            self.drains += 1
+
+    stream = Stream()
+    db.streams.append(stream)
+    try:
+        db.query_many(
+            [
+                "SELECT -- force_fresh\n total FROM metrics GROUP BY host",
+                "SELECT total FROM metrics GROUP BY host",
+            ]
+        )
+    finally:
+        db.streams.remove(stream)
+    assert stream.drains == 1
 
 
 def test_table_stats_high_water(db):

@@ -216,6 +216,16 @@ class TestStarConnectedComponents:
     def _labels(self, df):
         return sorted((r["node"], r["lab"]) for r in df.collect())
 
+    @staticmethod
+    def _distributed(monkeypatch, edges, **kw):
+        """connected_components with the small-graph driver fast lane off,
+        so the distributed star rounds run."""
+        from zenodb_spark.operators import dedup
+
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
+            return dedup.connected_components(edges, **kw)
+
     def test_matches_minlabel_on_random_graphs(self, spark):
         from zenodb_spark.operators.dedup import connected_components
 
@@ -231,7 +241,7 @@ class TestStarConnectedComponents:
             minl = connected_components(e, algorithm="minlabel")
             assert self._labels(star) == self._labels(minl), f"trial {trial}"
 
-    def test_chain_adversary_converges_in_log_rounds(self, spark):
+    def test_chain_adversary_converges_in_log_rounds(self, spark, monkeypatch):
         from zenodb_spark.operators.dedup import connected_components
 
         # a 200-node chain: diameter 199. min-label needs ~diameter rounds
@@ -240,11 +250,11 @@ class TestStarConnectedComponents:
             [Row(doc_a=i, doc_b=i + 1) for i in range(199)]
         )
         st = {}
-        # driver_max_edges=0 forces the distributed star rounds: this test
-        # is about the distributed algorithm's convergence bound, which the
-        # small-graph driver fast lane would otherwise bypass (rounds=0)
-        out = connected_components(
-            chain, algorithm="star", max_iter=30, stats=st, driver_max_edges=0
+        # the distributed star rounds: this test is about the distributed
+        # algorithm's convergence bound, which the small-graph driver fast
+        # lane would otherwise bypass (rounds=0)
+        out = self._distributed(
+            monkeypatch, chain, algorithm="star", max_iter=30, stats=st
         )
         labs = self._labels(out)
         assert labs == [(i, 0) for i in range(200)]
@@ -258,10 +268,10 @@ class TestStarConnectedComponents:
         )
         connected_components(short, algorithm="minlabel", stats=st2)
         st3 = {}
-        connected_components(short, algorithm="star", stats=st3, driver_max_edges=0)
+        self._distributed(monkeypatch, short, algorithm="star", stats=st3)
         assert st3["rounds"] < st2["rounds"], (st3, st2)
 
-    def test_driver_fast_lane_matches_distributed(self, spark):
+    def test_driver_fast_lane_matches_distributed(self, spark, monkeypatch):
         """The small-graph driver union-find must produce labels identical
         to the forced-distributed star rounds, on long AND string ids."""
         from zenodb_spark.operators.dedup import connected_components
@@ -276,7 +286,7 @@ class TestStarConnectedComponents:
             e = spark.createDataFrame(edges).filter("doc_a != doc_b")
             st_fast, st_dist = {}, {}
             fast = connected_components(e, stats=st_fast)
-            dist = connected_components(e, stats=st_dist, driver_max_edges=0)
+            dist = self._distributed(monkeypatch, e, stats=st_dist)
             assert st_fast["rounds"] == 0, st_fast
             assert st_dist["rounds"] >= 1, st_dist
             assert self._labels(fast) == self._labels(dist), f"trial {trial}"
@@ -290,7 +300,7 @@ class TestStarConnectedComponents:
             ]
         )
         fast = connected_components(es)
-        dist = connected_components(es, driver_max_edges=0)
+        dist = self._distributed(monkeypatch, es)
         assert self._labels(fast) == self._labels(dist)
 
     def test_disconnected_components_and_dupes(self, spark):

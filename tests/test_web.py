@@ -254,6 +254,44 @@ def test_plain_query_size_guard_413(dash):
         handler_cls.max_response_bytes = old
 
 
+def test_plain_query_memory_guard(dash, monkeypatch):
+    """A JVM out-of-memory failure while /query collects comes back as the
+    EngineOutOfMemory text, as on the dashboard and RPC surfaces."""
+    from zenodb_spark import web
+
+    srv, base, db = dash
+
+    def oom(*args, **kwargs):
+        raise RuntimeError("An error occurred: java.lang.OutOfMemoryError: Java heap space")
+
+    monkeypatch.setattr(web, "collect_guarded", oom)
+    status, raw = _get(f"{base}/query?sql=" + urllib.parse.quote(SQL1))
+    assert status == 400
+    assert "aborted under memory pressure" in json.loads(raw)["error"]
+
+
+def test_runner_batches_stay_bounded():
+    """QueryRunner.batches keeps only the most recent BATCH_HISTORY batch
+    sizes, however many batches run."""
+    from types import SimpleNamespace
+
+    from zenodb_spark import web
+
+    class NoPlans:
+        def query_many(self, sqls):
+            return []
+
+    runner = web.QueryRunner(NoPlans(), web.ResultCache())
+    try:
+        q = SimpleNamespace(sql="SELECT n FROM t")
+        sizes = [i % 5 + 1 for i in range(web.BATCH_HISTORY + 50)]
+        for k in sizes:
+            runner._run_batch([q] * k)
+        assert runner.batches == sizes[-web.BATCH_HISTORY:]
+    finally:
+        runner.stop()
+
+
 def test_permalink_survives_restart(dash, spark):
     srv, base, db = dash
     sql = SQL1 + " HAVING n < 99"

@@ -26,7 +26,7 @@ Architecture (see SURVEY.md §7):
                    pipelines.
 - ``engine``     — DB facade: schema registry, tables as materialized
                    aggregates with mergeable state columns, insert + query
-                   + explain + coalesced query_many + table_stats.
+                   + explain + batched query_many + table_stats.
 - ``sources``    — maintenance (zenotool merge/filter/check), deterministic
                    sharded export, bucketed co-located storage (bucketBy),
                    Z-order multi-dimensional clustering.

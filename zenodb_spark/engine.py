@@ -117,6 +117,17 @@ def memory_guard(context: str = "query"):
         raise
 
 
+def json_value(v):
+    """One result cell as a JSON value — the row encoder of the HTTP and
+    RPC query surfaces: timestamps become ISO-8601 text (naive ones read
+    as UTC), everything else passes through."""
+    if isinstance(v, dt.datetime):
+        if v.tzinfo is None:
+            v = v.replace(tzinfo=dt.timezone.utc)
+        return v.isoformat()
+    return v
+
+
 def resolve_time(s: str, now: float) -> float:
     """ASOF/UNTIL values: RFC3339 timestamps or signed durations relative to
     now (reference sql/sql.go:1220–1227)."""
@@ -426,20 +437,6 @@ class Table:
         cutoff: int | None = None
         if self.tdef.retention is not None:
             cutoff = int((self.db.now() - self.tdef.retention) // self.resolution * self.resolution)
-        cached = self.db._scan_cache.get(self.tdef.name)
-        if cached is not None:
-            # coalesced-scan path (DB.query_many): every concurrent query
-            # reads the one persisted merged state; time filters apply to
-            # the bucket column on top of the shared cache (directory
-            # pruning is traded for scanning once instead of N times —
-            # the reference's iteration-coalescing trade, table.go:398)
-            out = cached
-            for lo in (cutoff, asof):
-                if lo is not None:
-                    out = out.filter(F.col(BUCKET_COL) >= F.lit(lo))
-            if until is not None:
-                out = out.filter(F.col(BUCKET_COL) < F.lit(until))
-            return out
         parts = []
         for p in self._parts:
             if DAY_COL in p.columns:
@@ -502,17 +499,34 @@ class Table:
             return
         if len(self._parts) == 1 and self._materialized:
             return
+        self.fold()
+
+    def fold(
+        self,
+        where: DimExpr | None = None,
+        asof: int | None = None,
+        until: int | None = None,
+    ) -> None:
+        """Merge every stored part into one materialized part, first
+        dropping the rows outside the dim predicate ``where`` and the
+        bucket range [asof, until). ``compact()`` folds with no filter; the
+        offline FilterAndMerge (sources/maintenance.py) passes its filters.
+        A lone unfiltered part is materialized as it stands."""
         old_parts = list(self._parts)
-        if len(self._parts) > 1:
+        filtered = where is not None or asof is not None or until is not None
+        if len(old_parts) != 1 or filtered:
+            df = self.state_df(asof, until)
+            if where is not None:
+                df = df.filter(dim_truth(compile_dim(where)))
             merged = merge_states(
-                self.state_df(),
+                df,
                 self.registry,
                 [(d, F.col(d)) for d in self.dims or []],
                 self.resolution,
                 self.resolution,
             )
         else:
-            merged = self._parts[0]
+            merged = old_parts[0]
         if self.db.workdir:
             # consolidated store lives under main/ — sibling stream_part=N
             # dirs keep their own partition discovery separate
@@ -575,9 +589,6 @@ class DB:
         # crosstab pivots buffer the distinct column values on the driver
         # (same as Spark's own pivot()); fail loudly past this cap.
         self.crosstab_max_values = crosstab_max_values
-        # DB.query_many coalesced-scan state (reference table.go:398-521)
-        self._scan_cache: dict[str, DataFrame] = {}
-        self._coalesced_scans: list[DataFrame] = []
         # Prepared-PLAN cache (round 6, guide §1/§2: lowering a dialect
         # statement costs ~1,500 Py4J round-trips — measured 0.9-1.1 s for
         # the percentile re-read query vs 0.4 s of execution). Maps SQL
@@ -826,47 +837,12 @@ class DB:
         return out
 
     def query_many(self, sqls: list[str]) -> list[DataFrame]:
-        """Coalesced execution of concurrent queries (reference
-        table.go:398–521: iterations arriving within a window share one
-        filestore scan). Spark analog: persist each touched table's merged
-        state ONCE (MEMORY_AND_DISK), plan every query against the shared
-        cache, and unpersist when all results have been consumed (here:
-        after materialization — callers that stream should call
-        ``DB.release_scan_cache()`` instead). The scan + state-merge cost is
-        paid once per table instead of once per query."""
-        from pyspark import StorageLevel
-
-        parsed = [parse(s) for s in sqls]
-
-        def tables_of(q) -> set[str]:
-            if isinstance(q, SetOp):
-                return tables_of(q.left) | tables_of(q.right)
-            if q.from_subquery is not None:
-                return tables_of(q.from_subquery)
-            return {q.from_table} if q.from_table in self.tables else set()
-
-        touched = set().union(*[tables_of(q) for q in parsed]) if parsed else set()
-        for name in sorted(touched):
-            t = self.tables[name]
-            if t.registry is not None and t._parts:
-                merged = t.state_df().persist(StorageLevel.MEMORY_AND_DISK)
-                self._scan_cache[name] = merged
-                self._coalesced_scans.append(merged)
-        try:
-            return [self.plan(q) for q in parsed]
-        finally:
-            # the returned plans hold the persisted frames by reference;
-            # clearing the registry keeps LATER single queries from pinning
-            # a stale cache. The frames stay persisted until
-            # release_scan_cache().
-            self._scan_cache.clear()
-
-    def release_scan_cache(self) -> None:
-        """Unpersist the shared scans created by ``query_many`` (call after
-        consuming the results)."""
-        for df in self._coalesced_scans:
-            df.unpersist(False)
-        self._coalesced_scans.clear()
+        """Plan a coalesced batch of statements (the web runner's window),
+        each through ``query``, so every statement gets the plan cache and
+        the ``-- force_fresh`` drain. The reference shares one filestore
+        scan across such a batch (table.go:398–521); here each plan scans
+        its own day partitions, the re-scan SURVEY.md §4 allows."""
+        return [self.query(s) for s in sqls]
 
     _PLAN_CACHE_MAX = 64
 
@@ -1138,10 +1114,9 @@ class DB:
         if q.having is not None:
             having_expr = collect_agg_leaves(q.having, field_lookup, leaves)
 
-        # map query leaves onto stored states; build gates + a merged registry
+        # map query leaves onto stored states; gated leaves get their own
+        # state columns in the query registry
         qreg = StateRegistry()
-        gates: dict[str, object] = {}
-        rename: dict[str, str] = {}  # stored col -> merged col
         points_key = agg_key(MAgg("SUM", MFieldRef("_point"), None))
         for leaf in leaves:
             k = agg_key(leaf)
@@ -1178,12 +1153,7 @@ class DB:
                     state = state.withColumn(qs.col, F.when(dim_truth(gate_cond), F.col(s.col)))
 
         merged = merge_states(
-            state,
-            qreg,
-            [(n, c) for n, c in out_dims],
-            table.resolution,
-            res_out if not q.stride else max(res_out, q.stride),
-            anchor=bucket_anchor,
+            state, qreg, out_dims, table.resolution, res_out, anchor=bucket_anchor
         )
 
         def q_lookup(n: str) -> MExpr:
@@ -1192,8 +1162,8 @@ class DB:
         # crosstab: re-plan with the crosstab expr as an extra dim, then pivot
         if q.crosstab:
             return self._crosstab(
-                q, table, state, qreg, out_dims, res_out, rewritten, having_expr,
-                q_lookup, out_min_ts=out_min_ts, anchor=bucket_anchor,
+                q, table, state, merged, qreg, out_dims, res_out, rewritten,
+                having_expr, q_lookup, out_min_ts=out_min_ts, anchor=bucket_anchor,
             )
 
         flat = self._finalize_flat(
@@ -1295,9 +1265,11 @@ class DB:
         return flat.select(*cols, F.col(BUCKET_COL)).drop(BUCKET_COL)
 
     def _crosstab(
-        self, q, table, state, qreg, out_dims, res_out, fields, having_expr,
-        q_lookup, out_min_ts=None, anchor=0,
+        self, q, table, state, merged, qreg, out_dims, res_out, fields,
+        having_expr, q_lookup, out_min_ts=None, anchor=0,
     ):
+        """CROSSTAB pivot of ``state``; totals and HAVING come from
+        ``merged``, the caller's merge of ``state`` on the plain dims."""
         ct_resolve = lambda n: F.col(n) if n in state.columns else F.lit(None)
         ct_col = F.concat_ws(
             "_", *[compile_dim(e, ct_resolve).cast("string") for e in q.crosstab]
@@ -1338,12 +1310,9 @@ class DB:
                 if v in pivoted.columns:
                     pivoted = pivoted.withColumnRenamed(v, f"{v}_{fields[0].name}")
         # totals + HAVING computed on the un-pivoted (dims, bucket) grain
-        merged_tot = merge_states(
-            state, qreg, out_dims, table.resolution, res_out, anchor=anchor
-        )
         tot_fields = [SelectField(f"total_{f.name}", f.expr) for f in fields]
         flat_tot = self._finalize_flat(
-            merged_tot, qreg, tot_fields, out_dims, q_lookup, res_out, having=having_expr
+            merged, qreg, tot_fields, out_dims, q_lookup, res_out, having=having_expr
         )
         if out_min_ts is not None:
             flat_tot = flat_tot.filter(

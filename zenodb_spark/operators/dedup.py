@@ -30,8 +30,6 @@ the hot path.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -1249,6 +1247,13 @@ def dedup_apply(
     )
 
 
+# Small-graph fast lane of connected_components (see _cc_star): collect the
+# deduped edge list to a driver-side union-find when it has at most this many
+# edges AND an estimated collected footprint of at most this many bytes.
+CC_DRIVER_MAX_EDGES = 1_000_000
+CC_DRIVER_MAX_BYTES = 64 * 1024 * 1024
+
+
 def connected_components(
     edges: DataFrame,
     a_col: str = "doc_a",
@@ -1256,7 +1261,6 @@ def connected_components(
     max_iter: int = 25,
     algorithm: str = "star",
     stats: dict | None = None,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Connected components over a near-dup pair graph. Returns one row per
     node: (node, lab) where lab is the component's min node id.
@@ -1271,13 +1275,11 @@ def connected_components(
     the property-test cross-check. ``stats``, if given, receives
     ``{"rounds": n}`` for round-count assertions.
 
-    ``driver_max_edges`` gates the star path's small-graph fast lane: if
-    the deduped edge list has at most this many edges, a driver-side
-    union-find replaces the distributed rounds (see ``_cc_star``). ``None``
-    reads ``SPARK_GRAFT_CC_DRIVER_MAX_EDGES`` (default 1,000,000); pass 0
-    to force the distributed rounds (the round-bound tests do)."""
+    The star path takes a driver-side union-find for small graphs (see
+    ``_cc_star``, gated by ``CC_DRIVER_MAX_EDGES`` and
+    ``CC_DRIVER_MAX_BYTES``)."""
     if algorithm == "star":
-        return _cc_star(edges, a_col, b_col, max_iter, stats, driver_max_edges)
+        return _cc_star(edges, a_col, b_col, max_iter, stats)
     if algorithm == "minlabel":
         return _cc_minlabel(edges, a_col, b_col, max_iter, stats)
     raise ValueError(f"unknown connected-components algorithm {algorithm!r}")
@@ -1289,7 +1291,6 @@ def _cc_star(
     b_col: str,
     max_iter: int,
     stats: dict | None = None,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Large-star/small-star alternation (Kiveris et al. SoCC'14, Alg. 2).
 
@@ -1317,7 +1318,7 @@ def _cc_star(
     collect, plus the exceptAll confirmation at the fixpoint) — ~3–6 s of
     pure scheduling at bench scale over an edge list of a few hundred
     rows. When the deduped edge count (already computed for the signature)
-    is at most ``driver_max_edges``, the edges are collected and labeled
+    is at most ``CC_DRIVER_MAX_EDGES``, the edges are collected and labeled
     by a driver-side union-find instead. The output is IDENTICAL by
     construction: union-by-min-root keeps every root the minimum id of
     its component — the same fixpoint the star rounds converge to — and
@@ -1326,10 +1327,10 @@ def _cc_star(
     the same order). The gate is data-adaptive, not scale-tuned: at
     100 TB the near-dup edge count exceeds any sane threshold and the
     distributed rounds run unchanged (the same adaptivity AQE applies to
-    broadcast joins). Thresholds: ``SPARK_GRAFT_CC_DRIVER_MAX_EDGES``
-    (default 1e6 edges — sized for long ids) AND an estimated-bytes gate
-    ``SPARK_GRAFT_CC_DRIVER_MAX_BYTES`` (default 64 MiB — catches fat
-    string ids the edge count alone would under-estimate; round 7)."""
+    broadcast joins). Thresholds: ``CC_DRIVER_MAX_EDGES`` (1e6 edges —
+    sized for long ids) AND an estimated-bytes gate ``CC_DRIVER_MAX_BYTES``
+    (64 MiB — catches fat string ids the edge count alone would
+    under-estimate; round 7)."""
     # eager checkpoint, measured choice (round 6): a lazy checkpoint whose
     # blocks materialize under the signature aggregate was 2× SLOWER here —
     # the per-round frame is consumed by several downstream jobs and the
@@ -1371,14 +1372,7 @@ def _cc_star(
             + F.lit(60)
         ).alias("bytes"),
     )
-    if driver_max_edges is None:
-        driver_max_edges = int(
-            os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "1000000")
-        )
-    max_bytes = int(
-        os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_BYTES", str(64 * 1024 * 1024))
-    )
-    if prev_sig[0] <= driver_max_edges and (r["bytes"] or 0) <= max_bytes:
+    if prev_sig[0] <= CC_DRIVER_MAX_EDGES and (r["bytes"] or 0) <= CC_DRIVER_MAX_BYTES:
         if stats is not None:
             stats["rounds"] = 0  # driver fast lane: no distributed rounds
         return _cc_union_find_driver(e)

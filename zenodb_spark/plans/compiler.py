@@ -687,7 +687,6 @@ def merge_states(
     out_dims: list[tuple[str, Column]],
     resolution_in: float,
     resolution_out: float,
-    gates: dict[str, Column] | None = None,
     anchor: float = 0.0,
 ) -> DataFrame:
     """Re-aggregate stored state rows to coarser buckets / different dims by
@@ -709,7 +708,7 @@ def merge_states(
         # distinct query keys can share one stored state column (e.g.
         # `_points` and the `_` presence magic both read the points
         # counter); merge it once — finalize reads it by column name
-        if spec.col in emitted and not (gates and spec.key in gates):
+        if spec.col in emitted:
             continue
         emitted.add(spec.col)
         if spec.col in keyed.columns:
@@ -730,8 +729,6 @@ def merge_states(
                     "hist": "map<bigint,bigint>",
                 }[spec.merge]
             )
-        if gates and spec.key in gates:
-            src = F.when(gates[spec.key], src)
         if spec.merge == "sum":
             aggs.append(F.sum(src).alias(spec.col))
         elif spec.merge == "min":

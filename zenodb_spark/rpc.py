@@ -39,7 +39,7 @@ import socketserver
 import struct
 import threading
 
-from zenodb_spark.engine import DB
+from zenodb_spark.engine import DB, json_value, memory_guard
 
 _LEN = struct.Struct(">I")
 MAX_FRAME = 64 * 1024 * 1024
@@ -71,14 +71,6 @@ def _recv_exact(sock: socket.socket, n: int) -> bytes | None:
             return None
         buf += chunk
     return buf
-
-
-def _json_value(v):
-    if isinstance(v, dt.datetime):
-        if v.tzinfo is None:
-            v = v.replace(tzinfo=dt.timezone.utc)
-        return v.isoformat()
-    return v
 
 
 # --------------------------------------------------------------------------
@@ -157,8 +149,6 @@ class _RPCHandler(socketserver.BaseRequestHandler):
     def _handle_query(self, sock, msg: dict) -> None:
         sql = msg.get("sql", "")
         try:
-            from zenodb_spark.engine import memory_guard
-
             with memory_guard(f"rpc query {sql[:80]!r}"):
                 df = self.db.query(sql)
                 cols = df.columns
@@ -166,7 +156,7 @@ class _RPCHandler(socketserver.BaseRequestHandler):
                 # toLocalIterator: rows stream to the client as partitions
                 # arrive; the driver never holds the whole result
                 for row in df.toLocalIterator():
-                    _send(sock, {"row": [_json_value(row[c]) for c in cols]})
+                    _send(sock, {"row": [json_value(row[c]) for c in cols]})
                 _send(sock, {"end_of_results": True})
         except Exception as e:
             _send(sock, {"error": str(e), "end_of_results": True})

@@ -16,12 +16,11 @@ from __future__ import annotations
 
 import sys
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zenodb_spark.engine import DB, Table
 from zenodb_spark.ir import DimExpr
-from zenodb_spark.plans.compiler import BUCKET_COL, compile_dim, dim_truth, merge_states
+from zenodb_spark.plans.compiler import BUCKET_COL
 
 
 def filter_and_merge(
@@ -31,25 +30,9 @@ def filter_and_merge(
     until_epoch: int | None = None,
 ) -> None:
     """Compact all parts into one, optionally dropping rows (by dim predicate
-    and/or bucket range) in the process."""
-    df = table.state_df()
-    if where is not None:
-        df = df.filter(dim_truth(compile_dim(where)))
-    if asof_epoch is not None:
-        df = df.filter(F.col(BUCKET_COL) >= F.lit(int(asof_epoch)))
-    if until_epoch is not None:
-        df = df.filter(F.col(BUCKET_COL) < F.lit(int(until_epoch)))
-    merged = merge_states(
-        df,
-        table.registry,
-        [(d, F.col(d)) for d in table.dims or []],
-        table.resolution,
-        table.resolution,
-    )
-    if table.db.workdir:
-        merged = table._write_store(merged, f"{table.db.workdir}/{table.tdef.name}/main")
-    table._parts = [merged]
-    table.db._invalidate_plans()
+    and/or bucket range) in the process — ``Table.fold``, the same fold
+    ``compact()`` runs."""
+    table.fold(where, asof_epoch, until_epoch)
 
 
 def file_info(table: Table) -> dict:

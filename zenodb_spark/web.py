@@ -4,7 +4,8 @@ Routes (reference web/handler.go:117–124):
 
 - ``POST /insert/{stream}`` — JSON point ingest (web/insert.go:27–72).
 - ``GET/POST /query?sql=…`` — plain columns/rows JSON (kept for embedded
-  callers), now guarded by ``max_response_bytes``.
+  callers), guarded by ``max_response_bytes`` and ``memory_guard`` like
+  the dashboard and RPC surfaces.
 - ``GET /run?<sql>`` — dashboard query, blocks until done (long timeout).
 - ``GET /async?<sql>`` — dashboard query; waits up to ``short_timeout``
   then returns ``202 Accepted`` with body ``/cached/{permalink}``
@@ -28,9 +29,11 @@ payloads also persist to disk so permalinks survive a restart (the
 reference's boltdb file, here one gzip file per permalink + a JSON index).
 
 Query coalescing (web/query.go:168–215): non-immediate queries queue into a
-coalescing window; queries sharing a FROM table execute together through
-``DB.query_many`` so the table's state-merge scan is persisted once and
-shared, then released. An immediate query flushes the window at once.
+coalescing window and the window's batch is planned through
+``DB.query_many``, which plans each statement through ``DB.query`` (plan
+cache, ``-- force_fresh``); each statement then scans its own day
+partitions instead of sharing one scan. An immediate query flushes the
+window at once.
 
 QueryResult shape (web/query.go:31–47): ``SQL, Permalink, TS,
 TSCardinality, Fields, FieldCardinalities, Dims, DimCardinalities, Rows:
@@ -61,7 +64,7 @@ from dataclasses import dataclass, field
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
 
-from zenodb_spark.engine import DB
+from zenodb_spark.engine import DB, json_value, memory_guard
 
 STATUS_PENDING = 0
 STATUS_SUCCESS = 1
@@ -72,6 +75,7 @@ DEFAULT_SHORT_TIMEOUT = 5.0
 DEFAULT_COALESCE_WINDOW = 5.0  # reference web/query.go:187
 DEFAULT_MAX_RESPONSE_BYTES = 32 * 1024 * 1024
 DEFAULT_CACHE_TTL = 2 * 3600.0
+BATCH_HISTORY = 1024  # QueryRunner.batches keeps the sizes of this many recent batches
 
 
 def _parse_ts(v) -> dt.datetime:
@@ -83,14 +87,6 @@ def _parse_ts(v) -> dt.datetime:
     if d.tzinfo is None:
         d = d.replace(tzinfo=dt.timezone.utc)
     return d
-
-
-def _json_value(v):
-    if isinstance(v, dt.datetime):
-        if v.tzinfo is None:
-            v = v.replace(tzinfo=dt.timezone.utc)
-        return v.isoformat()
-    return v
 
 
 # --------------------------------------------------------------------------
@@ -268,16 +264,13 @@ class ResultCache:
 @dataclass
 class _QueuedQuery:
     sql: str
-    from_table: str | None
     immediate: bool
     ce: CacheEntry
 
 
 class QueryRunner:
-    """Coalescing executor: queries sharing a FROM table that arrive within
-    the window run together through ``DB.query_many`` (one shared persisted
-    state-merge per table — reference web/query.go:168–215 backed by
-    table.go:398–521)."""
+    """Coalescing executor: queries that arrive within the window run as
+    one batch through ``DB.query_many`` (reference web/query.go:168–215)."""
 
     def __init__(
         self,
@@ -296,8 +289,8 @@ class QueryRunner:
             target=self._coalesce_loop, name="zenodb-web-coalesce", daemon=True
         )
         self._thread.start()
-        # observability for tests/metrics: how many query_many batches ran
-        # and how many queries each carried
+        # observability for tests/metrics: how many queries each recent
+        # query_many batch carried (the last BATCH_HISTORY batches)
         self.batches: list[int] = []
 
     def stop(self) -> None:
@@ -308,12 +301,11 @@ class QueryRunner:
         from zenodb_spark.sqlparser.parser import parse
 
         try:
-            q = parse(sql)
-            from_table = q.from_table if hasattr(q, "from_table") else None
+            parse(sql)
         except Exception as e:
             self.cache.fail(ce, f"unable to parse query: {e}")
             return
-        self._queue.put(_QueuedQuery(sql, from_table, immediate, ce))
+        self._queue.put(_QueuedQuery(sql, immediate, ce))
 
     # -- coalescing ---------------------------------------------------------
     def _coalesce_loop(self) -> None:
@@ -342,29 +334,24 @@ class QueryRunner:
 
     def _run_batch(self, batch: list[_QueuedQuery]) -> None:
         self.batches.append(len(batch))
+        del self.batches[:-BATCH_HISTORY]
         try:
             plans = self.db.query_many([q.sql for q in batch])
-        except Exception as e:
-            # a parse/plan failure in one query fails all entries it touched
-            # individually so the rest still run
-            plans = None
+        except Exception:
+            # a parse/plan failure in one query: plan each alone, so only
+            # the failing entries fail and the rest still run
             for q in batch:
                 try:
-                    [p] = self.db.query_many([q.sql])
-                except Exception as e2:
-                    self.cache.fail(q.ce, str(e2))
+                    [plan] = self.db.query_many([q.sql])
+                except Exception as e:
+                    self.cache.fail(q.ce, str(e))
                 else:
-                    self._finish(q, p)
-            self.db.release_scan_cache()
-            del e
-        if plans is not None:
-            for q, plan in zip(batch, plans):
-                self._finish(q, plan)
-            self.db.release_scan_cache()
+                    self._finish(q, plan)
+            return
+        for q, plan in zip(batch, plans):
+            self._finish(q, plan)
 
     def _finish(self, q: _QueuedQuery, plan) -> None:
-        from zenodb_spark.engine import memory_guard
-
         try:
             with memory_guard(f"query {q.sql[:80]!r}"):
                 result = build_query_result(
@@ -452,7 +439,7 @@ def build_query_result(
         key = {}
         for d in dims:
             v = vals[ci[d]]
-            key[d] = _json_value(v)
+            key[d] = json_value(v)
             dim_sets[d].add(v)
         fvals = []
         for f_ in fields:
@@ -587,10 +574,11 @@ class _Handler(BaseHTTPRequestHandler):
             self._reply(400, {"error": "missing sql"})
             return
         try:
-            df = self.db.query(sql)
-            cols = df.columns
-            raw = collect_guarded(df, self.max_response_bytes, cols)
-            rows = [[_json_value(v) for v in r] for r in raw]
+            with memory_guard(f"query {sql[:80]!r}"):
+                df = self.db.query(sql)
+                cols = df.columns
+                raw = collect_guarded(df, self.max_response_bytes, cols)
+            rows = [[json_value(v) for v in r] for r in raw]
         except ResponseTooLarge as e:
             self._reply(413, {"error": str(e)})
             return
