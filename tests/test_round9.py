@@ -831,10 +831,11 @@ class TestStreamNeardup:
 
 class TestPlanCache:
     """Round-6 prepared-plan cache (DB._plan_cache): lowering a dialect
-    statement is ~1,500 Py4J round-trips, so DB.query memoizes the lowered
-    DataFrame keyed on SQL text. These pin the contract: plans (never
-    results) are cached, every table-state mutation invalidates, and
-    time-/rand-dependent statements are excluded."""
+    statement costs hundreds of Py4J round-trips (459–764 for the four
+    fresh dashboard templates of perfbench), so DB.query memoizes the
+    lowered DataFrame keyed on SQL text. These pin the contract: plans
+    (never results) are cached, every table-state mutation invalidates,
+    and now-relative or rand-dependent statements are excluded."""
 
     def _db(self, spark):
         from pyspark.sql import functions as F
@@ -880,10 +881,48 @@ class TestPlanCache:
         db, _ = self._db(spark)
         db.query("SELECT sv FROM pc1 ASOF '-1000w' GROUP BY k, period('2h')")
         db.query(
-            "SELECT sv FROM pc1 ASOF '1970-01-01' UNTIL '2100-01-01' "
-            "GROUP BY k, period('2h')"
+            "SELECT sv FROM pc1 ASOF '-1000w' UNTIL '1h' GROUP BY k, period('2h')"
         )
-        assert not db._plan_cache, "ASOF/UNTIL statements must not be cached"
+        assert not db._plan_cache, "relative ASOF/UNTIL statements must not be cached"
+        db.query("SELECT sv FROM pc1 WHERE RAND() < 0.5 GROUP BY k, period('2h')")
+        assert not db._plan_cache, "RAND() statements must not be cached"
+
+    def test_absolute_asof_until_cached(self, spark):
+        db, _ = self._db(spark)
+        for sql in (
+            "SELECT sv FROM pc1 ASOF '1970-01-01' UNTIL '2100-01-01' "
+            "GROUP BY k, period('2h')",
+            "SELECT sv FROM pc1 ASOF '1970-01-01T02:00:00Z' "
+            "UNTIL '1970-01-01T06:00:00Z' GROUP BY k, period('2h')",
+        ):
+            r1 = sorted(tuple(r) for r in db.query(sql).collect())
+            assert sql in db._plan_cache, sql
+            assert db.query(sql) is db._plan_cache[sql]
+            fresh = sorted(tuple(r) for r in db.plan(parse(sql)).collect())
+            assert r1 == fresh and r1, sql
+
+    def test_rand_is_decided_on_the_statement_not_the_text(self, spark):
+        db, _ = self._db(spark)
+        sql = "SELECT sv FROM pc1 WHERE brand = 'x' GROUP BY k, period('2h')"
+        db.query(sql)
+        assert sql in db._plan_cache, "'brand' is not a RAND() call"
+
+    @pytest.mark.parametrize(
+        "sql",
+        [
+            "SELECT sv FROM pc1 WHERE k IN (SELECT sv FROM pc1 ASOF '-1000w' "
+            "GROUP BY k, period('2h')) GROUP BY k, period('2h')",
+            "SELECT sv FROM (SELECT sv FROM pc1 ASOF '-1000w' "
+            "GROUP BY k, period('2h')) GROUP BY _, period('4h')",
+            "SELECT sv FROM pc1 GROUP BY k, period('2h') UNION ALL "
+            "SELECT sv FROM pc1 ASOF '-1000w' UNTIL '1h' GROUP BY k, period('2h')",
+        ],
+        ids=["in_subquery", "from_subquery", "union_operand"],
+    )
+    def test_nested_relative_time_not_cached(self, spark, sql):
+        db, _ = self._db(spark)
+        db.query(sql).collect()
+        assert not db._plan_cache
 
     def test_retention_table_not_cached(self, spark):
         from pyspark.sql import functions as F

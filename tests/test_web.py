@@ -395,3 +395,149 @@ def test_static_token_auth_and_index(dash):
             assert r.status == 200
     finally:
         srv2.shutdown()
+
+
+# --------------------------------------------------------------------------
+# result delivery: one Spark job per result, event-woken waits, RPC parity
+# --------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def plain(spark):
+    """A store without retention, so its plans are cacheable, served over
+    HTTP and RPC from one DB. Ten sites with distinct sums in one 100s
+    bucket."""
+    from zenodb_spark.rpc import Client, serve_rpc
+    from zenodb_spark.web import serve
+
+    db = DB(spark, now=E + 100)
+    db.apply_schema({"hits4": {"sql": "SELECT n FROM clicks4 GROUP BY site, period('10s')"}})
+    db.insert_rows(
+        "clicks4",
+        [
+            {"ts": dt.datetime.fromtimestamp(E + i, dt.timezone.utc), "site": f"s{i % 10}", "n": float(i)}
+            for i in range(60)
+        ],
+    )
+    srv = serve(db, coalesce_window=0.1, short_timeout=15.0)
+    rsrv = serve_rpc(db)
+    yield srv, f"http://{srv.server_address[0]}:{srv.server_address[1]}", db, Client(*rsrv.server_address)
+    rsrv.shutdown()
+    srv.shutdown()
+
+
+SQL4 = "SELECT n FROM hits4 GROUP BY site, period('100s')"
+
+
+def test_cached_plan_result_is_one_spark_job(plain, spark):
+    """A cached plan's result costs exactly one Spark job. Spark's
+    partition-at-a-time local iterator ran one job per partition: two for
+    this UNION ALL."""
+    from zenodb_spark import web
+
+    srv, base, db, client = plain
+    sql = (
+        "SELECT n FROM hits4 WHERE site = 's1' GROUP BY site, period('100s') UNION ALL "
+        "SELECT n FROM hits4 WHERE site = 's2' GROUP BY site, period('100s')"
+    )
+    df = db.query(sql)
+    assert db.query(sql) is df, "the statement must be a plan-cache hit"
+    expected = sorted(tuple(r) for r in df.collect())  # runs the shuffles once
+    sc = spark.sparkContext
+    sc.setJobGroup("one-job-per-result", "collect_guarded on a cached plan")
+    try:
+        rows = web.collect_guarded(df, 1 << 20)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job status arrives asynchronously
+    jobs = list(sc.statusTracker().getJobIdsForGroup("one-job-per-result"))
+    assert sorted(tuple(r) for r in rows) == expected and len(expected) == 2
+    assert len(jobs) == 1, jobs
+
+
+def test_collect_rows_early_close_then_next_query(spark):
+    """A reader that stops after one row closes the result socket while the
+    JVM is still writing; the next collect on the session is unaffected."""
+    from contextlib import closing
+
+    from zenodb_spark.engine import collect_rows
+
+    with closing(collect_rows(spark.range(300_000).toDF("x"))) as rows:
+        assert next(rows)["x"] == 0
+    assert sum(1 for _ in collect_rows(spark.range(50_000))) == 50_000
+
+
+def test_next_query_after_aborted_oversize_response(plain):
+    srv, base, db, client = plain
+    handler = srv.RequestHandlerClass
+    old_query, old_runner = handler.max_response_bytes, srv.runner.max_response_bytes
+    handler.max_response_bytes = srv.runner.max_response_bytes = 10
+    try:
+        status, _ = _get(f"{base}/query?sql=" + urllib.parse.quote(SQL4))
+        assert status == 413
+        status, raw = _get(
+            f"{base}/run?" + urllib.parse.quote(SQL4), headers={"Cache-control": "no-cache"}
+        )
+        assert status == 500 and b"exceeded limit" in raw
+    finally:
+        handler.max_response_bytes, srv.runner.max_response_bytes = old_query, old_runner
+    status, raw = _get(f"{base}/query?sql=" + urllib.parse.quote(SQL4))
+    assert status == 200 and len(json.loads(raw)["rows"]) == 10
+    status, raw = _get(
+        f"{base}/run?" + urllib.parse.quote(SQL4), headers={"Cache-control": "no-cache"}
+    )
+    assert status == 200 and len(json.loads(raw)["Rows"]) == 10
+
+
+def test_rpc_rows_equal_query_rows_in_order(plain):
+    srv, base, db, client = plain
+    sql = SQL4 + " ORDER BY n DESC LIMIT 5"
+    status, raw = _get(f"{base}/query?sql=" + urllib.parse.quote(sql))
+    assert status == 200
+    out = json.loads(raw)
+    fields, rows = client.query(sql)
+    assert fields == out["columns"]
+    assert list(rows) == out["rows"]
+    assert len(out["rows"]) == 5
+    n = [r[out["columns"].index("n")] for r in out["rows"]]
+    assert n == sorted(n, reverse=True)
+
+
+def test_immediate_answers_without_polling(plain, monkeypatch):
+    """/immediate wakes on its entry's event when the result is ready; it
+    never sleeps in steps. Only ``web``'s reference to ``time`` is
+    replaced: other threads (Py4J's finalizer) sleep through the real
+    module."""
+    import types
+
+    from zenodb_spark import web
+
+    srv, base, db, client = plain
+
+    def no_sleep(*_):
+        raise AssertionError("a pending request must not poll")
+
+    web_time = types.ModuleType("time")
+    web_time.__dict__.update(vars(time))
+    web_time.sleep = no_sleep
+    monkeypatch.setattr(web, "time", web_time)
+    status, raw = _get(f"{base}/immediate?" + urllib.parse.quote(SQL4 + " HAVING n > 1"))
+    assert status == 200
+    assert len(json.loads(raw)["Rows"]) == 10
+
+
+def test_pending_entry_gets_202_after_short_timeout(plain):
+    srv, base, db, client = plain
+    ce = srv.cache.begin("SELECT n FROM hits4 GROUP BY site")  # never submitted
+    handler = srv.RequestHandlerClass
+    old = handler.short_timeout
+    handler.short_timeout = 0.3
+    try:
+        t0 = time.time()
+        status, raw = _get(f"{base}/cached/{ce.permalink}")
+        waited = time.time() - t0
+    finally:
+        handler.short_timeout = old
+    assert status == 202
+    assert raw == f"/cached/{ce.permalink}".encode()
+    assert waited >= 0.3

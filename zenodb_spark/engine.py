@@ -25,18 +25,22 @@ a bucket-range filter → partition pruning on the bucket column.
 
 from __future__ import annotations
 
+import dataclasses
 import datetime as dt
 import re
 from contextlib import contextmanager
 from dataclasses import dataclass, field as dfield
 
+from pyspark.serializers import BatchedSerializer, CPickleSerializer
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import _create_local_socket
 
 from zenodb_spark.ir import (
     DimConst,
     DimExpr,
+    DimFunc,
     DimIn,
     DimInSubquery,
     DimLogical,
@@ -117,6 +121,26 @@ def memory_guard(context: str = "query"):
         raise
 
 
+def collect_rows(df: DataFrame):
+    """Rows of ``df`` from ONE Spark job, yielded lazily — the result
+    reader of the HTTP and RPC query surfaces. This is ``DataFrame.collect()``
+    without its ``list()``: one ``collectToPython`` call runs the job and
+    serves the result on a local socket, and rows are unpickled off that
+    socket as the caller consumes them, so a caller that stops early (the
+    response-size guard) never unpickles the rest. Closing the generator
+    (``contextlib.closing``) closes the socket. The JVM holds the whole
+    result meanwhile, bounded by ``spark.driver.maxResultSize``.
+
+    Spark's partition-at-a-time local iterator would hold less but runs
+    one job per partition; re-planning a new frame (``df.limit(n)``) would
+    re-run a shuffle the cached plan already reuses."""
+    sockfile = _create_local_socket(df._jdf.collectToPython())
+    try:
+        yield from BatchedSerializer(CPickleSerializer()).load_stream(sockfile)
+    finally:
+        sockfile.close()
+
+
 def json_value(v):
     """One result cell as a JSON value — the row encoder of the HTTP and
     RPC query surfaces: timestamps become ISO-8601 text (naive ones read
@@ -143,12 +167,34 @@ def resolve_time(s: str, now: float) -> float:
     return d.timestamp()
 
 
+def _is_duration(s: str) -> bool:
+    """True for an ASOF/UNTIL value that ``resolve_time`` reads relative
+    to now (a signed duration), False for an absolute timestamp."""
+    try:
+        parse_duration(s)
+    except ValueError:
+        return False
+    return True
+
+
+def _ir_nodes(node):
+    """Every IR node reachable from ``node`` (a statement or expression),
+    ``node`` included: dataclass fields and list/tuple items, so nested
+    statements (FROM-subqueries, set-operation operands, IN-subqueries)
+    are walked too."""
+    if isinstance(node, (list, tuple)):
+        for x in node:
+            yield from _ir_nodes(x)
+    elif dataclasses.is_dataclass(node) and not isinstance(node, type):
+        yield node
+        for f in dataclasses.fields(node):
+            yield from _ir_nodes(getattr(node, f.name))
+
+
 def _max_shift_seconds(exprs) -> float:
     """Largest backward time offset any SHIFT/CROSSHIFT in ``exprs`` reads —
     how far below ASOF the stored-state scan must extend (reference
     encoding/seq.go:244–276 reads the shifted source from asOf+shift)."""
-    import dataclasses
-
     best = 0.0
 
     def walk(e):
@@ -858,19 +904,30 @@ class DB:
     def _plan_cacheable(self, sql: str) -> bool:
         """True when ``sql`` lowers to a plan that depends only on the SQL
         text and the current table state (both captured by the cache key +
-        mutation invalidation). Excluded, conservatively by text match:
+        mutation invalidation); see ``_statement_cacheable``."""
+        return self._statement_cacheable(parse(sql))
 
-        - ASOF/UNTIL — relative forms resolve against ``now()`` at lowering
-          time, so the same text can legitimately lower to different plans;
-        - RAND — an unseeded rand() fixes its seed at analysis, so a cached
-          plan would repeat one "random" stream instead of redrawing;
+    def _statement_cacheable(self, q: Query | SetOp) -> bool:
+        """The plan-cache rule on a parsed statement, over every nested
+        statement (FROM-subqueries, set-operation operands, IN-subqueries).
+        Excluded:
+
+        - a relative ASOF/UNTIL (a duration) — it resolves against
+          ``now()`` at lowering time, so the same text can legitimately
+          lower to different plans; absolute (ISO) times are cacheable;
+        - RAND() — an unseeded rand() fixes its seed at analysis, so a
+          cached plan would repeat one "random" stream instead of redrawing;
         - any table with retention — the truncation cutoff is a now()-
           derived literal baked into the scan (state_df), same staleness
           class as relative ASOF.
         """
-        low = sql.lower()
-        if "asof" in low or "until" in low or "rand" in low:
-            return False
+        for node in _ir_nodes(q):
+            if isinstance(node, Query) and any(
+                _is_duration(t) for t in (node.asof, node.until) if t
+            ):
+                return False
+            if isinstance(node, DimFunc) and node.name == "RAND":
+                return False
         return all(t.tdef.retention is None for t in self.tables.values())
 
     def query(self, sql: str) -> DataFrame:
@@ -882,7 +939,7 @@ class DB:
             # clears the plan cache before the lookup below)
             for s in list(self.streams):
                 s.drain()
-        key = sql if self._plan_cacheable(sql) else None
+        key = sql if self._statement_cacheable(q) else None
         if key is not None:
             hit = self._plan_cache.get(key)
             if hit is not None:
@@ -1203,8 +1260,6 @@ class DB:
             return shift_cols[node]
 
         def walk(e) -> None:
-            import dataclasses
-
             if isinstance(e, MShift):
                 register(e)
                 return  # inner belongs to the shift's own finalize

@@ -38,8 +38,9 @@ import socket
 import socketserver
 import struct
 import threading
+from contextlib import closing
 
-from zenodb_spark.engine import DB, json_value, memory_guard
+from zenodb_spark.engine import DB, collect_rows, json_value, memory_guard
 
 _LEN = struct.Struct(">I")
 MAX_FRAME = 64 * 1024 * 1024
@@ -153,10 +154,13 @@ class _RPCHandler(socketserver.BaseRequestHandler):
                 df = self.db.query(sql)
                 cols = df.columns
                 _send(sock, {"fields": cols})
-                # toLocalIterator: rows stream to the client as partitions
-                # arrive; the driver never holds the whole result
-                for row in df.toLocalIterator():
-                    _send(sock, {"row": [json_value(row[c]) for c in cols]})
+                # one Spark job; rows are unpickled and sent one at a time,
+                # so Python holds one row (the JVM holds the result, bounded
+                # by spark.driver.maxResultSize). No size cap, as in the
+                # reference; a client that disconnects closes the result.
+                with closing(collect_rows(df)) as result:
+                    for row in result:
+                        _send(sock, {"row": [json_value(row[c]) for c in cols]})
                 _send(sock, {"end_of_results": True})
         except Exception as e:
             _send(sock, {"error": str(e), "end_of_results": True})

@@ -44,10 +44,16 @@ response is bounded by ``max_response_bytes`` anyway, we count exactly on
 the driver (a strict refinement of the HLL estimate at zero extra Spark
 jobs; the unbounded-data cardinality operators live in operators/sketch).
 
-Response-size guard (web/query.go:265–273 + 229–233): rows are drained via
-``toLocalIterator`` with a running byte estimate — the driver never holds
-an unbounded collect() — and the final gzipped payload is checked against
-``max_response_bytes``; overflow fails the entry loudly.
+Response-size guard (web/query.go:265–273 + 229–233): each result is one
+Spark job (``engine.collect_rows``) whose rows are unpickled lazily under a
+running byte estimate, so Python never holds more than the cap (the JVM
+holds the result, bounded by ``spark.driver.maxResultSize``); the final
+gzipped payload is checked against ``max_response_bytes``; overflow fails
+the entry loudly.
+
+Pending requests wait on their entry's ``done`` event, so a result is
+answered as soon as it is ready; a request still pending after its timeout
+gets ``202 Accepted`` with body ``/cached/{permalink}``.
 """
 
 from __future__ import annotations
@@ -60,17 +66,17 @@ import queue
 import threading
 import time
 import uuid
+from contextlib import closing
 from dataclasses import dataclass, field
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
 
-from zenodb_spark.engine import DB, json_value, memory_guard
+from zenodb_spark.engine import DB, collect_rows, json_value, memory_guard
 
 STATUS_PENDING = 0
 STATUS_SUCCESS = 1
 STATUS_ERROR = 2
 
-PAUSE_TIME = 0.25  # reference web/query.go:26
 DEFAULT_SHORT_TIMEOUT = 5.0
 DEFAULT_COALESCE_WINDOW = 5.0  # reference web/query.go:187
 DEFAULT_MAX_RESPONSE_BYTES = 32 * 1024 * 1024
@@ -102,6 +108,8 @@ class CacheEntry:
     expires: float = 0.0
     data: bytes | None = None  # gzipped QueryResult JSON
     error: str | None = None
+    # set once the entry leaves STATUS_PENDING; waiting requests block on it
+    done: threading.Event = field(default_factory=threading.Event, repr=False, compare=False)
 
     def expired(self) -> bool:
         return self.expires < time.time()
@@ -177,6 +185,7 @@ class ResultCache:
                         ce.data = f.read()
                 except FileNotFoundError:
                     continue
+            ce.done.set()  # the index holds finished entries only
             self._by_sql[ce.sql] = ce
             self._by_permalink[ce.permalink] = ce
 
@@ -248,12 +257,14 @@ class ResultCache:
             ce.data = data
             ce.status = STATUS_SUCCESS
             self._flush_locked()
+        ce.done.set()
 
     def fail(self, ce: CacheEntry, error: str) -> None:
         with self._lock:
             ce.error = error
             ce.status = STATUS_ERROR
             self._flush_locked()
+        ce.done.set()
 
 
 # --------------------------------------------------------------------------
@@ -383,26 +394,28 @@ def _is_numeric(dtype: str) -> bool:
 
 
 def collect_guarded(df, max_response_bytes: int, columns=None):
-    """Drain a result frame through ``toLocalIterator`` with a running byte
-    estimate (reference web/query.go:229–233: estimate while iterating,
-    abort past the cap — conservatively an underestimate of the JSON size).
-    The driver never materializes more than the cap."""
+    """Read a result frame's rows (one Spark job, ``collect_rows``) with a
+    running byte estimate (reference web/query.go:229–233: estimate while
+    iterating, abort past the cap — conservatively an underestimate of the
+    JSON size). Python never holds more than the cap: rows past it are
+    never unpickled, and the result socket closes on the abort."""
     est = 0
     rows = []
     cols = columns or df.columns
-    for row in df.toLocalIterator():
-        vals = [row[c] for c in cols]
-        for v in vals:
-            if isinstance(v, str):
-                est += len(v)
-            else:
-                est += 8
-        rows.append(vals)
-        if est > max_response_bytes:
-            raise ResponseTooLarge(
-                f"estimated query result size exceeded limit of "
-                f"{max_response_bytes} bytes after {len(rows)} rows"
-            )
+    with closing(collect_rows(df)) as result:
+        for row in result:
+            vals = [row[c] for c in cols]
+            for v in vals:
+                if isinstance(v, str):
+                    est += len(v)
+                else:
+                    est += 8
+            rows.append(vals)
+            if est > max_response_bytes:
+                raise ResponseTooLarge(
+                    f"estimated query result size exceeded limit of "
+                    f"{max_response_bytes} bytes after {len(rows)} rows"
+                )
     return rows
 
 
@@ -611,18 +624,12 @@ class _Handler(BaseHTTPRequestHandler):
         self._respond_with_entry(ce, timeout)
 
     def _respond_with_entry(self, ce: CacheEntry, timeout: float) -> None:
-        limit = max(1, int(timeout / PAUSE_TIME))
-        for _ in range(limit):
+        if ce.done.wait(timeout):
             if ce.status == STATUS_SUCCESS:
                 self._reply(200, "", gzipped=ce.data)
-                return
-            if ce.status == STATUS_ERROR:
+            else:
                 self._reply(500, ce.error or "query failed")
-                return
-            time.sleep(PAUSE_TIME)
-            refreshed = self.cache.by_permalink(ce.permalink)
-            if refreshed is not None:
-                ce = refreshed
+            return
         # still working on it (reference web/query.go:120–123)
         self.send_response(202)
         body = f"/cached/{ce.permalink}".encode()
