@@ -40,19 +40,28 @@ def percentile_approx(value: Column | str, p: float, accuracy: int = 10000) -> C
     return F.percentile_approx(value, F.lit(p), F.lit(accuracy))
 
 
+HIST_TYPE = "map<bigint,bigint>"  # the stored state: occupied bin → count
+
+
+def check_bounds(lo: float, hi: float) -> None:
+    """Refuse an inverted bounded range: every value would fall outside it
+    and the state would read NULL forever."""
+    if hi < lo:
+        raise ValueError(f"percentile bounds inverted: lo={lo} > hi={hi}")
+
+
 def hist_bin(value: Column | str, lo: float, hi: float, precision: int) -> Column:
     """Bin index of a value in the bounded linear histogram (null if out of bounds).
 
     precision = decimal digits retained (reference scales to ints the same
     way; expr/percentile.go:43–53). Bin width = 10^-precision.
     """
-    if hi < lo:
-        raise ValueError(f"percentile bounds inverted: lo={lo} > hi={hi}")
+    check_bounds(lo, hi)
     value = F.col(value) if isinstance(value, str) else value
     scale = float(10**precision)
     # round, not truncate: (hi-lo)*scale can land at x.9999999… in floats
     # (e.g. (0.3-0.0)*10), and truncation would clamp hi itself into the
-    # wrong bin — must agree with plans/compiler.py's _hist_bin_expr
+    # wrong bin
     nbins = int(round((hi - lo) * scale)) + 1
     idx = F.floor((value - F.lit(lo)) * scale + F.lit(0.5)).cast("long")
     return F.when((value >= lo) & (value <= hi), F.least(idx, F.lit(nbins - 1)))
@@ -60,8 +69,8 @@ def hist_bin(value: Column | str, lo: float, hi: float, precision: int) -> Colum
 
 def hist_agg(
     df: DataFrame,
-    group_cols: list[str | Column],
-    value: str,
+    group_cols: list[str | tuple[str, Column]],
+    value: Column | str,
     lo: float,
     hi: float,
     precision: int,
@@ -70,15 +79,24 @@ def hist_agg(
     """Aggregate rows to one sparse histogram state (map<bin,count>) per
     group. Two-level: count per (group, bin) — map-side combinable — then
     assemble the occupied-bins map per group. Both stages are plain hash
-    aggregates.
+    aggregates. A ``(name, Column)`` group key groups by that expression
+    under that name.
+
+    SPARSE state: a dense array of nbins (up to 10k elements, ~80 KB per
+    cell at precision 1 over a 0..1000 range) made every cell and every
+    merge pay for the full bounded range; occupied bins only matches the
+    reference's HDR sparseness (expr/percentile.go compacts its counts
+    array on export).
     """
     binned = df.withColumn("__bin", hist_bin(value, lo, hi, precision)).filter(
         F.col("__bin").isNotNull()
     )
-    per_bin = binned.groupBy(*group_cols, "__bin").agg(F.count(F.lit(1)).alias("__c"))
-    return per_bin.groupBy(*group_cols).agg(
-        F.map_from_entries(F.collect_list(F.struct("__bin", "__c"))).alias(state_col)
-    )
+    per_bin = binned.groupBy(
+        *[g[1].alias(g[0]) if isinstance(g, tuple) else g for g in group_cols], "__bin"
+    ).agg(F.count(F.lit(1)).alias("__c"))
+    return per_bin.groupBy(
+        *[g[0] if isinstance(g, tuple) else g for g in group_cols]
+    ).agg(F.map_from_entries(F.collect_list(F.struct("__bin", "__c"))).alias(state_col))
 
 
 def hist_merge(state: Column | str) -> Column:
@@ -90,7 +108,7 @@ def hist_merge(state: Column | str) -> Column:
     state = F.col(state) if isinstance(state, str) else state
     return F.aggregate(
         F.collect_list(state),
-        F.expr("CAST(map() AS map<bigint,bigint>)"),
+        F.expr(f"CAST(map() AS {HIST_TYPE})"),
         lambda acc, x: F.map_zip_with(
             acc,
             x,

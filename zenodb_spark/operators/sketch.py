@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["kmv_sketch", "kmv_jaccard", "heavy_hitters"]
+__all__ = ["kmv_sketch", "kmv_estimate", "kmv_jaccard", "heavy_hitters"]
 
 
 def kmv_sketch(
@@ -52,6 +52,29 @@ def kmv_sketch(
         F.slice(F.array_sort(F.flatten(F.collect_list("mins"))), 1, k).alias(
             "kmin"
         )
+    )
+
+
+def kmv_estimate(sketch: Column | str, k: int) -> Column:
+    """Distinct-count estimate from a k-min sketch of md5 hex digests.
+
+    Below k members the sketch IS the set, so its size is exact; at k, the
+    classic (k-1)/h_(k) estimator, with h_(k) read from the first 8 hex
+    chars of the k-th smallest digest (32 bits / 2^32 — exactly
+    reproducible in any engine with md5). A missing sketch estimates 0."""
+    sketch = F.col(sketch) if isinstance(sketch, str) else sketch
+    # floor at 2^-32 so a k-th digest with 8 leading zero hex chars
+    # (P ≈ 2^-32 per read) estimates 2^32·(k-1) instead of nulling the
+    # group — keeps the estimator total
+    frac = F.greatest(
+        F.conv(F.substring(F.element_at(sketch, k), 1, 8), 16, 10).cast("long")
+        / F.lit(4294967296.0),
+        F.lit(2.0**-32),
+    )
+    return (
+        F.when(sketch.isNull(), F.lit(0.0))
+        .when(F.size(sketch) < k, F.size(sketch).cast("double"))
+        .otherwise(F.lit(float(k - 1)) / frac)
     )
 
 

@@ -5,7 +5,8 @@ Two lowering paths share one expression walker:
 1. **raw aggregation** (`aggregate_raw`) — a table definition (or the outer
    query of a FROM-subquery) aggregating raw points into *mergeable state
    columns*: SUM/COUNT/MIN/MAX keep their value, AVG keeps (sum,count),
-   WAVG keeps (Σvw, Σw), PERCENTILE keeps a bounded-histogram array.
+   WAVG keeps (Σvw, Σw), PERCENTILE keeps a sparse `map<bigint,bigint>`
+   of occupied bounded-histogram bins.
    This is the reference's ingest path (insert.go:175–268 +
    bytetree update) expressed as one Spark hash aggregate.
 
@@ -14,7 +15,7 @@ Two lowering paths share one expression walker:
    (sum+sum, min∧min, histogram ⊕) — the reference's SubMerge
    (expr/aggregate.go:97–109, encoding/seq.go:243–320). Spark's partial
    aggregation does exactly this for the scalar states; histograms merge
-   with an element-wise array fold.
+   by key-wise sum of their bin maps.
 
 `finalize` then turns merged states into flat field values (AVG = sum/count,
 percentile = quantile read, arithmetic, comparisons, divide-by-zero
@@ -23,11 +24,15 @@ expr/avg.go:101–114).
 
 Scale notes: every path is a plain groupBy over (dims, bucket) — map-side
 combined, AQE-coalesced. No Python UDFs anywhere; histogram states are
-arrays of longs handled by built-in higher-order functions.
+bin→count maps handled by built-in higher-order functions. Each
+accumulator kind's columns, raw aggregate, merge, empty type and read are
+stated once (``_kind``, ``_MERGES``); the histogram and KMV rules are the
+operator library's (operators/percentile.py, operators/sketch.py).
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -63,6 +68,8 @@ from zenodb_spark.ir import (
     Query,
     SelectField,
 )
+from zenodb_spark.operators.percentile import HIST_TYPE, hist_agg, hist_merge, hist_quantile
+from zenodb_spark.operators.sketch import kmv_estimate
 
 BUCKET_COL = "_bucket"
 POINTS_FIELD = "_points"
@@ -159,8 +166,12 @@ class StateSpec:
 
     key: str  # canonical key of the aggregate sub-expression
     col: str  # physical column name
-    merge: str  # sum | min | max | hist
-    hist_meta: tuple | None = None  # (lo, hi, precision)
+    merge: str  # a _MERGES kind
+    meta: tuple | None = None  # hist (lo, hi, precision); kmv (k,)
+
+
+# the implicit `_points` counter
+POINTS_AGG = MAgg("SUM", MFieldRef("_point"), None)
 
 
 def agg_key(e: MExpr) -> str:
@@ -198,10 +209,160 @@ def _dset_guard(arr: Column) -> Column:
     return F.when(ok.isNull(), arr)
 
 
+def _union(src: Column) -> Column:
+    return F.array_sort(F.array_distinct(F.flatten(F.collect_list(src))))
+
+
+# merge kind → (type of a state column no stored part has yet, merge
+# aggregate over the column and its StateSpec.meta)
+_MERGES = {
+    "sum": ("double", lambda src, meta: F.sum(src)),
+    "min": ("double", lambda src, meta: F.min(src)),
+    "max": ("double", lambda src, meta: F.max(src)),
+    "dset": ("array<string>", lambda src, meta: _dset_guard(_union(src))),
+    # k smallest of the union of the part sketches == the sketch of the
+    # union (lossless sketch merge)
+    "kmv": ("array<string>", lambda src, meta: F.slice(_union(src), 1, meta[0])),
+    "hist": (HIST_TYPE, lambda src, meta: hist_merge(src)),
+}
+
+
+def _sum(v: Column) -> Column:
+    return F.coalesce(F.sum(v), F.lit(0.0))
+
+
+def _count(v: Column) -> Column:
+    return F.count(v).cast("double")
+
+
+def _distinct_strings(v: Column) -> Column:
+    # string-cast for a type-uniform set (dialect values are doubles; JVM
+    # double→string is deterministic). `+ 0.0` first: IEEE -0.0 + 0.0 =
+    # 0.0, so the two zeros collapse to one member the way SQL DISTINCT
+    # (and the oracle) treats them — without it "-0.0"/"0.0" would be two
+    # distinct strings.
+    return (v + F.lit(0.0)).cast("string")
+
+
+def _dset(v: Column) -> Column:
+    return _dset_guard(F.array_sort(F.collect_set(_distinct_strings(v))))
+
+
+@dataclass(frozen=True)
+class _Kind:
+    """One accumulator kind, stated once: its state columns, each (name
+    suffix, merge kind, raw value, raw aggregate over the gated raw
+    value), the StateSpec.meta they carry, and its read over the merged
+    columns."""
+
+    cols: list[tuple]
+    read: Callable[[list[Column]], Column]
+    meta: tuple | None = None
+
+
+def _kind(leaf: MExpr) -> _Kind:
+    """The accumulator definition of an (un-gated) aggregate leaf."""
+    if isinstance(leaf, MPresence):
+        # `_` registers as its points counter (StateRegistry.require);
+        # it reads 1 when any point is present
+        return _Kind(
+            [],
+            lambda c: F.when(F.coalesce(c[0], F.lit(0.0)) > 0, F.lit(1.0)).otherwise(F.lit(0.0)),
+        )
+    if isinstance(leaf, MPercentile):
+        # built by a hist_agg join on the group key, not a scalar aggregate
+        return _Kind(
+            [("hist", "hist", leaf.inner, None)],
+            lambda c: hist_quantile(c[0], leaf.p, leaf.lo, leaf.precision),
+            (leaf.lo, leaf.hi, leaf.precision),
+        )
+    if not isinstance(leaf, MAgg):
+        raise ValueError(f"not an aggregate leaf: {leaf!r}")
+    scalar = lambda c: F.coalesce(c[0], F.lit(0.0))
+    # try_divide: AVG of an empty/unset group reads as null under ANSI
+    # mode too (the reference reads unset as NaN-ish 0)
+    ratio = lambda c: F.try_divide(c[0], c[1])
+    if leaf.kind == "SUM":
+        return _Kind([("sum", "sum", leaf.arg, _sum)], scalar)
+    if leaf.kind == "COUNT":
+        return _Kind([("count", "sum", leaf.arg, _count)], scalar)
+    if leaf.kind in ("MIN", "MAX"):
+        m = leaf.kind.lower()
+        return _Kind([(m, m, leaf.arg, getattr(F, m))], lambda c: c[0])
+    if leaf.kind == "AVG":
+        return _Kind([("sum", "sum", leaf.arg, _sum), ("count", "sum", leaf.arg, _count)], ratio)
+    if leaf.kind == "WAVG":
+        return _Kind(
+            [
+                ("wsum", "sum", MBin("*", leaf.arg, leaf.weight), _sum),
+                ("wwt", "sum", leaf.weight, _sum),
+            ],
+            ratio,
+        )
+    if leaf.kind == "COUNTDISTINCT" and leaf.weight is None:
+        # mergeable EXACT distinct state: the sorted array of distinct
+        # value strings. Mergeable by union; exact at any scale, which is
+        # what the oracle gate demands (an earlier HLL-sketch state drifted
+        # from the exact count once groups left coupon mode at sf0.1).
+        # State size grows with group cardinality — the documented trade,
+        # enforced by DSET_MAX_MEMBERS (loud runtime error past the cap);
+        # for unbounded-cardinality telemetry use the KMV/HLL operator
+        # library (q140/q172), which owns the approximate contract. Suffix
+        # carries the state-format version: v2 = sorted string array with
+        # -0.0 normalized; a stored v1 state (HLL binary under `__dset`)
+        # fails loudly on column-name mismatch instead of silently
+        # mis-merging.
+        return _Kind(
+            [("dsetv2", "dset", leaf.arg, _dset)],
+            lambda c: F.when(c[0].isNotNull(), F.size(c[0]).cast("double")).otherwise(F.lit(0.0)),
+        )
+    if leaf.kind == "COUNTDISTINCT":
+        # COUNTDISTINCT(x, k) — 2-arg form, k in the weight slot — selects
+        # the BOUNDED approximate state instead: the k
+        # lexicographically-smallest md5 hex digests of the distinct value
+        # strings (KMV, Beyer et al. SIGMOD'07, the same deterministic
+        # construction as operators/sketch.py). O(k) state per group at any
+        # cardinality; exact below k distinct members; (k-1)/h_(k) estimate
+        # above, ~1/sqrt(k) error. Version-tagged suffix `kmv1n{k}`: a
+        # future layout change bumps the tag and trips the engine's
+        # stale-state gate instead of silently mis-merging; states with
+        # different k likewise never share a column.
+        if not isinstance(leaf.weight, MConst):
+            raise ValueError("COUNTDISTINCT(x, k): k must be a literal")
+        k = int(leaf.weight.value)
+        if k < 2 or k != leaf.weight.value:
+            raise ValueError("COUNTDISTINCT(x, k): k must be an integer >= 2")
+        # md5 BEFORE collect_set: the set dedups by digest (same members,
+        # hashes being injective up to md5 collisions), and the sort+slice
+        # keeps only the k smallest digests
+        kmv = lambda v: F.slice(F.array_sort(F.collect_set(F.md5(_distinct_strings(v)))), 1, k)
+        return _Kind([(f"kmv1n{k}", "kmv", leaf.arg, kmv)], lambda c: kmv_estimate(c[0], k), (k,))
+    raise ValueError(f"cannot make state for {leaf!r}")
+
+
+def _split_gates(e: MExpr) -> tuple[list[DimExpr], MExpr]:
+    """The IF conditions around an aggregate leaf, outermost first, and
+    the leaf."""
+    conds = []
+    while isinstance(e, MIf):
+        conds.append(e.cond)
+        e = e.inner
+    return conds, e
+
+
+def _gate(conds: list[DimExpr], resolve=None) -> Column | None:
+    """The conjunction of IF conditions; None when there are none."""
+    gate = None
+    for cond in conds:
+        c = compile_dim(cond, resolve)
+        gate = c if gate is None else gate & c
+    return gate
+
+
 class StateRegistry:
     """Collects the distinct aggregate leaves of a set of field expressions
     and assigns state columns (dedup'd: `ii` and `COUNT(ii)` appearing in two
-    fields share state)."""
+    fields share state). Only this class names state columns."""
 
     def __init__(self):
         self.specs: dict[str, list[StateSpec]] = {}
@@ -210,121 +371,76 @@ class StateRegistry:
     def require(self, e: MExpr) -> list[StateSpec]:
         k = agg_key(e)
         if k not in self.specs:
-            idx = len(self.specs)
-            kind = _leaf_kind(e)
-            if k == agg_key(MAgg("SUM", MFieldRef("_point"), None)):
-                # the implicit points counter (`_points` compiles to
-                # SUM(_point)) registers AFTER the explicit fields, so an
-                # index-carrying name would shift on every field APPEND and
-                # make live ALTER re-bind it; one fixed position-independent
-                # column serves every un-gated reader (gated variants carry
-                # their own keys and stay indexed — their gates re-derive
-                # from this shared source only at query time).
-                cols = [StateSpec(k, "_s__points", "sum")]
-            elif kind in ("SUM", "COUNT"):
-                cols = [StateSpec(k, _state_name(idx, kind.lower()), "sum")]
-            elif kind == "MIN":
-                cols = [StateSpec(k, _state_name(idx, "min"), "min")]
-            elif kind == "MAX":
-                cols = [StateSpec(k, _state_name(idx, "max"), "max")]
-            elif kind == "AVG":
-                cols = [
-                    StateSpec(k, _state_name(idx, "sum"), "sum"),
-                    StateSpec(k, _state_name(idx, "count"), "sum"),
-                ]
-            elif kind == "WAVG":
-                cols = [
-                    StateSpec(k, _state_name(idx, "wsum"), "sum"),
-                    StateSpec(k, _state_name(idx, "wwt"), "sum"),
-                ]
-            elif kind == "PERCENTILE":
-                leaf = _find_leaf(e)
-                meta = (leaf.lo, leaf.hi, leaf.precision)
-                cols = [StateSpec(k, _state_name(idx, "hist"), "hist", meta)]
-            elif kind == "COUNTDISTINCT":
-                # mergeable EXACT distinct state: the sorted array of
-                # distinct value strings. Mergeable by union; exact at any
-                # scale, which is what the oracle gate demands (an earlier
-                # HLL-sketch state drifted from the exact count once groups
-                # left coupon mode at sf0.1). State size grows with group
-                # cardinality — the documented trade, enforced by
-                # DSET_MAX_MEMBERS (loud runtime error past the cap); for
-                # unbounded-cardinality telemetry use the KMV/HLL operator
-                # library (q140/q172), which owns the approximate contract.
-                # Suffix carries the state-format version: v2 = sorted
-                # string array with -0.0 normalized; a stored v1 state
-                # (HLL binary under `__dset`) fails loudly on column-name
-                # mismatch instead of silently mis-merging.
-                #
-                # COUNTDISTINCT(x, k) — 2-arg form, k in the weight slot —
-                # selects the BOUNDED approximate state instead: the k
-                # lexicographically-smallest md5 hex digests of the
-                # distinct value strings (KMV, Beyer et al. SIGMOD'07, the
-                # same deterministic construction as operators/sketch.py).
-                # O(k) state per group at any cardinality; exact below k
-                # distinct members; (k-1)/h_(k) estimate above, ~1/sqrt(k)
-                # error. Merge = k smallest of the union, which is EXACTLY
-                # the sketch of the union (the k-min of A∪B lives in the
-                # k-mins of A and B), so cross-resolution re-merge loses
-                # nothing. Version-tagged suffix `kmv1n{k}`: a future
-                # layout change bumps the tag and trips the engine's
-                # stale-state gate instead of silently mis-merging; states
-                # with different k likewise never share a column.
-                leaf = _find_leaf(e)
-                if leaf.weight is not None:
-                    if not isinstance(leaf.weight, MConst):
-                        raise ValueError(
-                            "COUNTDISTINCT(x, k): k must be a literal"
-                        )
-                    kk = int(leaf.weight.value)
-                    if kk < 2 or kk != leaf.weight.value:
-                        raise ValueError(
-                            "COUNTDISTINCT(x, k): k must be an integer >= 2"
-                        )
-                    cols = [
-                        StateSpec(
-                            k, _state_name(idx, f"kmv1n{kk}"), "kmv", (kk,)
-                        )
-                    ]
-                else:
-                    cols = [StateSpec(k, _state_name(idx, "dsetv2"), "dset")]
-            elif kind == "POINTS":
-                # FIXED name, no registration index: the implicit points
-                # counter registers AFTER the explicit fields, so an
-                # index-carrying name would shift on every field APPEND and
-                # make live ALTER re-bind it. Explicit fields keep indexed
-                # names (append-only stability); the one implicit state is
-                # position-independent by construction.
+            conds, leaf = _split_gates(e)
+            if isinstance(leaf, MPresence):
+                # `_` is its points counter under the same gates: un-gated
+                # it shares `_s__points`, gated it gets an indexed state
+                counter = POINTS_AGG
+                for cond in reversed(conds):
+                    counter = MIf(cond, counter)
+                cols = self.require(counter)
+            elif e == POINTS_AGG:
+                # the implicit points counter registers AFTER the explicit
+                # fields, so an index-carrying name would shift on every
+                # field APPEND and make live ALTER re-bind it; one fixed
+                # position-independent column serves every un-gated reader
                 cols = [StateSpec(k, "_s__points", "sum")]
             else:
-                raise ValueError(f"cannot make state for {e!r}")
+                kind, idx = _kind(leaf), len(self.specs)
+                cols = [
+                    StateSpec(k, _state_name(idx, suffix), merge, kind.meta)
+                    for suffix, merge, _value, _agg in kind.cols
+                ]
             self.specs[k] = cols
             self._agg_exprs[k] = e
         return self.specs[k]
 
+    def require_stored(
+        self, e: MExpr, stored: StateRegistry, state: DataFrame, table: str
+    ) -> DataFrame:
+        """Register query leaf ``e`` over the states ``stored`` for
+        ``table``. A table-def IF is part of the stored key; query-time IF
+        gates are stripped until the rest matches a stored state, and
+        become merge gates on copies of its columns that ``state`` gains."""
+        k = agg_key(e)
+        if k in self.specs:
+            return state
+        conds = []
+        inner = e
+        while agg_key(inner) not in stored.specs and isinstance(inner, MIf):
+            conds.append(inner.cond)
+            inner = inner.inner
+        ik = agg_key(POINTS_AGG if isinstance(inner, MPresence) else inner)
+        if ik not in stored.specs:
+            raise ValueError(
+                f"query aggregate {inner!r} does not match any stored field of "
+                f"{table} (stored aggregates cannot be re-aggregated "
+                f"with a different function)"
+            )
+        gate = _gate(conds)
+        src = stored.specs[ik]
+        n = len(self.specs)
+        self.specs[k] = [
+            StateSpec(k, s.col if gate is None else f"_g{n}_{i}__{s.merge}", s.merge, s.meta)
+            for i, s in enumerate(src)
+        ]
+        self._agg_exprs[k] = e
+        if gate is not None:
+            for s, qs in zip(src, self.specs[k]):
+                state = state.withColumn(qs.col, F.when(dim_truth(gate), F.col(s.col)))
+        return state
+
+    def states(self):
+        """(aggregate, specs) per distinct state in registration order;
+        keys that share columns (`_` and `_points`) yield them once."""
+        seen: set[str] = set()
+        for k, specs in self.specs.items():
+            if specs[0].col not in seen:
+                seen.update(s.col for s in specs)
+                yield self._agg_exprs[k], specs
+
     def all_specs(self) -> list[StateSpec]:
         return [s for specs in self.specs.values() for s in specs]
-
-    def expr_for(self, key: str) -> MExpr:
-        return self._agg_exprs[key]
-
-
-def _find_leaf(e: MExpr):
-    """Unwrap IF gating to the aggregate/percentile leaf."""
-    while isinstance(e, MIf):
-        e = e.inner
-    return e
-
-
-def _leaf_kind(e: MExpr) -> str:
-    leaf = _find_leaf(e)
-    if isinstance(leaf, MAgg):
-        return leaf.kind
-    if isinstance(leaf, MPercentile):
-        return "PERCENTILE"
-    if isinstance(leaf, MPresence):
-        return "POINTS"
-    raise ValueError(f"not an aggregate leaf: {e!r}")
 
 
 def collect_agg_leaves(e: MExpr, field_lookup, out: list[MExpr]) -> MExpr:
@@ -351,7 +467,7 @@ def collect_agg_leaves(e: MExpr, field_lookup, out: list[MExpr]) -> MExpr:
         if e.precision is None:
             # 2-arg re-read: resolve target field, must be a percentile
             target = field_lookup(e.inner.name) if isinstance(e.inner, MFieldRef) else e.inner
-            leaf = _find_leaf(target)
+            leaf = _split_gates(target)[1]
             if not (isinstance(leaf, MPercentile) and leaf.precision is not None):
                 raise ValueError("2-arg PERCENTILE must wrap an existing percentile field")
             out.append(target)
@@ -486,67 +602,6 @@ def _arith(op: str, left: Column, right: Column) -> Column:
     return F.when(truthy, F.lit(1.0)).otherwise(F.lit(0.0))
 
 
-def _hist_bin_expr(v: Column, lo: float, hi: float, precision: int) -> Column:
-    scale = float(10**precision)
-    nbins = int(round((hi - lo) * scale)) + 1
-    idx = F.floor((v - F.lit(lo)) * scale + F.lit(0.5)).cast("long")
-    return F.when((v >= lo) & (v <= hi), F.least(idx, F.lit(nbins - 1)))
-
-
-def _raw_state_agg(e: MExpr, spec: StateSpec, has_col, dim_resolve) -> list[Column]:
-    """Aggregate Columns producing this leaf's state from raw points."""
-    gate = None
-    leaf = e
-    while isinstance(leaf, MIf):
-        gate = (
-            compile_dim(leaf.cond, dim_resolve)
-            if gate is None
-            else gate & compile_dim(leaf.cond, dim_resolve)
-        )
-        leaf = leaf.inner
-
-    def gated(v: Column) -> Column:
-        return F.when(dim_truth(gate), v) if gate is not None else v
-
-    if isinstance(leaf, MPresence):
-        return [F.count(gated(F.lit(1))).cast("double").alias(spec.col)]
-    if isinstance(leaf, MPercentile):
-        raise AssertionError("percentile states are built by hist join, not here")
-    assert isinstance(leaf, MAgg)
-    v = gated(_raw_value(leaf.arg, has_col))
-    if leaf.kind == "SUM":
-        return [F.coalesce(F.sum(v), F.lit(0.0)).alias(spec.col)]
-    if leaf.kind == "COUNT":
-        return [F.count(v).cast("double").alias(spec.col)]
-    if leaf.kind == "MIN":
-        return [F.min(v).alias(spec.col)]
-    if leaf.kind == "MAX":
-        return [F.max(v).alias(spec.col)]
-    if leaf.kind == "COUNTDISTINCT":
-        # string-cast for a type-uniform set (dialect values are doubles;
-        # JVM double→string is deterministic); sorted for a canonical
-        # stored state. `+ 0.0` first: IEEE -0.0 + 0.0 = 0.0, so the two
-        # zeros collapse to one member the way SQL DISTINCT (and the
-        # oracle) treats them — without it "-0.0"/"0.0" would be two
-        # distinct strings.
-        if spec.merge == "kmv":
-            kk = spec.hist_meta[0]
-            # md5 BEFORE collect_set: the set dedups by digest (same
-            # members, hashes being injective up to md5 collisions), and
-            # the sort+slice keeps only the k smallest digests.
-            arr = F.slice(
-                F.array_sort(
-                    F.collect_set(F.md5((v + F.lit(0.0)).cast("string")))
-                ),
-                1,
-                kk,
-            )
-            return [arr.alias(spec.col)]
-        arr = F.array_sort(F.collect_set((v + F.lit(0.0)).cast("string")))
-        return [_dset_guard(arr).alias(spec.col)]
-    raise AssertionError(spec)
-
-
 # --------------------------------------------------------------------------
 # public lowering entry points
 # --------------------------------------------------------------------------
@@ -575,7 +630,7 @@ def build_registry(fields: list[SelectField], registry: StateRegistry | None = N
     leaves: list[MExpr] = []
     for f in fields:
         collect_agg_leaves(f.expr, field_lookup, leaves)
-    leaves.append(MAgg("SUM", MFieldRef("_point"), None))  # _points
+    leaves.append(POINTS_AGG)
     for leaf in leaves:
         registry.require(leaf)
     return registry
@@ -598,7 +653,6 @@ def aggregate_raw(
     registry = build_registry(fields, registry)
     cols = set(df.columns)
     has_col = lambda n: n in cols
-    field_lookup = raw_field_lookup(fields)
 
     bucket = (
         F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(F.col(ts_col)) % F.lit(int(resolution))
@@ -612,73 +666,26 @@ def aggregate_raw(
     dim_resolve = lambda name: F.col(name) if name in keyed.columns else F.lit(None)
 
     scalar_aggs: list[Column] = []
-    hist_specs: list[tuple[MExpr, StateSpec]] = []
-    for key, specs in registry.specs.items():
-        e = registry.expr_for(key)
-        if specs[0].merge == "hist":
-            hist_specs.append((e, specs[0]))
-            continue
-        if _leaf_kind(e) == "AVG":
-            leaf = _find_leaf(e)
-            sum_spec, cnt_spec = specs
-            sum_e = MAgg("SUM", leaf.arg, None)
-            cnt_e = MAgg("COUNT", leaf.arg, None)
-            sum_e, cnt_e = _regate(e, sum_e), _regate(e, cnt_e)
-            scalar_aggs += _raw_state_agg(sum_e, sum_spec, has_col, dim_resolve)
-            scalar_aggs += _raw_state_agg(cnt_e, cnt_spec, has_col, dim_resolve)
-        elif _leaf_kind(e) == "WAVG":
-            leaf = _find_leaf(e)
-            wsum_spec, wwt_spec = specs
-            vw = MBin("*", leaf.arg, leaf.weight)
-            scalar_aggs += _raw_state_agg(_regate(e, MAgg("SUM", vw, None)), wsum_spec, has_col, dim_resolve)
-            scalar_aggs += _raw_state_agg(_regate(e, MAgg("SUM", leaf.weight, None)), wwt_spec, has_col, dim_resolve)
-        else:
-            scalar_aggs += _raw_state_agg(e, specs[0], has_col, dim_resolve)
+    hists: list[tuple[StateSpec, Column]] = []
+    for e, specs in registry.states():
+        conds, leaf = _split_gates(e)
+        gate = _gate(conds, dim_resolve)
+        for spec, (_suffix, _merge, value, agg) in zip(specs, _kind(leaf).cols):
+            v = _raw_value(value, has_col)
+            if gate is not None:
+                v = F.when(dim_truth(gate), v)
+            if agg is None:
+                hists.append((spec, v))
+            else:
+                scalar_aggs.append(agg(v).alias(spec.col))
 
     out = keyed.groupBy(*group_cols).agg(*scalar_aggs)
-
-    for e, spec in hist_specs:
-        leaf = _find_leaf(e)
-        lo, hi, precision = spec.hist_meta
-        gate = None
-        g = e
-        while isinstance(g, MIf):
-            c = compile_dim(g.cond, dim_resolve)
-            gate = c if gate is None else gate & c
-            g = g.inner
-        v = _raw_value(leaf.inner, has_col)
-        if gate is not None:
-            v = F.when(dim_truth(gate), v)
-        binned = keyed.withColumn("__bin", _hist_bin_expr(v, lo, hi, precision)).filter(
-            F.col("__bin").isNotNull()
-        )
-        per_bin = binned.groupBy(
-            *[c.alias(n) for n, c in group_dims], F.col(BUCKET_COL), F.col("__bin")
-        ).agg(F.count(F.lit(1)).alias("__c"))
-        # SPARSE state: map<bin,count> of occupied bins only. A dense
-        # array<long> of nbins (up to 10k elements, ~80 KB per cell at
-        # precision 1 over a 0..1000 range) made every cell and every merge
-        # pay for the full bounded range; occupied-bins-only matches the
-        # reference's HDR sparseness (expr/percentile.go counts array is
-        # compacted on export).
-        assembled = per_bin.groupBy(*[F.col(n) for n, _ in group_dims], F.col(BUCKET_COL)).agg(
-            F.map_from_entries(F.collect_list(F.struct("__bin", "__c"))).alias(spec.col)
-        )
+    for spec, v in hists:
+        lo, hi, precision = spec.meta
+        assembled = hist_agg(keyed, [*group_dims, BUCKET_COL], v, lo, hi, precision, spec.col)
         out = out.join(assembled, on=[n for n, _ in group_dims] + [BUCKET_COL], how="left")
 
     return out, registry
-
-
-def _regate(original: MExpr, new_leaf: MExpr) -> MExpr:
-    """Re-wrap a substituted leaf in the IF gates of the original."""
-    gates = []
-    e = original
-    while isinstance(e, MIf):
-        gates.append(e.cond)
-        e = e.inner
-    for cond in reversed(gates):
-        new_leaf = MIf(cond, new_leaf)
-    return new_leaf
 
 
 def merge_states(
@@ -703,68 +710,16 @@ def merge_states(
     bucket = (b - b % F.lit(int(resolution_out)) + F.lit(int(anchor))).cast("long")
     keyed = state_df.withColumn("__qbucket", bucket)
     aggs: list[Column] = []
-    emitted: set[str] = set()
-    for spec in registry.all_specs():
-        # distinct query keys can share one stored state column (e.g.
-        # `_points` and the `_` presence magic both read the points
-        # counter); merge it once — finalize reads it by column name
-        if spec.col in emitted:
-            continue
-        emitted.add(spec.col)
-        if spec.col in keyed.columns:
-            src = F.col(spec.col)
-        else:
-            # live-ALTERed table before its first post-ALTER ingest: the new
-            # field's state column exists in NO part yet. Merge a typed null
-            # instead — every merge kind is null-absorbing, so the field
-            # reads as absent/zero exactly like pre-ALTER buckets do once
-            # new parts arrive.
-            src = F.lit(None).cast(
-                {
-                    "sum": "double",
-                    "min": "double",
-                    "max": "double",
-                    "dset": "array<string>",
-                    "kmv": "array<string>",
-                    "hist": "map<bigint,bigint>",
-                }[spec.merge]
-            )
-        if spec.merge == "sum":
-            aggs.append(F.sum(src).alias(spec.col))
-        elif spec.merge == "min":
-            aggs.append(F.min(src).alias(spec.col))
-        elif spec.merge == "max":
-            aggs.append(F.max(src).alias(spec.col))
-        elif spec.merge == "dset":
-            merged = F.array_sort(
-                F.array_distinct(F.flatten(F.collect_list(src)))
-            )
-            aggs.append(_dset_guard(merged).alias(spec.col))
-        elif spec.merge == "kmv":
-            # k smallest of the union of the part sketches == the sketch
-            # of the union (lossless sketch merge; see StateRegistry).
-            merged = F.slice(
-                F.array_sort(F.array_distinct(F.flatten(F.collect_list(src)))),
-                1,
-                spec.hist_meta[0],
-            )
-            aggs.append(merged.alias(spec.col))
-        elif spec.merge == "hist":
-            empty = F.expr("CAST(map() AS map<bigint,bigint>)")
-            aggs.append(
-                F.aggregate(
-                    F.collect_list(src),
-                    empty,
-                    lambda acc, x: F.map_zip_with(
-                        acc,
-                        x,
-                        lambda _k, v1, v2: F.coalesce(v1, F.lit(0).cast("long"))
-                        + F.coalesce(v2, F.lit(0).cast("long")),
-                    ),
-                ).alias(spec.col)
-            )
-        else:
-            raise AssertionError(spec)
+    for _agg, specs in registry.states():
+        for spec in specs:
+            null_type, merge = _MERGES[spec.merge]
+            # a live-ALTERed table before its first post-ALTER ingest: the
+            # new field's state column exists in NO part yet. Merge a typed
+            # null instead — every merge kind is null-absorbing, so the
+            # field reads as absent/zero exactly like pre-ALTER buckets do
+            # once new parts arrive.
+            src = F.col(spec.col) if spec.col in keyed.columns else F.lit(None).cast(null_type)
+            aggs.append(merge(src, spec.meta).alias(spec.col))
     group_cols = [c.alias(n) for n, c in out_dims] + [F.col("__qbucket").alias(BUCKET_COL)]
     if not aggs:
         # every selected expression was constant/absent (e.g. `SELECT
@@ -790,71 +745,22 @@ def finalize_expr(
         return F.lit(e.value) if e.value is not None else F.lit(None).cast("double")
     if isinstance(e, MFieldRef):
         return finalize_expr(field_lookup(e.name), registry, field_lookup, shift_cols)
-    if isinstance(e, MPresence):
-        k = agg_key(e)
-        if k in registry.specs:
-            c = F.col(registry.specs[k][0].col)
-            return F.when(F.coalesce(c, F.lit(0.0)) > 0, F.lit(1.0)).otherwise(F.lit(0.0))
-        return F.lit(1.0)
-    if isinstance(e, (MAgg, MIf)) or (isinstance(e, MPercentile) and e.precision is not None):
-        kind = _leaf_kind(e)
+    if isinstance(e, (MAgg, MIf, MPresence)) or (
+        isinstance(e, MPercentile) and e.precision is not None
+    ):
+        kind = _kind(_split_gates(e)[1])
         specs = registry.specs.get(agg_key(e))
         if specs is None:
+            if isinstance(e, MPresence):
+                return F.lit(1.0)  # unregistered `_` (FROM-subquery HAVING): every group has points
             raise ValueError(f"no state for {e!r}")
-        if kind == "POINTS":
-            # `_` presence magic: 1 when any (gated) point present
-            c = F.coalesce(F.col(specs[0].col), F.lit(0.0))
-            return F.when(c > 0, F.lit(1.0)).otherwise(F.lit(0.0))
-        if kind == "SUM":
-            return F.coalesce(F.col(specs[0].col), F.lit(0.0))
-        if kind == "COUNT":
-            return F.coalesce(F.col(specs[0].col), F.lit(0.0))
-        if kind in ("MIN", "MAX"):
-            return F.col(specs[0].col)
-        if kind == "AVG":
-            # try_divide: AVG of an empty/unset group reads as null under
-            # ANSI mode too (the reference reads unset as NaN-ish 0)
-            return F.try_divide(F.col(specs[0].col), F.col(specs[1].col))
-        if kind == "WAVG":
-            return F.try_divide(F.col(specs[0].col), F.col(specs[1].col))
-        if kind == "PERCENTILE":
-            leaf = _find_leaf(e)
-            lo, hi, precision = specs[0].hist_meta
-            return _hist_quantile_col(F.col(specs[0].col), leaf.p, lo, precision)
-        if kind == "COUNTDISTINCT":
-            c = F.col(specs[0].col)
-            if specs[0].merge == "kmv":
-                # below k distinct members the sketch IS the set → exact;
-                # at k, the classic (k-1)/h_(k) estimator with h_(k) read
-                # from the first 8 hex chars of the k-th smallest digest
-                # (32 bits / 2^32 — the same convention as the KMV operator
-                # library, exactly reproducible in any engine with md5).
-                kk = specs[0].hist_meta[0]
-                # floor at 2^-32 so a k-th digest with 8 leading zero hex
-                # chars (P ≈ 2^-32 per read) estimates 2^32·(k-1) instead
-                # of nulling the group — keeps the estimator total
-                frac = F.greatest(
-                    F.conv(
-                        F.substring(F.element_at(c, kk), 1, 8), 16, 10
-                    ).cast("long")
-                    / F.lit(4294967296.0),
-                    F.lit(2.0**-32),
-                )
-                return (
-                    F.when(c.isNull(), F.lit(0.0))
-                    .when(F.size(c) < kk, F.size(c).cast("double"))
-                    .otherwise(F.lit(float(kk - 1)) / frac)
-                )
-            return F.when(
-                c.isNotNull(), F.size(c).cast("double")
-            ).otherwise(F.lit(0.0))
-        raise AssertionError(kind)
+        return kind.read([F.col(s.col) for s in specs])
     if isinstance(e, MPercentile):  # 2-arg re-read over a stored percentile
         specs = registry.specs.get(agg_key(e.inner))
         if specs is None:
             raise ValueError(f"2-arg PERCENTILE: no stored percentile for {e.inner!r}")
-        lo, hi, precision = specs[0].hist_meta
-        return _hist_quantile_col(F.col(specs[0].col), e.p, lo, precision)
+        lo, _hi, precision = specs[0].meta
+        return hist_quantile(F.col(specs[0].col), e.p, lo, precision)
     if isinstance(e, MBounded):
         v = finalize_expr(e.inner, registry, field_lookup, shift_cols)
         return F.when((v >= e.lo) & (v <= e.hi), v)
@@ -884,34 +790,3 @@ def finalize_expr(
     if isinstance(e, MCrosshift):
         raise ValueError("CROSSHIFT is a select-level macro, not an inline expression")
     raise TypeError(f"unhandled finalize expr {e!r}")
-
-
-def _hist_quantile_col(state: Column, p: float, lo: float, precision: int) -> Column:
-    """Value-at-quantile over the SPARSE map state: sort occupied bins,
-    cumulative-scan to the ceil(p% · total) target."""
-    scale = float(10**precision)
-    entries = F.sort_array(F.map_entries(state))
-    total = F.aggregate(entries, F.lit(0).cast("long"), lambda a, x: a + x["value"])
-    # target in the accumulator, not lambda-captured: captured expressions
-    # re-evaluate per element (interpreted), turning the read O(bins²) —
-    # see operators/percentile.py:hist_quantile for the measured numbers.
-    target = F.ceil(total * F.lit(p) / F.lit(100.0)).cast("long")
-    folded = F.aggregate(
-        entries,
-        F.struct(
-            target.alias("target"),
-            F.lit(0).cast("long").alias("cum"),
-            F.lit(-1).cast("long").alias("ans"),
-        ),
-        lambda acc, x: F.struct(
-            acc["target"].alias("target"),
-            (acc["cum"] + x["value"]).alias("cum"),
-            F.when(
-                (acc["ans"] < 0) & (acc["cum"] + x["value"] >= acc["target"]),
-                x["key"].cast("long"),
-            )
-            .otherwise(acc["ans"])
-            .alias("ans"),
-        ),
-    )
-    return F.when(folded["ans"] >= 0, folded["ans"] / F.lit(scale) + F.lit(lo))

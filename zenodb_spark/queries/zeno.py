@@ -331,8 +331,9 @@ def q13_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q14_percentile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PERCENTILE(value, p, 0, 100, 1) — the mergeable bounded-histogram
-    sketch (reference expr/percentile.go:31–173): state = array<long> of bin
-    counts, merge = element-wise add, read = first-bin-at-cumulative-target.
+    sketch (reference expr/percentile.go:31–173): state = sparse
+    map<bigint,bigint> of occupied bin counts, merge = key-wise sum, read =
+    first-bin-at-cumulative-target.
     Deterministic integer math; DuckDB oracle replays the same logic."""
     ev = load_table(spark, sf_dir, "events")
     h = hist_agg(ev, ["event_type"], "value", 0.0, 100.0, 1, "hist")

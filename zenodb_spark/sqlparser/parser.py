@@ -50,6 +50,7 @@ from zenodb_spark.ir import (
     SelectField,
     SetOp,
 )
+from zenodb_spark.operators.percentile import check_bounds
 from zenodb_spark.sqlparser.durations import parse_duration
 
 _TOKEN_RE = re.compile(
@@ -424,6 +425,7 @@ class Parser:
             self.expect_op(",")
             prec = int(self._number())
             self.expect_op(")")
+            check_bounds(lo, hi)
             return MPercentile(inner, p, lo, hi, prec)
         if fn == "SHIFT":
             inner = self.parse_mexpr()
