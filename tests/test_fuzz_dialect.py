@@ -114,6 +114,9 @@ STRIDE = st.booleans()  # stride = 2 × period when set
 # columns with the reference's default-to-SUM rule (sql/sql.go:727–737,
 # the z08/z18/z19 unflatten→regroup path)
 SUBQUERY = st.booleans()
+# which of HAVING / ASOF-UNTIL / stride a subquery spec places on the OUTER
+# query instead of the inner one (the outer query plans every clause)
+OUTER = st.sets(st.sampled_from(["having", "asof", "stride"]))
 
 SPEC = st.fixed_dictionaries(
     {
@@ -127,6 +130,7 @@ SPEC = st.fixed_dictionaries(
         "asof": ASOF,
         "stride": STRIDE,
         "subquery": SUBQUERY,
+        "outer": OUTER,
     }
 )
 
@@ -153,16 +157,35 @@ _FIELD_ORACLE = {  # oracle expression over the per-bucket base aggregate
 _GROUP_SQL = {"k": "k", "_": "_", "expr": _EXPR_DIM_SQL}
 
 
+def _outer(spec) -> set[str]:
+    """The clauses a subquery spec applies to its outer query."""
+    return set(spec.get("outer", ())) if spec["subquery"] else set()
+
+
+def _inner_spec(spec) -> dict:
+    """A subquery spec's inner query: grouped by k, without the clauses
+    placed on the outer query."""
+    inner = dict(spec, group="k", shift=None, order=None, subquery=False)
+    for clause, off in (("having", None), ("asof", None), ("stride", False)):
+        if clause in _outer(spec):
+            inner[clause] = off
+    return inner
+
+
 def _dialect_sql(spec) -> str:
     if spec["subquery"]:
-        inner = _dialect_sql(
-            dict(spec, group="k", shift=None, order=None, subquery=False)
-        )
+        outer = _outer(spec)
+        inner = _dialect_sql(_inner_spec(spec))
         p2 = 2 * spec["period"]
-        sql = (
-            f"SELECT {', '.join(spec['fields'])} FROM ({inner}) "
-            f"GROUP BY {_GROUP_SQL[spec['group']]}, period('{p2}s')"
-        )
+        sql = f"SELECT {', '.join(spec['fields'])} FROM ({inner})"
+        if "asof" in outer and spec["asof"]:
+            a, u = spec["asof"]
+            sql += f" ASOF '{_day(a)}' UNTIL '{_day(u)}'"
+        sql += f" GROUP BY {_GROUP_SQL[spec['group']]}, period('{p2}s')"
+        if "stride" in outer and spec["stride"]:
+            sql += f", stride('{2 * p2}s')"
+        if "having" in outer and spec["having"]:
+            sql += f" HAVING {spec['having']}"
         if spec["order"]:
             sql += " ORDER BY cnt DESC, _time LIMIT 5"
         return sql
@@ -201,13 +224,14 @@ def _day(off: int) -> str:
 def _oracle_sql(spec) -> str:
     p = spec["period"]
     if spec["subquery"]:
-        # inner = the non-subquery oracle at (k, p) with WHERE/ASOF/HAVING/
-        # stride applied INSIDE (reference pipeline order, z19); outer
-        # re-groups to 2p with default-to-SUM on every re-read field
-        inner = _oracle_sql(
-            dict(spec, group="k", shift=None, order=None, subquery=False)
-        )
-        p2 = 2 * p
+        # inner = the non-subquery oracle at (k, p) with WHERE and the
+        # inner clauses applied INSIDE (reference pipeline order, z19);
+        # outer re-groups to 2p with default-to-SUM on every re-read field,
+        # after its own ASOF/UNTIL and stride keep inner rows by bucket,
+        # and its HAVING filters the re-grouped sums
+        inner = _oracle_sql(_inner_spec(spec))
+        outer = _outer(spec)
+        p2 = s = 2 * p
         g2 = {
             "k": "g",
             "_": "'_'",
@@ -215,9 +239,23 @@ def _oracle_sql(spec) -> str:
         }[spec["group"]]
         sums = ", ".join(f"sum({f}) AS {f}" for f in spec["fields"])
         obc = ", sum(cnt) AS __obc" if spec["order"] else ""
+        keep = []
+        if "asof" in outer and spec["asof"]:
+            a, u = spec["asof"]
+            keep.append(f"i.b >= {int(T0 + a * DAY)} AND i.b < {int(T0 + u * DAY)}")
+        if "stride" in outer and spec["stride"]:
+            # strideSlice = 2p, then the output grid = the 4p stride
+            s = 2 * p2
+            keep.append(f"i.b % {s} < {p2}")
+        where = f" WHERE {' AND '.join(keep)}" if keep else ""
+        having = ""
+        if "having" in outer and spec["having"]:
+            having = " HAVING " + (
+                spec["having"].replace("cnt", "sum(cnt)").replace("mx", "sum(mx)")
+            )
         sql = (
-            f"SELECT {g2} AS g, CAST(floor(b / {p2}) * {p2} AS BIGINT) AS b, "
-            f"{sums}{obc} FROM ({inner}) GROUP BY 1, 2"
+            f"SELECT {g2} AS g, CAST(floor(i.b / {s}) * {s} AS BIGINT) AS b, "
+            f"{sums}{obc} FROM ({inner}) i{where} GROUP BY 1, 2{having}"
         )
         if spec["order"]:
             sql = f"SELECT * FROM ({sql}) ORDER BY __obc DESC, b, g LIMIT 5"
@@ -351,6 +389,16 @@ def _oracle_rows(con, spec):
           "shift": None, "having": "cnt > 2", "order": None, "asof": (2, 6),
           "stride": True, "subquery": False}
 )
+@example(  # outer HAVING over two re-read inner columns
+    spec={"fields": ["cnt", "mx"], "group": "_", "period": 3600, "where": None,
+          "shift": None, "having": "cnt > 0 AND mx > 5", "order": None,
+          "asof": None, "stride": False, "subquery": True, "outer": {"having"}}
+)
+@example(  # outer ASOF/UNTIL and outer stride over an inner WHERE
+    spec={"fields": ["cnt"], "group": "k", "period": 3600, "where": "k <> 'b'",
+          "shift": None, "having": "cnt > 2", "order": None, "asof": (2, 6),
+          "stride": True, "subquery": True, "outer": {"asof", "stride"}}
+)
 def test_dialect_matches_duckdb_oracle(fuzz_db, oracle_con, spec):
     if spec["order"]:
         # LIMIT needs a total order: (cnt DESC, _time) can tie across dims
@@ -361,6 +409,11 @@ def test_dialect_matches_duckdb_oracle(fuzz_db, oracle_con, spec):
             # the outer ORDER BY cnt re-reads the inner cnt column, which
             # only exists if the inner query selected it
             spec["fields"] = list(spec["fields"]) + ["cnt"]
+    if spec["having"] and "having" in _outer(spec):
+        # the outer HAVING re-reads inner columns, which exist only if the
+        # inner query selected them
+        need = [f for f in ("cnt", "mx") if f in spec["having"] and f not in spec["fields"]]
+        spec = dict(spec, fields=list(spec["fields"]) + need)
     if spec["subquery"] and spec["shift"]:
         # _dialect_sql/_oracle_sql build the subquery's inner with
         # shift=None (SHIFT composes with FROM-subqueries via the dedicated

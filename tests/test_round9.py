@@ -435,6 +435,12 @@ def drain(target, tries=120):
         if n <= target:
             return n
         time.sleep(0.5)
+    # above target after the drain: name each survivor and where it was made
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    for rid in rdds.keySet().toArray():
+        r = rdds.get(rid).rdd()
+        print(f"SURVIVOR id={r.id()} name={r.name()} site={r.getCreationSite()} "
+              f"level={r.getStorageLevel().description()}", flush=True)
     return sc.getPersistentRDDs().size()
 run()
 n1 = drain(0)
@@ -477,10 +483,29 @@ print("DONE", flush=True)
                 l for l in proc.stdout.splitlines() if l.startswith("COMPACTGROWTH")
             ).split()[1]
         )
-        assert n2 <= n1, f"storage grew across identical runs: {n1} -> {n2}"
+        survivors = "\n".join(
+            l for l in proc.stdout.splitlines() if l.startswith("SURVIVOR")
+        )
+        assert n2 <= n1, f"storage grew across identical runs: {n1} -> {n2}\n{survivors}"
         # exactly one materialized part may stay cached; 3 compact cycles
         # must not stack 3 of them
         assert growth <= 1, f"compact leaked {growth} persisted parts"
+
+    def test_q190_leaves_no_cached_frame(self, spark):
+        """q190 returns its panel lazily, so nothing can unpersist a frame
+        it persists: its shared shingle arrays must localCheckpoint, whose
+        blocks the ContextCleaner frees, instead of entering the cache."""
+        import gc
+
+        from tests.conftest import SF_SMOKE
+        from zenodb_spark import queries as Q
+
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        spark.catalog.clearCache()
+        assert cache.isEmpty()
+        Q.QUERIES["q190_lsh_band_panel"](spark, SF_SMOKE).count()
+        gc.collect()
+        assert cache.isEmpty()
 
 
 class TestMemoryPressure:

@@ -52,12 +52,10 @@ from zenodb_spark.ir import (
     DimNot,
     GroupDim,
     MAgg,
-    MBin,
     MConst,
     MCrosshift,
     MExpr,
     MFieldRef,
-    MIf,
     MPercentile,
     MShift,
     Query,
@@ -199,28 +197,34 @@ def _max_shift_seconds(exprs) -> float:
     """Largest backward time offset any SHIFT/CROSSHIFT in ``exprs`` reads —
     how far below ASOF the stored-state scan must extend (reference
     encoding/seq.go:244–276 reads the shifted source from asOf+shift)."""
-    best = 0.0
+    return max(
+        [0.0]
+        + [
+            float(n.dur if isinstance(n, MShift) else n.cutoff)
+            for n in _ir_nodes(exprs)
+            if isinstance(n, (MShift, MCrosshift))
+        ]
+    )
 
-    def walk(e):
-        nonlocal best
-        if isinstance(e, MShift):
-            best = max(best, float(e.dur))
-        elif isinstance(e, MCrosshift):
-            best = max(best, float(e.cutoff))
-        if dataclasses.is_dataclass(e) and not isinstance(e, type):
-            for f in dataclasses.fields(e):
-                v = getattr(e, f.name)
-                if isinstance(v, MExpr):
-                    walk(v)
-                elif isinstance(v, (list, tuple)):
-                    for x in v:
-                        if isinstance(x, MExpr):
-                            walk(x)
 
-    for e in exprs:
-        if e is not None:
-            walk(e)
-    return best
+def _in_window(df: DataFrame, asof: int | None, until: int | None) -> DataFrame:
+    """Rows of ``df`` whose bucket lies in [asof, until); None = unbounded."""
+    if asof is not None:
+        df = df.filter(F.col(BUCKET_COL) >= F.lit(asof))
+    if until is not None:
+        df = df.filter(F.col(BUCKET_COL) < F.lit(until))
+    return df
+
+
+def _trim(flat: DataFrame, out_min_ts: int | None, having: bool = False) -> DataFrame:
+    """Finalized rows minus the shift-extended read below ASOF (output
+    buckets before ``out_min_ts``) and, with ``having``, minus the rows
+    the ``_having`` column rejects."""
+    if out_min_ts is not None:
+        flat = flat.filter(F.col(TIME_COL) >= F.timestamp_seconds(F.lit(out_min_ts)))
+    if having:
+        flat = flat.filter(F.col("_having") > 0).drop("_having")
+    return flat
 
 
 def _explode_array_vals(df: DataFrame, val_names: set[str] | None = None) -> DataFrame:
@@ -437,28 +441,11 @@ class Table:
         self.db._invalidate_plans()
 
     def _val_names(self) -> set[str]:
-        out: set[str] = set()
-
-        def walk(e: MExpr):
-            if isinstance(e, MFieldRef):
-                out.add(e.name)
-            elif isinstance(e, MAgg):
-                walk(e.arg)
-                if e.weight:
-                    walk(e.weight)
-            elif isinstance(e, (MIf,)):
-                walk(e.inner)
-            elif isinstance(e, MPercentile):
-                walk(e.inner)
-            elif isinstance(e, MBin):
-                walk(e.left)
-                walk(e.right)
-            elif hasattr(e, "inner"):
-                walk(e.inner)
-
-        for f in self.fields:
-            walk(f.expr)
-        return out
+        return {
+            n.name
+            for n in _ir_nodes([f.expr for f in self.fields])
+            if isinstance(n, MFieldRef)
+        }
 
     def _group_dim_cols(self, df: DataFrame):
         resolve = lambda n: F.col(n) if n in df.columns else F.lit(None)
@@ -495,11 +482,7 @@ class Table:
             out = out.unionByName(p, allowMissingColumns=True)
         if cutoff is not None:
             out = out.filter(F.col(BUCKET_COL) >= F.lit(cutoff))
-        if asof is not None:
-            out = out.filter(F.col(BUCKET_COL) >= F.lit(asof))
-        if until is not None:
-            out = out.filter(F.col(BUCKET_COL) < F.lit(until))
-        return out
+        return _in_window(out, asof, until)
 
     def _write_store(self, df: DataFrame, path: str) -> DataFrame:
         """Write a state part day-partitioned and reopen it (retention →
@@ -941,15 +924,7 @@ class DB:
     def plan(self, q: Query | SetOp) -> DataFrame:
         if isinstance(q, SetOp):
             return self._plan_set_op(q)
-        if q.from_subquery is not None:
-            inner = self.plan(q.from_subquery)
-            return self._aggregate_flat(q, inner, self._flat_fields(q.from_subquery))
-        name = q.from_table
-        if name in self.virtual_defs:
-            raise ValueError(f"table {name} is virtual and cannot be queried")
-        if name not in self.tables:
-            raise ValueError(f"unknown table {name}")
-        return self._plan_over_table(q, self.tables[name])
+        return self._plan_grouped(q)
 
     def _plan_set_op(self, q: SetOp) -> DataFrame:
         """UNION[/ALL] / INTERSECT[/ALL] / EXCEPT[/ALL] between dialect
@@ -980,28 +955,72 @@ class DB:
             raise ValueError(f"unknown set operation {q.op!r}")
         return self._order_limit(out, q)
 
-    # -- query over a stored table ------------------------------------------
-    def _plan_over_table(self, q: Query, table: Table) -> DataFrame:
-        registry = table.registry
-        if registry is None:
-            raise ValueError(f"table {table.tdef.name} has no data")
-        res_out = q.resolution or table.resolution
+    # -- grouped query over a stored table or a FROM-subquery ----------------
+    def _plan_grouped(self, q: Query) -> DataFrame:
+        """One planner for both sources of a grouped query (reference
+        planner/local.go). A stored table supplies its state rows and
+        resolves a bare name to a stored field. A FROM-subquery's flat rows
+        act as raw points (ts = inner _time, dims = inner dims, vals =
+        inner fields — the reference's Unflatten→Group path,
+        core/unflatten.go) and a bare name is the SUM of an inner column.
+        Every outer clause plans the same way for both."""
+        sub = q.from_subquery
+        if sub is None:
+            name = q.from_table
+            if name in self.virtual_defs:
+                raise ValueError(f"table {name} is virtual and cannot be queried")
+            if name not in self.tables:
+                raise ValueError(f"unknown table {name}")
+            table = self.tables[name]
+            if table.registry is None:
+                raise ValueError(f"table {name} has no data")
+            src_res, src_dims, read = table.resolution, table.dims or [], table.state_df
+            star = [SelectField("_points", MFieldRef("_points"))] + [
+                SelectField(f.name, MFieldRef(f.name)) for f in table.fields
+            ]
+
+            def bare(n: str) -> MExpr:
+                if n == "_points":
+                    return POINTS_AGG
+                e = next((f.expr for f in table.fields if f.name == n), None)
+                if e is None:
+                    # reference expr/field.go:44-47: a field missing from the
+                    # table reads as ABSENT (value 0, ok=false) — comparisons
+                    # against it are false, nothing errors (the integration
+                    # test's `HAVING ... OR unknown = 12`). The Spark analogue
+                    # of "absent" is a typed NULL: NULL = 12 is not-true in a
+                    # filter, and NULL propagates through arithmetic.
+                    return MConst(None)
+                if isinstance(e, MFieldRef):
+                    return MAgg("SUM", e, None)
+                return e
+        else:
+            inner = self.plan(sub)
+            inner_fields = [f.name for f in sub.fields]
+            # flat rows are points at whole-second timestamps
+            src_res = 1.0
+            src_dims = [c for c in inner.columns if c not in inner_fields and c != TIME_COL]
+            star = [SelectField(n, MFieldRef(n)) for n in inner_fields]
+            points = inner.withColumn(BUCKET_COL, F.unix_timestamp(F.col(TIME_COL)))
+            read = lambda lo, hi: _in_window(points, lo, hi)
+            bare = lambda n: MAgg("SUM", MFieldRef(n), None)  # default-to-SUM
+        res_out = q.resolution or src_res
         now = self.now()
 
-        # ASOF / UNTIL: RoundTimeUp to the TABLE resolution (reference
+        # ASOF / UNTIL: RoundTimeUp to the SOURCE resolution (reference
         # planner/local.go:119–121 + encoding/time.go:39–45) — a partial
-        # first STORED bucket is excluded, a partial last one included; the
-        # range is pushed into state_df so day-partition pruning and bucket
+        # first source bucket is excluded, a partial last one included; the
+        # range is pushed into the read so day-partition pruning and bucket
         # row-group stats both apply. (Output buckets stay epoch-anchored —
         # SURVEY §1.3's documented deviation from until-anchored sequences —
         # so an unaligned ASOF yields a partial first output bucket.)
-        tres = int(round(table.resolution))
+        tres = int(round(src_res))
         rup = lambda v: int(-(-int(round(v * 1000)) // (tres * 1000)) * tres)
         asof = rup(resolve_time(q.asof, now)) if q.asof else None
         until = rup(resolve_time(q.until, now)) if q.until else None
         # a period longer than the [asof, until) window narrows to the
         # window (reference planner/local.go:152–167), then must still be
-        # an even multiple of the table resolution
+        # an even multiple of the source resolution
         bucket_anchor = 0
         if asof is not None and until is not None and res_out > until - asof > 0:
             res_out = float(until - asof)
@@ -1015,7 +1034,7 @@ class DB:
             bucket_anchor = asof
         # SHIFT/CROSSHIFT read SOURCE data from before ASOF by their offset
         # (reference encoding/seq.go:244–276 truncates the shifted source at
-        # asOf+shift and grows the merge window): extend the scan downward by
+        # asOf+shift and grows the merge window): extend the read downward by
         # the largest shift, then trim the OUTPUT back to [asof, until) below
         # — otherwise the first in-range buckets lose their true lag values.
         shift_ext = _max_shift_seconds(
@@ -1023,13 +1042,12 @@ class DB:
         )
         read_asof = asof
         if asof is not None and shift_ext > 0:
-            r = table.resolution
-            read_asof = int((asof - shift_ext) // r * r)
-        state = table.state_df(read_asof, until)
+            read_asof = int((asof - shift_ext) // src_res * src_res)
+        state = read(read_asof, until)
         out_min_ts = asof if read_asof != asof else None
 
-        # WHERE over stored dims (IN-subqueries pre-executed, reference
-        # planner/subquery.go). A name that is not a stored dim — a measure
+        # WHERE over source dims (IN-subqueries pre-executed, reference
+        # planner/subquery.go). A name that is not a source dim — a measure
         # or a typo — resolves to NULL, the reference's "unknown dim = nil,
         # comparisons not-true" rule (goexpr; expr/field.go:44-47), so the
         # filter cleanly matches nothing instead of raising mid-plan.
@@ -1041,18 +1059,18 @@ class DB:
         )
 
         # STRIDE: keep only the first strideSlice of each stride, where
-        # strideSlice = the QUERY resolution (period if given, else table
+        # strideSlice = the QUERY resolution (period if given, else source
         # resolution) — reference planner/local.go:144–150 sets
         # strideSlice=resolution then resolution=stride
         if q.stride:
-            if round(q.stride) % round(table.resolution) != 0:
+            if round(q.stride) % round(src_res) != 0:
                 raise ValueError("stride must be a multiple of the table resolution")
             state = state.filter(
                 (F.col(BUCKET_COL) % F.lit(int(q.stride))) < F.lit(int(res_out))
             )
             res_out = max(res_out, q.stride)
 
-        # shift-extended read + ASOF unaligned to the OUTPUT grid: stored
+        # shift-extended read + ASOF unaligned to the OUTPUT grid: source
         # rows in [first-output-bucket-start, asof) belong to the partial
         # first bucket's PAST, not its base aggregates — exclude them so the
         # extension feeds only the shift columns (lower whole buckets)
@@ -1072,16 +1090,13 @@ class DB:
         if q.group_by_none:
             out_dims: list[tuple[str, object]] = []
         elif q.group_by_all or not q.group_by:
-            out_dims = [(d, F.col(d)) for d in (table.dims or [])]
+            out_dims = [(d, F.col(d)) for d in src_dims]
         else:
             out_dims = [(g.name, compile_dim(g.expr, dim_resolve)) for g in q.group_by]
 
-        # fields (SELECT * expands to all table fields + _points)
+        # fields (SELECT * expands to every source field)
         fields = list(q.fields)
         if q.select_star or not fields:
-            star = [SelectField(POINTS := "_points", MFieldRef("_points"))] + [
-                SelectField(f.name, MFieldRef(f.name)) for f in table.fields
-            ]
             seen = {f.name for f in fields}
             fields = fields + [f for f in star if f.name not in seen]
 
@@ -1089,28 +1104,13 @@ class DB:
         # sql_test.go: HAVING Rate > 15 with rate defined in the SELECT).
         # The map starts EMPTY and grows as fields are rewritten in order —
         # the reference resolves a name against fields defined EARLIER in
-        # the select list, else the stored field (sql/sql.go:720–738,
+        # the select list, else the source field (sql/sql.go:720–738,
         # fieldsMap), so `SHIFT(v, '1d') AS v` reads the stored v instead of
         # recursing into its own alias.
         query_aliases: dict[str, MExpr] = {}
 
         def field_lookup(n: str) -> MExpr:
-            if n in query_aliases:
-                return query_aliases[n]
-            if n == "_points":
-                return POINTS_AGG
-            e = next((f.expr for f in table.fields if f.name == n), None)
-            if e is None:
-                # reference expr/field.go:44-47: a field missing from the
-                # table reads as ABSENT (value 0, ok=false) — comparisons
-                # against it are false, nothing errors (the integration
-                # test's `HAVING ... OR unknown = 12`). The Spark analogue
-                # of "absent" is a typed NULL: NULL = 12 is not-true in a
-                # filter, and NULL propagates through arithmetic.
-                return MConst(None)
-            if isinstance(e, MFieldRef):
-                return MAgg("SUM", e, None)
-            return e
+            return query_aliases[n] if n in query_aliases else bare(n)
 
         # a SELECTed name that is an output dim is a dim passthrough (the
         # reference's IN-subqueries SELECT the dim they feed — sql/sql.go:1054)
@@ -1143,35 +1143,36 @@ class DB:
         if q.having is not None:
             having_expr = collect_agg_leaves(q.having, field_lookup, leaves)
 
-        # map query leaves onto stored states; gated leaves get their own
-        # state columns in the query registry
+        # the source-specific merge of ``state`` onto a dim list: stored
+        # states re-merge (query-time IF gates become merge gates on copies
+        # of the stored columns); flat rows aggregate as raw points
         qreg = StateRegistry()
-        for leaf in leaves:
-            state = qreg.require_stored(leaf, registry, state, table.tdef.name)
-
-        merged = merge_states(
-            state, qreg, out_dims, table.resolution, res_out, anchor=bucket_anchor
-        )
+        if sub is None:
+            for leaf in leaves:
+                state = qreg.require_stored(leaf, table.registry, state, name)
+            merge = lambda dims: merge_states(
+                state, qreg, dims, src_res, res_out, anchor=bucket_anchor
+            )
+        else:
+            leaf_fields = [SelectField("", leaf) for leaf in leaves]
+            merge = lambda dims: aggregate_raw(
+                state, leaf_fields, dims, res_out, TIME_COL, qreg, anchor=bucket_anchor
+            )[0]
 
         def q_lookup(n: str) -> MExpr:
             return collect_agg_leaves(field_lookup(n), field_lookup, [])
 
-        # crosstab: re-plan with the crosstab expr as an extra dim, then pivot
         if q.crosstab:
-            return self._crosstab(
-                q, table, state, merged, qreg, out_dims, res_out, rewritten,
-                having_expr, q_lookup, out_min_ts=out_min_ts, anchor=bucket_anchor,
+            flat = self._crosstab(
+                q, state, merge, qreg, out_dims, res_out, rewritten,
+                having_expr, q_lookup, out_min_ts,
             )
-
-        flat = self._finalize_flat(
-            merged, qreg, rewritten, out_dims, q_lookup, res_out, having=having_expr
-        )
-        if out_min_ts is not None:
-            flat = flat.filter(
-                F.col(TIME_COL) >= F.timestamp_seconds(F.lit(out_min_ts))
+        else:
+            flat = self._finalize_flat(
+                merge(out_dims), qreg, rewritten, out_dims, q_lookup, res_out,
+                having=having_expr,
             )
-        if having_expr is not None:
-            flat = flat.filter(F.col("_having") > 0).drop("_having")
+            flat = _trim(flat, out_min_ts, having_expr is not None)
         return self._order_limit(flat, q)
 
     def _finalize_flat(
@@ -1260,26 +1261,23 @@ class DB:
         return flat.select(*cols, F.col(BUCKET_COL)).drop(BUCKET_COL)
 
     def _crosstab(
-        self, q, table, state, merged, qreg, out_dims, res_out, fields,
-        having_expr, q_lookup, out_min_ts=None, anchor=0,
+        self, q, state, merge, qreg, out_dims, res_out, fields, having_expr,
+        q_lookup, out_min_ts,
     ):
-        """CROSSTAB pivot of ``state``; totals and HAVING come from
-        ``merged``, the caller's merge of ``state`` on the plain dims."""
+        """CROSSTAB: re-plan with the crosstab expr as an extra dim, then
+        pivot; totals and HAVING come from ``merge(out_dims)``, the merge of
+        ``state`` on the plain dims."""
         ct_resolve = lambda n: F.col(n) if n in state.columns else F.lit(None)
         ct_col = F.concat_ws(
             "_", *[compile_dim(e, ct_resolve).cast("string") for e in q.crosstab]
         )
         dims_ct = list(out_dims) + [("__ct", ct_col)]
-        merged_ct = merge_states(
-            state, qreg, dims_ct, table.resolution, res_out, anchor=anchor
+        flat_ct = self._finalize_flat(
+            merge(dims_ct), qreg, fields, dims_ct, q_lookup, res_out
         )
-        flat_ct = self._finalize_flat(merged_ct, qreg, fields, dims_ct, q_lookup, res_out)
-        if out_min_ts is not None:
-            # trim the shift-extended read BEFORE the pivot-value collection,
-            # so pre-ASOF-only crosstab values never become phantom columns
-            flat_ct = flat_ct.filter(
-                F.col(TIME_COL) >= F.timestamp_seconds(F.lit(out_min_ts))
-            )
+        # trim the shift-extended read BEFORE the pivot-value collection,
+        # so pre-ASOF-only crosstab values never become phantom columns
+        flat_ct = _trim(flat_ct, out_min_ts)
         # Pivot needs the distinct column values on the driver (the same
         # two-pass shape as Spark's own pivot(); the reference buffers rows
         # too) — but guard the cardinality so a runaway crosstab dim fails
@@ -1307,61 +1305,14 @@ class DB:
         # totals + HAVING computed on the un-pivoted (dims, bucket) grain
         tot_fields = [SelectField(f"total_{f.name}", f.expr) for f in fields]
         flat_tot = self._finalize_flat(
-            merged, qreg, tot_fields, out_dims, q_lookup, res_out, having=having_expr
+            merge(out_dims), qreg, tot_fields, out_dims, q_lookup, res_out,
+            having=having_expr,
         )
-        if out_min_ts is not None:
-            flat_tot = flat_tot.filter(
-                F.col(TIME_COL) >= F.timestamp_seconds(F.lit(out_min_ts))
-            )
-        if having_expr is not None:
-            flat_tot = flat_tot.filter(F.col("_having") > 0).drop("_having")
+        flat_tot = _trim(flat_tot, out_min_ts, having_expr is not None)
         join_cols = [TIME_COL, *dims]
         if q.crosstab_totals:
-            out = pivoted.join(flat_tot, on=join_cols, how="inner")
-        else:
-            out = pivoted.join(flat_tot.select(*join_cols), on=join_cols, how="inner")
-        return self._order_limit(out, q)
-
-    # -- query over a flat (subquery) source ---------------------------------
-    def _flat_fields(self, inner_q: Query) -> list[str]:
-        return [f.name for f in inner_q.fields]
-
-    def _aggregate_flat(self, q: Query, inner: DataFrame, inner_fields: list[str]) -> DataFrame:
-        """Outer query over a FROM-subquery: the inner flat rows act as raw
-        points (ts = inner _time, dims = inner dims, vals = inner fields) —
-        the reference's Unflatten→Group path (core/unflatten.go)."""
-        inner_dims = [c for c in inner.columns if c not in inner_fields and c != TIME_COL]
-        fields = list(q.fields)
-        if q.select_star or not fields:
-            seen = {f.name for f in fields}
-            fields += [SelectField(n, MFieldRef(n)) for n in inner_fields if n not in seen]
-        resolve = lambda n: F.col(n) if n in inner.columns else F.lit(None)
-        df = self._apply_where(inner, q.where, resolve)
-        if q.group_by_none:
-            group_dims: list[tuple[str, object]] = []
-        elif q.group_by_all or not q.group_by:
-            group_dims = [(d, F.col(d)) for d in inner_dims]
-        else:
-            resolve = lambda n: F.col(n) if n in df.columns else F.lit(None)
-            group_dims = [(g.name, compile_dim(g.expr, resolve)) for g in q.group_by]
-        res = q.resolution or 1.0
-        state, registry = aggregate_raw(df, fields, group_dims, res, TIME_COL)
-
-        def f_lookup(n: str) -> MExpr:
-            for f in fields:
-                if f.name == n and not isinstance(f.expr, MFieldRef):
-                    return f.expr
-            return MAgg("SUM", MFieldRef(n), None)
-
-        rewritten = [
-            SelectField(f.name, collect_agg_leaves(f.expr, f_lookup, [])) for f in fields
-        ]
-        flat = self._finalize_flat(state, registry, rewritten, group_dims, f_lookup, res)
-        if q.having is not None:
-            h = collect_agg_leaves(q.having, f_lookup, [])
-            flat = flat.withColumn("_having", finalize_expr(h, registry, f_lookup))
-            flat = flat.filter(F.col("_having") > 0).drop("_having")
-        return self._order_limit(flat, q)
+            return pivoted.join(flat_tot, on=join_cols, how="inner")
+        return pivoted.join(flat_tot.select(*join_cols), on=join_cols, how="inner")
 
     # -- shared tail ----------------------------------------------------------
     def _resolve_in_subqueries(
@@ -1430,7 +1381,7 @@ class DB:
             for name, desc in q.order_by:
                 # ORDER BY references an output name, a non-selected field
                 # materialized as a hidden `__ob_<name>` column by the
-                # table-query path (reference sql_test.go orders by fields
+                # grouped-query planner (reference sql_test.go orders by fields
                 # outside the SELECT list), or — failing both — an unknown
                 # name, which reads as ABSENT and sorts as a constant
                 # (expr/field.go:44-47's nil rule; a no-op sort key)

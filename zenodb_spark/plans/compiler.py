@@ -643,20 +643,22 @@ def aggregate_raw(
     resolution: float,
     ts_col: str = "ts",
     registry: StateRegistry | None = None,
+    anchor: float = 0.0,
 ) -> tuple[DataFrame, StateRegistry]:
     """Aggregate raw points to one state row per (dims…, bucket).
 
     Fields' aggregate leaves become state columns; percentile leaves are
     computed by a parallel two-level histogram aggregation joined back on
-    the group key (co-partitioned join).
+    the group key (co-partitioned join). ``anchor`` offsets the bucket
+    grid as in ``merge_states``.
     """
     registry = build_registry(fields, registry)
     cols = set(df.columns)
     has_col = lambda n: n in cols
 
-    bucket = (
-        F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(F.col(ts_col)) % F.lit(int(resolution))
-    ).cast("long")
+    ts = F.unix_timestamp(F.col(ts_col))
+    off = ts - F.lit(int(anchor)) if anchor else ts
+    bucket = (ts - off % F.lit(int(resolution))).cast("long")
     keyed = df.withColumn(BUCKET_COL, bucket)
     if "_point" not in cols:
         keyed = keyed.withColumn("_point", F.lit(1.0))
@@ -751,8 +753,6 @@ def finalize_expr(
         kind = _kind(_split_gates(e)[1])
         specs = registry.specs.get(agg_key(e))
         if specs is None:
-            if isinstance(e, MPresence):
-                return F.lit(1.0)  # unregistered `_` (FROM-subquery HAVING): every group has points
             raise ValueError(f"no state for {e!r}")
         return kind.read([F.col(s.col) for s in specs])
     if isinstance(e, MPercentile):  # 2-arg re-read over a stored percentile

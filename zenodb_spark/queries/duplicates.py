@@ -6,7 +6,6 @@ calibration panels built on them.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1184,13 +1183,13 @@ def q190_lsh_band_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates); each config's buckets explode from the signature row
     (28 rows/doc total); candidates come from per-bucket self-joins whose
     hot buckets are bounded (equal bands ⇒ near-identical docs); exact
-    verification joins candidate pairs to the persisted per-doc shingle
+    verification joins candidate pairs to the checkpointed per-doc shingle
     arrays — the q25 verify shape, never an all-pairs pass."""
 
     docs = load_table(spark, sf_dir, "documents")
-    arrays = dedup.shingle_arrays(docs, "text", "doc_id", 3).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # localCheckpoint, not persist: a lazily returned persisted frame stays
+    # in the session cache forever (see dedup._shared_fingerprint_arrays)
+    arrays = dedup.shingle_arrays(docs, "text", "doc_id", 3).localCheckpoint(eager=False)
     sh = arrays.select("doc", F.explode("shingles").alias("shingle"))
     sig = dedup.minhash_signatures(sh, num_hashes=16)
     band_structs = []
