@@ -858,9 +858,11 @@ class TestPlanCache:
     """Round-6 prepared-plan cache (DB._plan_cache): lowering a dialect
     statement costs hundreds of Py4J round-trips (459–764 for the four
     fresh dashboard templates of perfbench), so DB.query memoizes the
-    lowered DataFrame keyed on SQL text. These pin the contract: plans
-    (never results) are cached, every table-state mutation invalidates,
-    and now-relative or rand-dependent statements are excluded."""
+    lowered DataFrame keyed on SQL text. These pin the contract: the
+    entry is the plan object, every table-state mutation invalidates, and
+    now-relative or rand-dependent statements are excluded. Each entry's
+    result rows, kept beside it once ``collect_rows`` reads them in full,
+    follow the same rules (tests/test_result_rows.py)."""
 
     def _db(self, spark):
         from pyspark.sql import functions as F

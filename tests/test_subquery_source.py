@@ -92,3 +92,30 @@ def test_order_by_unselected_field(db):
     want = rows(db.query("SELECT av FROM t GROUP BY _ ORDER BY v DESC"))
     assert got == want
     assert [r["_time"].minute for r in got] == [10, 5, 0]
+
+
+def test_select_star_over_inner_select_star(db, spark):
+    """An outer SELECT * over an inner SELECT * reads every inner field
+    (all inner columns but _time and the inner group dims). Bare names
+    over a subquery are SUMs, so ``_points`` and ``v`` match the table
+    for any data; ``av`` (an AVG) matches where each bucket holds one
+    server's row."""
+    star = "SELECT * FROM (SELECT * FROM t GROUP BY server) GROUP BY _"
+    got = rows(db.query(star))
+    want = rows(db.query("SELECT * FROM t GROUP BY _"))
+    pick = lambda rs: sorted(((r["_time"], r["_points"], r["v"]) for r in rs), key=str)
+    assert want and pick(got) == pick(want)
+
+    one = DB(spark, now=E + 3600)
+    one.apply_schema(
+        {"t": {"sql": "SELECT v, AVG(v) AS av FROM s GROUP BY server, period('5m')"}}
+    )
+    one.insert("s", spark.createDataFrame([
+        Row(ts=ts(0), server="a", v=1.0),
+        Row(ts=ts(1), server="a", v=3.0),
+        Row(ts=ts(5), server="b", v=2.0),
+    ]))
+    got = rows(one.query(star))
+    want = rows(one.query("SELECT * FROM t GROUP BY _"))
+    assert list(want[0]) == ["_time", "_points", "v", "av"]
+    assert len(want) == 2 and sorted(got, key=str) == sorted(want, key=str)

@@ -123,24 +123,60 @@ def memory_guard(context: str = "query"):
         raise
 
 
+# Estimated bytes of the result rows the plan cache may hold, over all its
+# entries together, as ``row_bytes`` estimates them (the Python objects
+# take several times the estimate).
+RESULT_ROWS_MAX_BYTES = 16 * 1024 * 1024
+
+
+def row_bytes(vals) -> int:
+    """Estimated size of one result row: its strings' lengths plus 8 bytes
+    per other value (reference web/query.go:229–233) — the running estimate
+    of the response-size guard and of the result rows the plan cache holds."""
+    return sum(len(v) if isinstance(v, str) else 8 for v in vals)
+
+
 def collect_rows(df: DataFrame):
-    """Rows of ``df`` from ONE Spark job, yielded lazily — the result
-    reader of the HTTP and RPC query surfaces. This is ``DataFrame.collect()``
-    without its ``list()``: one ``collectToPython`` call runs the job and
-    serves the result on a local socket, and rows are unpickled off that
-    socket as the caller consumes them, so a caller that stops early (the
-    response-size guard) never unpickles the rest. Closing the generator
+    """Rows of ``df``, yielded lazily — the result reader of the HTTP and
+    RPC query surfaces.
+
+    A plan-cache entry (``DB.query``) whose rows were read in full since
+    the last table-state mutation is served from those rows, with no Spark
+    job. Otherwise this is ``DataFrame.collect()`` without its ``list()``:
+    one ``collectToPython`` call runs ONE Spark job and serves the result
+    on a local socket, and rows are unpickled off that socket as the
+    caller consumes them, so a caller that stops early (the response-size
+    guard) never unpickles the rest. Closing the generator
     (``contextlib.closing``) closes the socket. The JVM holds the whole
-    result meanwhile, bounded by ``spark.driver.maxResultSize``.
+    result meanwhile, bounded by ``spark.driver.maxResultSize``. A
+    plan-cache entry's rows are kept when the caller reads to the end and
+    they fit ``RESULT_ROWS_MAX_BYTES``; a read that is closed early keeps
+    nothing.
 
     Spark's partition-at-a-time local iterator would hold less but runs
     one job per partition; re-planning a new frame (``df.limit(n)``) would
     re-run a shuffle the cached plan already reuses."""
+    owner = df.__dict__.get("_plan_owner")  # (db, sql) of a plan-cache entry
+    if owner is not None:
+        held = owner[0]._held_rows(owner[1], df)
+        if held is not None:
+            yield from held
+            return
+    kept, nbytes = ([] if owner is not None else None), 0
     sockfile = _create_local_socket(df._jdf.collectToPython())
     try:
-        yield from BatchedSerializer(CPickleSerializer()).load_stream(sockfile)
+        for row in BatchedSerializer(CPickleSerializer()).load_stream(sockfile):
+            if kept is not None:
+                nbytes += row_bytes(row)
+                if nbytes <= RESULT_ROWS_MAX_BYTES:
+                    kept.append(row)
+                else:
+                    kept = None
+            yield row
     finally:
         sockfile.close()
+    if kept is not None:
+        owner[0]._keep_rows(owner[1], df, kept, nbytes)
 
 
 def json_value(v):
@@ -606,16 +642,23 @@ class DB:
         # crosstab pivots buffer the distinct column values on the driver
         # (same as Spark's own pivot()); fail loudly past this cap.
         self.crosstab_max_values = crosstab_max_values
-        # Prepared-PLAN cache (round 6, guide §1/§2: lowering a dialect
-        # statement costs ~1,500 Py4J round-trips — measured 0.9-1.1 s for
-        # the percentile re-read query vs 0.4 s of execution). Maps SQL
-        # text → lowered DataFrame. This caches the PLAN only: every
-        # action on the returned frame re-executes against the stored
-        # state, exactly like a prepared statement. Entries are dropped
-        # whenever ANY table state mutates (ingest/compact/reopen/schema
-        # change — see _plan_cacheable for the time-dependence rules).
+        # Prepared-plan cache (guide §1/§2: lowering a dialect statement
+        # costs ~1,500 Py4J round-trips — measured 0.9-1.1 s for the
+        # percentile re-read query vs 0.4 s of execution). Maps SQL text →
+        # lowered DataFrame, least recently used first. Beside each plan,
+        # ``_result_rows`` keeps its complete result rows once
+        # ``collect_rows`` has read them, so a repeated statement runs no
+        # Spark job at all. A result is a function of the SQL text and the
+        # table state only (``_statement_cacheable`` excludes now- and
+        # rand-dependent statements), and both maps are cleared whenever
+        # ANY table state mutates (ingest/compact/reopen/schema change),
+        # so stored rows are never stale. Held rows are bounded by the
+        # entry count and by RESULT_ROWS_MAX_BYTES.
         self._plan_cache: dict[str, DataFrame] = {}
+        self._result_rows: dict[str, tuple[list, int]] = {}  # sql → (rows, est. bytes)
         self._plan_epoch = 0  # bumped by _invalidate_plans (store-if-unchanged guard)
+        self._cache_lock = threading.Lock()
+        self._plan_hits = self._plan_misses = self._result_hits = 0
 
     def now(self) -> float:
         if self._now is not None:
@@ -848,13 +891,56 @@ class DB:
     _PLAN_CACHE_MAX = 64
 
     def _invalidate_plans(self) -> None:
-        """Drop every prepared plan; called from every table-state
-        mutation site (ingest/compact/reopen/schema/maintenance). The
-        epoch bump closes the lower-while-mutating race: a query thread
-        that began lowering BEFORE a concurrent mutation must not store
-        its (now stale) plan after this clear."""
-        self._plan_epoch += 1
-        self._plan_cache.clear()
+        """Drop every prepared plan and its result rows; called from every
+        table-state mutation site (ingest/compact/reopen/schema/
+        maintenance). The epoch bump closes the lower-while-mutating race:
+        a query thread that began lowering BEFORE a concurrent mutation
+        must not store its (now stale) plan after this clear; a read that
+        ends after it finds its plan gone and keeps no rows."""
+        with self._cache_lock:
+            self._plan_epoch += 1
+            self._plan_cache.clear()
+            self._result_rows.clear()
+
+    def _held_rows(self, sql: str, df: DataFrame) -> list | None:
+        """The stored result rows of plan-cache entry ``sql`` when ``df``
+        is still that entry, else None."""
+        with self._cache_lock:
+            held = self._result_rows.get(sql)
+            if held is None or self._plan_cache.get(sql) is not df:
+                return None
+            self._result_hits += 1
+            return held[0]
+
+    def _keep_rows(self, sql: str, df: DataFrame, rows: list, nbytes: int) -> None:
+        """Store the complete result ``rows`` of plan ``df`` if it is still
+        the cache entry for ``sql`` (no mutation since it was planned),
+        then drop the rows of the least recently used entries until the
+        total is within RESULT_ROWS_MAX_BYTES."""
+        with self._cache_lock:
+            if self._plan_cache.get(sql) is not df:
+                return
+            self._result_rows[sql] = (rows, nbytes)
+            held = sum(n for _, n in self._result_rows.values())
+            for k in list(self._plan_cache):
+                if held <= RESULT_ROWS_MAX_BYTES:
+                    break
+                if k != sql and k in self._result_rows:
+                    held -= self._result_rows.pop(k)[1]
+
+    def cache_stats(self) -> dict:
+        """Counters of the plan cache and the result rows it holds: plan
+        hits and misses (cacheable statements only), results served from
+        held rows, entries, and the estimated bytes of the held rows."""
+        with self._cache_lock:
+            return {
+                "plan_cache_hits": self._plan_hits,
+                "plan_cache_misses": self._plan_misses,
+                "result_hits": self._result_hits,
+                "plan_entries": len(self._plan_cache),
+                "result_entries": len(self._result_rows),
+                "result_bytes": sum(n for _, n in self._result_rows.values()),
+            }
 
     def _plan_cacheable(self, sql: str) -> bool:
         """True when ``sql`` lowers to a plan that depends only on the SQL
@@ -896,15 +982,27 @@ class DB:
                 s.drain()
         key = sql if self._statement_cacheable(q) else None
         if key is not None:
-            hit = self._plan_cache.get(key)
-            if hit is not None:
-                return hit
+            with self._cache_lock:
+                hit = self._plan_cache.pop(key, None)
+                if hit is not None:
+                    self._plan_cache[key] = hit  # now the most recently used
+                    self._plan_hits += 1
+                    return hit
+                self._plan_misses += 1
         epoch0 = self._plan_epoch
         out = self.plan(q)
-        if key is not None and self._plan_epoch == epoch0:
-            if len(self._plan_cache) >= self._PLAN_CACHE_MAX:
-                self._plan_cache.pop(next(iter(self._plan_cache)), None)
-            self._plan_cache[key] = out
+        if key is not None:
+            out._plan_owner = (self, key)  # collect_rows keeps its rows here
+            with self._cache_lock:
+                if self._plan_epoch == epoch0:
+                    # replace a plan another thread stored meanwhile
+                    self._plan_cache.pop(key, None)
+                    self._result_rows.pop(key, None)
+                    if len(self._plan_cache) >= self._PLAN_CACHE_MAX:
+                        lru = next(iter(self._plan_cache))
+                        del self._plan_cache[lru]
+                        self._result_rows.pop(lru, None)
+                    self._plan_cache[key] = out
         return out
 
     def explain(self, sql: str, mode: str = "formatted") -> str:
@@ -924,7 +1022,7 @@ class DB:
     def plan(self, q: Query | SetOp) -> DataFrame:
         if isinstance(q, SetOp):
             return self._plan_set_op(q)
-        return self._plan_grouped(q)
+        return self._plan_grouped(q)[0]
 
     def _plan_set_op(self, q: SetOp) -> DataFrame:
         """UNION[/ALL] / INTERSECT[/ALL] / EXCEPT[/ALL] between dialect
@@ -956,12 +1054,13 @@ class DB:
         return self._order_limit(out, q)
 
     # -- grouped query over a stored table or a FROM-subquery ----------------
-    def _plan_grouped(self, q: Query) -> DataFrame:
+    def _plan_grouped(self, q: Query) -> tuple[DataFrame, list[str]]:
         """One planner for both sources of a grouped query (reference
-        planner/local.go). A stored table supplies its state rows and
-        resolves a bare name to a stored field. A FROM-subquery's flat rows
-        act as raw points (ts = inner _time, dims = inner dims, vals =
-        inner fields — the reference's Unflatten→Group path,
+        planner/local.go); returns the result frame and the names of its
+        dims. A stored table supplies its state rows and resolves a bare
+        name to a stored field. A FROM-subquery's flat rows act as raw
+        points (ts = inner _time, dims = inner dims, vals = every other
+        inner column — the reference's Unflatten→Group path,
         core/unflatten.go) and a bare name is the SUM of an inner column.
         Every outer clause plans the same way for both."""
         sub = q.from_subquery
@@ -995,11 +1094,10 @@ class DB:
                     return MAgg("SUM", e, None)
                 return e
         else:
-            inner = self.plan(sub)
-            inner_fields = [f.name for f in sub.fields]
+            inner, src_dims = self._plan_grouped(sub)
+            inner_fields = [c for c in inner.columns if c not in src_dims and c != TIME_COL]
             # flat rows are points at whole-second timestamps
             src_res = 1.0
-            src_dims = [c for c in inner.columns if c not in inner_fields and c != TIME_COL]
             star = [SelectField(n, MFieldRef(n)) for n in inner_fields]
             points = inner.withColumn(BUCKET_COL, F.unix_timestamp(F.col(TIME_COL)))
             read = lambda lo, hi: _in_window(points, lo, hi)
@@ -1173,7 +1271,7 @@ class DB:
                 having=having_expr,
             )
             flat = _trim(flat, out_min_ts, having_expr is not None)
-        return self._order_limit(flat, q)
+        return self._order_limit(flat, q), [n for n, _ in out_dims]
 
     def _finalize_flat(
         self, merged, qreg, fields, out_dims, q_lookup, res_out, having=None

@@ -154,10 +154,12 @@ class _RPCHandler(socketserver.BaseRequestHandler):
                 df = self.db.query(sql)
                 cols = df.columns
                 _send(sock, {"fields": cols})
-                # one Spark job; rows are unpickled and sent one at a time,
-                # so Python holds one row (the JVM holds the result, bounded
-                # by spark.driver.maxResultSize). No size cap, as in the
-                # reference; a client that disconnects closes the result.
+                # at most one Spark job (none when the plan-cache entry
+                # holds its rows); rows are unpickled and sent one at a time
+                # (the JVM holds the result, bounded by
+                # spark.driver.maxResultSize). No size cap, as in the
+                # reference; a client that disconnects closes the result,
+                # and a closed read keeps no rows.
                 with closing(collect_rows(df)) as result:
                     for row in result:
                         _send(sock, {"row": [json_value(row[c]) for c in cols]})

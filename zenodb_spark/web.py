@@ -15,7 +15,8 @@ Routes (reference web/handler.go:117–124):
 - ``GET /cached/{permalink}`` — fetch a finished (or still-pending) result
   by its stable permalink (web/query.go:69–83, web/cache.go).
 - ``GET /metrics`` — per-table stats + streaming freshness
-  (web/metrics.go, table.go:569–601); ``?cardinalities=1`` adds the
+  (web/metrics.go, table.go:569–601) + the engine's plan-cache and
+  result-row counters (DB.cache_stats); ``?cardinalities=1`` adds the
   per-dimension KMV distinct estimates (DB.table_stats) — the dashboard
   cardinality panel, O(k·dims) response bytes at any table size.
 
@@ -32,7 +33,8 @@ Query coalescing (web/query.go:168–215): non-immediate queries queue into a
 coalescing window and the window's batch is planned through
 ``DB.query_many``, which plans each statement through ``DB.query`` (plan
 cache, ``-- force_fresh``); each statement then scans its own day
-partitions instead of sharing one scan. An immediate query flushes the
+partitions instead of sharing one scan, unless its plan-cache entry
+already holds its result rows (below). An immediate query flushes the
 window at once.
 
 QueryResult shape (web/query.go:31–47): ``SQL, Permalink, TS,
@@ -44,12 +46,18 @@ response is bounded by ``max_response_bytes`` anyway, we count exactly on
 the driver (a strict refinement of the HLL estimate at zero extra Spark
 jobs; the unbounded-data cardinality operators live in operators/sketch).
 
-Response-size guard (web/query.go:265–273 + 229–233): each result is one
-Spark job (``engine.collect_rows``) whose rows are unpickled lazily under a
-running byte estimate, so Python never holds more than the cap (the JVM
-holds the result, bounded by ``spark.driver.maxResultSize``); the final
+Response-size guard (web/query.go:265–273 + 229–233): each result is read
+by ``engine.collect_rows`` under a running byte estimate, and the final
 gzipped payload is checked against ``max_response_bytes``; overflow fails
-the entry loudly.
+the entry loudly. A first read is one Spark job whose rows are unpickled
+lazily, so Python never holds more than the cap (the JVM holds the
+result, bounded by ``spark.driver.maxResultSize``). The engine keeps a
+plan-cache entry's complete result rows until the next table-state
+mutation (the Spark analog of the reference answering a repeated query
+from its cache, web/query.go:168–215), so a repeated cacheable statement
+over ``/query``, ``/run``, ``/immediate`` or RPC runs no Spark job; held
+rows pass the same guard, so a server with a smaller cap still refuses
+them.
 
 Pending requests wait on their entry's ``done`` event, so a result is
 answered as soon as it is ready; a request still pending after its timeout
@@ -71,7 +79,7 @@ from dataclasses import dataclass, field
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
 
-from zenodb_spark.engine import DB, collect_rows, json_value, memory_guard
+from zenodb_spark.engine import DB, collect_rows, json_value, memory_guard, row_bytes
 
 STATUS_PENDING = 0
 STATUS_SUCCESS = 1
@@ -405,11 +413,7 @@ def collect_guarded(df, max_response_bytes: int, columns=None):
     with closing(collect_rows(df)) as result:
         for row in result:
             vals = [row[c] for c in cols]
-            for v in vals:
-                if isinstance(v, str):
-                    est += len(v)
-                else:
-                    est += 8
+            est += row_bytes(vals)
             rows.append(vals)
             if est > max_response_bytes:
                 raise ResponseTooLarge(
@@ -660,7 +664,9 @@ class _Handler(BaseHTTPRequestHandler):
                 streams.append(s.progress())
             except Exception:
                 streams.append({"active": True})
-        self._reply(200, {"tables": tables, "streams": streams})
+        self._reply(
+            200, {"tables": tables, "streams": streams, "engine": self.db.cache_stats()}
+        )
 
     # -- routing ------------------------------------------------------------
     def do_POST(self) -> None:
