@@ -300,6 +300,68 @@ class TestShare:
         assert self._checkpointed(derived, util.share(derived, source=src))
 
 
+class TestShareModes:
+    """share(mode="eager") checkpoints with one job at the call,
+    mode="lazy" with none; neither probes files, and every checkpoint is
+    labelled with the function that asked for it."""
+
+    @staticmethod
+    def _jobs(spark, fn):
+        """Run ``fn`` under a fresh job group; return (result, job ids the
+        status tracker saw in that group)."""
+        import uuid
+
+        sc = spark.sparkContext
+        group = f"share-mode-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "share mode test")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    @staticmethod
+    def _no_probe(monkeypatch):
+        from zenodb_spark.operators import util
+
+        def probed(*a):
+            raise AssertionError("eager/lazy share must not probe files")
+
+        monkeypatch.setattr(util, "_scan_files", probed)
+        monkeypatch.setattr(util, "_file_bytes", probed)
+
+    @pytest.mark.parametrize("mode, jobs", [("lazy", 0), ("eager", 1)])
+    def test_jobs_at_the_call(self, spark, monkeypatch, mode, jobs):
+        from zenodb_spark.operators.util import share
+
+        self._no_probe(monkeypatch)
+        df = spark.range(100).select((F.col("id") * 2).alias("y"))
+        out, seen = self._jobs(spark, lambda: share(df, mode=mode))
+        assert len(seen) == jobs, seen
+        assert TestShare._checkpointed(df, out)
+        assert sorted(r["y"] for r in out.collect()) == [2 * i for i in range(100)]
+
+    def test_label_is_the_creation_site(self, spark):
+        from zenodb_spark.operators.util import share
+
+        sc = spark.sparkContext
+        before = sc.getLocalProperty("callSite.short")
+        out = share(spark.range(10), mode="lazy")
+        rdd = out._jdf.queryExecution().analyzed().rdd()
+        assert rdd.getCreationSite().endswith(
+            "test_operators.test_label_is_the_creation_site"
+        ), rdd.getCreationSite()
+        assert sc.getLocalProperty("callSite.short") == before
+
+    def test_unknown_mode_raises(self, spark):
+        from zenodb_spark.operators.util import share
+
+        with pytest.raises(ValueError):
+            share(spark.range(3), mode="sometimes")
+
+
 class TestSpread:
     """spread() repartitions a frame with fewer scan files than the cluster
     has cores; a failed file probe counts as under-partitioned."""

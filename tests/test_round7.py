@@ -210,11 +210,34 @@ class TestNoPersistLeak:
 
 
 class TestStarConnectedComponents:
-    """Large-star/small-star CC (Kiveris et al.): same labels as min-label
-    propagation on random graphs, O(log n) rounds on a chain adversary."""
+    """Large-star/small-star CC (Kiveris et al.): the same labels as a plain
+    Python component search on random graphs, O(log n) rounds on a chain
+    adversary."""
 
     def _labels(self, df):
         return sorted((r["node"], r["lab"]) for r in df.collect())
+
+    @staticmethod
+    def _reference(edges):
+        """(node, min node of its component) for every non-isolated node,
+        by depth-first search over the undirected edge list."""
+        adj: dict = {}
+        for a, b in edges:
+            if a != b:
+                adj.setdefault(a, set()).add(b)
+                adj.setdefault(b, set()).add(a)
+        labels = {}
+        for start in adj:
+            if start in labels:
+                continue
+            comp, stack = {start}, [start]
+            while stack:
+                for nb in adj[stack.pop()] - comp:
+                    comp.add(nb)
+                    stack.append(nb)
+            for x in comp:
+                labels[x] = min(comp)
+        return sorted(labels.items())
 
     @staticmethod
     def _distributed(monkeypatch, edges, **kw):
@@ -226,26 +249,30 @@ class TestStarConnectedComponents:
             m.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
             return dedup.connected_components(edges, **kw)
 
-    def test_matches_minlabel_on_random_graphs(self, spark):
+    def test_matches_reference_on_random_graphs(self, spark, monkeypatch):
+        """Both the driver fast lane and the forced-distributed star rounds
+        label every node with its component's minimum id."""
         from zenodb_spark.operators.dedup import connected_components
 
         rng = random.Random(1234)
         for trial in range(4):
             n = 60
-            edges = [
-                Row(doc_a=rng.randrange(n), doc_b=rng.randrange(n))
-                for _ in range(40 + trial * 25)
+            pairs = [
+                (rng.randrange(n), rng.randrange(n)) for _ in range(40 + trial * 25)
             ]
-            e = spark.createDataFrame(edges).filter("doc_a != doc_b")
-            star = connected_components(e, algorithm="star")
-            minl = connected_components(e, algorithm="minlabel")
-            assert self._labels(star) == self._labels(minl), f"trial {trial}"
+            want = self._reference(pairs)
+            e = spark.createDataFrame(
+                [Row(doc_a=a, doc_b=b) for a, b in pairs]
+            ).filter("doc_a != doc_b")
+            assert self._labels(connected_components(e)) == want, f"trial {trial}"
+            dist = self._distributed(monkeypatch, e)
+            assert self._labels(dist) == want, f"trial {trial}"
 
     def test_chain_adversary_converges_in_log_rounds(self, spark, monkeypatch):
         from zenodb_spark.operators.dedup import connected_components
 
-        # a 200-node chain: diameter 199. min-label needs ~diameter rounds
-        # (capped by max_iter); star must finish in O(log n).
+        # a 200-node chain: diameter 199. Label propagation would need
+        # ~diameter rounds; star must finish in O(log n).
         chain = spark.createDataFrame(
             [Row(doc_a=i, doc_b=i + 1) for i in range(199)]
         )
@@ -253,23 +280,10 @@ class TestStarConnectedComponents:
         # the distributed star rounds: this test is about the distributed
         # algorithm's convergence bound, which the small-graph driver fast
         # lane would otherwise bypass (rounds=0)
-        out = self._distributed(
-            monkeypatch, chain, algorithm="star", max_iter=30, stats=st
-        )
+        out = self._distributed(monkeypatch, chain, max_iter=30, stats=st)
         labs = self._labels(out)
         assert labs == [(i, 0) for i in range(200)]
         assert st["rounds"] <= 12, st  # log2(200) ~ 7.6 + slack
-
-        st2 = {}
-        # min-label on a short chain (20 nodes) to keep the test fast:
-        # rounds scale with diameter
-        short = spark.createDataFrame(
-            [Row(doc_a=i, doc_b=i + 1) for i in range(19)]
-        )
-        connected_components(short, algorithm="minlabel", stats=st2)
-        st3 = {}
-        self._distributed(monkeypatch, short, algorithm="star", stats=st3)
-        assert st3["rounds"] < st2["rounds"], (st3, st2)
 
     def test_driver_fast_lane_matches_distributed(self, spark, monkeypatch):
         """The small-graph driver union-find must produce labels identical
@@ -316,7 +330,7 @@ class TestStarConnectedComponents:
                 Row(doc_a=21, doc_b=22),
             ]
         )
-        out = self._labels(connected_components(e, algorithm="star"))
+        out = self._labels(connected_components(e))
         assert out == [(3, 3), (5, 3), (9, 3), (20, 20), (21, 20), (22, 20)]
 
 

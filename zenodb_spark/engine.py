@@ -520,6 +520,49 @@ class Table:
             out = out.filter(F.col(BUCKET_COL) >= F.lit(cutoff))
         return _in_window(out, asof, until)
 
+    def ingest_batch(self, batch_df: DataFrame, batch_id: int, ts_col: str = "ts") -> None:
+        """Fold one streaming micro-batch into stored state, exactly-once
+        under checkpoint replay.
+
+        A crash after the stream_part parquet write but before the
+        checkpoint commit re-delivers this batch_id on restart. The ledger
+        (``_stream_seen``) records every stream-part path: a replayed batch
+        REPLACES its existing slot in ``_parts`` (which ``_load_persisted``
+        may already have re-opened from disk), and a batch whose part was
+        folded into main by ``compact()`` is skipped entirely — so no path
+        double-counts. Without a workdir there is no ledger: each batch is
+        a new part."""
+        if batch_df.isEmpty():
+            return
+        sub = f"stream_part={batch_id}"
+        path = f"{self.db.workdir}/{self.tdef.name}/{sub}" if self.db.workdir else None
+        slot = self._stream_seen.get(path, len(self._parts))
+        if slot is None:
+            return  # already compacted into main
+        self.ingest(batch_df, ts_col)
+        part = self._hold(self._parts.pop(), sub)
+        if slot < len(self._parts):
+            self._parts[slot] = part
+        else:
+            self._parts.append(part)
+        if path is not None:
+            self._stream_seen[path] = slot
+        self.db._invalidate_plans()
+
+    def _hold(self, df: DataFrame, sub: str) -> DataFrame:
+        """Materialize a part the table keeps. With a workdir the part is
+        written day-partitioned to ``workdir/{table}/{sub}`` and reopened;
+        without one it is persisted memory-and-disk and counted, because a
+        micro-batch or a folded union is not re-computable once its
+        sources are released. The engine's one ``persist``: every cache
+        entry it makes belongs to a part in ``_parts``, which ``fold``
+        unpersists when it replaces it."""
+        if self.db.workdir:
+            return self._write_store(df, f"{self.db.workdir}/{self.tdef.name}/{sub}")
+        held = df.persist(StorageLevel.MEMORY_AND_DISK)
+        held.count()
+        return held
+
     def _write_store(self, df: DataFrame, path: str) -> DataFrame:
         """Write a state part day-partitioned and reopen it (retention →
         partition drop; ASOF/UNTIL → partition pruning).
@@ -585,25 +628,21 @@ class Table:
             )
         else:
             merged = old_parts[0]
+        # consolidated store lives under main/ — sibling stream_part=N
+        # dirs keep their own partition discovery separate
+        merged = self._hold(merged, "main")
         if self.db.workdir:
-            # consolidated store lives under main/ — sibling stream_part=N
-            # dirs keep their own partition discovery separate
-            path = f"{self.db.workdir}/{self.tdef.name}/main"
-            merged = self._write_store(merged, path)
             base = f"{self.db.workdir}/{self.tdef.name}"
             for sub in os.listdir(base):
                 if sub.startswith("stream_part="):
                     shutil.rmtree(f"{base}/{sub}", ignore_errors=True)
-        else:
-            merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
-            merged.count()  # materialize BEFORE releasing the sources
         # Unpersist-discipline (round-4 verdict item 7): the folded stream
-        # parts were persisted per micro-batch (ingest.py) and the previous
+        # parts were held per micro-batch (ingest_batch) and the previous
         # compact's merged part may itself be persisted — dropping the
         # references without unpersisting leaks CacheManager entries for
-        # the life of the session. merged is materialized above (parquet
-        # write or count), so releasing its sources cannot trigger a
-        # recompute of freed lineage.
+        # the life of the session. merged is materialized above, so
+        # releasing its sources cannot trigger a recompute of freed
+        # lineage.
         for p in old_parts:
             if p is not merged:
                 try:

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from zenodb_spark.operators.util import spread
+from zenodb_spark.operators.util import share, spread
 
 __all__ = ["normalize_text", "exact_dedup", "dedup_apply", "shingles", "ngram_jaccard_pairs", "ngram_jaccard_pairs_prefix", "ngram_jaccard_pairs_count", "ngram_jaccard_pairs_auto", "minhash_signatures", "minhash_lsh_pairs", "simhash", "simhash_pairs", "containment_pairs", "containment_pairs_count"]
 
@@ -190,21 +190,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def _shared_fingerprint_arrays(
-    df: DataFrame, text_col: str, id_col: str, n: int
-) -> DataFrame:
-    """Fingerprinted shingle arrays shared by several plan branches, lazily
-    localCheckpointed. No size-filter: shingle_arrays guarantees nonempty
-    arrays, and re-filtering would push the shingle expr below the exchange.
-    localCheckpoint, NOT persist: a persist on a frame returned lazily can
-    never be unpersisted by the operator, so long driver sessions leak
-    CacheManager entries; checkpoint blocks are freed by the ContextCleaner
-    once the frame is garbage collected (same fix as operators/prefix.py)."""
-    return shingle_arrays(df, text_col, id_col, n, fingerprint=True).localCheckpoint(
-        eager=False
-    )
-
-
 def ngram_jaccard_pairs_prefix(
     df: DataFrame,
     text_col: str,
@@ -226,7 +211,7 @@ def ngram_jaccard_pairs_prefix(
     stay short, while the hot shingles that dominate full-index cost land in
     the un-indexed suffix of almost every doc. Candidates then pass a length
     filter (min(sz) >= t*max(sz)) and are verified exactly with
-    ``array_intersect`` over the persisted per-doc shingle arrays.
+    ``array_intersect`` over the checkpointed per-doc shingle arrays.
 
     Scale shape: more shuffles than the capped inverted index (df count,
     rank-by-doc, prefix postings, pair distinct, two verify joins) but every
@@ -236,7 +221,9 @@ def ngram_jaccard_pairs_prefix(
     WWW'08).
     """
     if arrays is None:
-        arrays = _shared_fingerprint_arrays(df, text_col, id_col, n)
+        arrays = share(
+            shingle_arrays(df, text_col, id_col, n, fingerprint=True), mode="lazy"
+        )
     sh = arrays.select(
         "doc", F.size("shingles").alias("sz"), F.explode("shingles").alias("shingle")
     )
@@ -597,7 +584,9 @@ def ngram_jaccard_pairs_pairtoken(
     if K is None or small_max is None:
         raise ValueError("pairtoken requires planner-provided K and small_max")
     if arrays is None:
-        arrays = _shared_fingerprint_arrays(df, text_col, id_col, n)
+        arrays = share(
+            shingle_arrays(df, text_col, id_col, n, fingerprint=True), mode="lazy"
+        )
     sh = arrays.select(
         "doc", F.size("shingles").alias("sz"), F.explode("shingles").alias("s")
     )
@@ -641,7 +630,9 @@ def containment_pairs_pairtoken(
     if K is None or small_max is None:
         raise ValueError("pairtoken requires planner-provided K and small_max")
     if arrays is None:
-        arrays = _shared_fingerprint_arrays(df, text_col, id_col, n)
+        arrays = share(
+            shingle_arrays(df, text_col, id_col, n, fingerprint=True), mode="lazy"
+        )
     sh = arrays.select(
         "doc", F.size("shingles").alias("sz"), F.explode("shingles").alias("s")
     )
@@ -750,7 +741,7 @@ TOKVOL_SAMPLE = 16
 class _ExactJoinPlan:
     """Everything _plan_exact_join decided AND materialized, so executors
     re-use the probe's work instead of re-deriving it: ``arrays`` is the
-    eager localCheckpoint of the fingerprinted shingle arrays (every mode
+    shared checkpoint of the fingerprinted shingle arrays (every mode
     needs it), ``segarr`` the segment arrays (pairtoken token channel),
     ``pack_ok`` the packed-row guard verdict."""
 
@@ -777,7 +768,7 @@ def _plan_exact_join(
     probe and materialized the full pair-token emission — 35 s of a 78 s
     query at sf1.0; this one is ~5 s on the same corpus):
 
-    * the shingle arrays are eager-localCheckpointed ONCE and shared by
+    * the shingle arrays are checkpointed ONCE and shared by
       every probe AND by the chosen executor;
     * emission is computed ANALYTICALLY as Σ C(segment_size, 2) from the
       segment arrays — no pair explode;
@@ -802,8 +793,8 @@ def _plan_exact_join(
     # arrays, so one job both tokenizes the corpus into checkpoint blocks
     # and returns the size quantile (an eager checkpoint + separate
     # quantile action would scan the corpus twice)
-    arrays = shingle_arrays(df, text_col, id_col, n, fingerprint=True).localCheckpoint(
-        eager=False
+    arrays = share(
+        shingle_arrays(df, text_col, id_col, n, fingerprint=True), mode="lazy"
     )
     quant = arrays.select(F.size("shingles").alias("sz")).approxQuantile(
         "sz", [0.05], 0.01
@@ -870,7 +861,7 @@ def _plan_exact_join(
             # percentile + 1-row crossJoin - the broadcast attach taxes
             # every exploded shingle row, costing more than the job it
             # saves.)
-            segarr = _segment_arrays(token_side, K, 0).localCheckpoint(eager=True)
+            segarr = share(_segment_arrays(token_side, K, 0), mode="eager")
             em_agg = segarr.agg(
                 F.coalesce(
                     F.sum(
@@ -1062,16 +1053,11 @@ def minhash_lsh_pairs(
     """
     rows_per_band = num_hashes // bands
     # the shingle set feeds three plan branches (signatures + both sides of
-    # the verification join); persist the per-doc ARRAYS once (1 row/doc —
-    # far smaller than the exploded postings), memory-and-disk so it spills
-    # rather than recomputing the tokenization 3× at scale
-    arrays = (
-        shingle_arrays(df, text_col, id_col, n)
-        # no size-filter here: shingle_arrays guarantees nonempty arrays.
-        # localCheckpoint, not persist — leak-free shared materialization
-        # (see _shared_fingerprint_arrays)
-        .localCheckpoint(eager=False)
-    )
+    # the verification join); checkpoint the per-doc ARRAYS once (1 row/doc —
+    # far smaller than the exploded postings) rather than recomputing the
+    # tokenization 3× at scale. No size-filter: shingle_arrays guarantees
+    # nonempty arrays.
+    arrays = share(shingle_arrays(df, text_col, id_col, n), mode="lazy")
     # signatures straight off the array, NO groupBy shuffle. Hash family is
     # Carter–Wegman over ONE md5 per shingle: h_i(s) = (h1(s) + i·h2(s))
     # mod P with h1/h2 = two 32-bit halves of md5(s) — pairwise-independent,
@@ -1111,7 +1097,7 @@ def minhash_lsh_pairs(
         )
         .distinct()
     )
-    # exact verification over the persisted per-doc shingle ARRAYS: join the
+    # exact verification over the checkpointed per-doc shingle ARRAYS: join the
     # candidate pairs to one array per side and intersect in-row. This keeps
     # the verify cost O(candidates · array-size) with two narrow hash joins,
     # instead of re-exploding EVERY posting on both sides and shuffling the
@@ -1259,30 +1245,19 @@ def connected_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 25,
-    algorithm: str = "star",
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components over a near-dup pair graph. Returns one row per
     node: (node, lab) where lab is the component's min node id.
 
-    ``algorithm="star"`` (default): alternating large-star / small-star
-    (Kiveris et al., *Connected Components in MapReduce and Beyond*,
-    SoCC'14) — converges in O(log n) rounds on ANY graph shape, so a
-    pathological chain-shaped duplicate graph (diameter ~n) costs log
-    rounds, not n. ``algorithm="minlabel"`` keeps the previous min-label
-    propagation (O(diameter) rounds; marginally cheaper per round on the
-    shallow graphs near-dup corpora actually produce) and is retained as
-    the property-test cross-check. ``stats``, if given, receives
-    ``{"rounds": n}`` for round-count assertions.
-
-    The star path takes a driver-side union-find for small graphs (see
-    ``_cc_star``, gated by ``CC_DRIVER_MAX_EDGES`` and
-    ``CC_DRIVER_MAX_BYTES``)."""
-    if algorithm == "star":
-        return _cc_star(edges, a_col, b_col, max_iter, stats)
-    if algorithm == "minlabel":
-        return _cc_minlabel(edges, a_col, b_col, max_iter, stats)
-    raise ValueError(f"unknown connected-components algorithm {algorithm!r}")
+    Alternating large-star / small-star rounds (Kiveris et al., *Connected
+    Components in MapReduce and Beyond*, SoCC'14) converge in O(log n)
+    rounds on ANY graph shape, so a pathological chain-shaped duplicate
+    graph (diameter ~n) costs log rounds, not n; small graphs take a
+    driver-side union-find instead (see ``_cc_star``, gated by
+    ``CC_DRIVER_MAX_EDGES`` and ``CC_DRIVER_MAX_BYTES``). ``stats``, if
+    given, receives ``{"rounds": n}`` for round-count assertions."""
+    return _cc_star(edges, a_col, b_col, max_iter, stats)
 
 
 def _cc_star(
@@ -1310,8 +1285,7 @@ def _cc_star(
     overflow-proof at any id magnitude) per round, confirmed by an exact
     ``exceptAll`` emptiness check only when the signature stops moving, so
     a signature collision can never end the loop early. Lineage is
-    truncated per round with localCheckpoint (freed by the ContextCleaner,
-    not pinned in the CacheManager).
+    truncated per round with an eager ``share``.
 
     Small-graph fast lane (round 6, measured): each distributed round is
     ~8 scheduled jobs (two star shuffles, an eager checkpoint, a signature
@@ -1334,16 +1308,16 @@ def _cc_star(
     # eager checkpoint, measured choice (round 6): a lazy checkpoint whose
     # blocks materialize under the signature aggregate was 2× SLOWER here —
     # the per-round frame is consumed by several downstream jobs and the
-    # lazy variant re-ran upstream stages — so the explicit materrialize-
+    # lazy variant re-ran upstream stages — so the explicit materialize-
     # then-aggregate two-job shape stays
-    e = (
+    e = share(
         edges.select(
             F.greatest(F.col(a_col), F.col(b_col)).alias("a"),
             F.least(F.col(a_col), F.col(b_col)).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        mode="eager",
     )
     # isolated self-pair nodes (a==b only) would vanish here; near-dup edge
     # lists don't produce them, and dedup_clusters unions labels over the
@@ -1400,14 +1374,14 @@ def _cc_star(
         # -- small-star ---------------------------------------------------
         # ls edges are already oriented (a > b)
         smins = ls.groupBy("a").agg(F.min("b").alias("m"))
-        e_new = (
+        e_new = share(
             ls.join(smins, "a")
             .select(F.col("b").alias("x"), F.col("m"))
             .filter(F.col("x") != F.col("m"))
             .unionByName(smins.select(F.col("a").alias("x"), F.col("m")))
             .select(F.col("x").alias("a"), F.col("m").alias("b"))
-            .distinct()
-            .localCheckpoint()
+            .distinct(),
+            mode="eager",
         )
         sig, _ = _sig(e_new)
         if sig == prev_sig and e_new.exceptAll(e).union(e.exceptAll(e_new)).isEmpty():
@@ -1429,7 +1403,7 @@ def _cc_union_find_driver(e: DataFrame) -> DataFrame:
     """Label a collected (a, b) edge list with union-find, root = component
     min (see the `_cc_star` fast-lane docstring for the equivalence
     argument). `e` is the canonical edge frame: a > b, deduped, already
-    localCheckpoint-materialized, so the collect reads blocks, not lineage.
+    checkpoint-materialized, so the collect reads blocks, not lineage.
     Output schema matches the distributed path: (node, lab) in the edge
     columns' own type."""
     parent: dict = {}
@@ -1460,81 +1434,6 @@ def _cc_union_find_driver(e: DataFrame) -> DataFrame:
         [T.StructField("node", dtype, True), T.StructField("lab", dtype, True)]
     )
     return e.sparkSession.createDataFrame(out, schema)
-
-
-def _cc_minlabel(
-    edges: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 25,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Connected components over a near-dup pair graph by min-label
-    propagation: every node converges to the smallest node id reachable
-    from it, which becomes the cluster id.
-
-    Scale shape: per round, one equi-join (labels onto the symmetrized edge
-    list) + one min-groupBy, both partitioned by node id — the same
-    hash-partitioning reused round to round, no global structure on the
-    driver. Rounds needed = graph diameter (near-dup clusters are shallow:
-    almost always <= 3-4). Lineage is truncated every round with
-    localCheckpoint so the plan does not grow with iterations; convergence
-    is detected by counting label changes (an O(nodes) check, not a
-    collect of the labels)."""
-    # symmetrize with ONE pass over the edge list (explode, not
-    # union-of-reversed: a union would materialize the upstream pair join
-    # twice), and pre-hash by src so the per-round propagation join reads
-    # the persisted side exchange-free — each round shuffles only the
-    # (much smaller) label frame
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(a_col).alias("src"), F.col(b_col).alias("dst")),
-                    F.struct(F.col(b_col).alias("src"), F.col(a_col).alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .repartition("src")
-        .persist()
-    )
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("lab", F.col("node"))
-        .localCheckpoint()
-    )
-    # labels only ever decrease, so Σlab strictly decreases until the
-    # fixpoint: one cheap aggregate per round detects convergence — no
-    # old-vs-new join, no extra shuffle. (Σ over DECIMAL so the check
-    # cannot overflow however large the id space.)
-    def _sig(lbl: DataFrame):
-        return lbl.agg(
-            F.sum(F.col("lab").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-
-    prev_sig = _sig(labels)
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        prop = sym.join(labels, sym.src == labels.node).select(
-            F.col("dst").alias("node"), F.col("lab")
-        )
-        labels = (
-            labels.unionByName(prop)
-            .groupBy("node")
-            .agg(F.min("lab").alias("lab"))
-            .localCheckpoint()
-        )
-        sig = _sig(labels)
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    sym.unpersist()
-    if stats is not None:
-        stats["rounds"] = rounds
-    return labels
 
 
 def dedup_clusters(
@@ -1683,7 +1582,9 @@ def containment_pairs(
         )
 
     if arrays is None:
-        arrays = _shared_fingerprint_arrays(df, text_col, id_col, n)
+        arrays = share(
+            shingle_arrays(df, text_col, id_col, n, fingerprint=True), mode="lazy"
+        )
     sh = arrays.select(
         "doc", F.size("shingles").alias("sz"), F.explode("shingles").alias("shingle")
     )

@@ -114,16 +114,19 @@ def paragraph_dedup(
     # pruned by either consumer, so the duplicate compute is fully paid at
     # ANY scale — round-7 interleaved A/B kept the checkpoint a local win
     # (0.82 vs 1.13 s at sf0.1, min-of-5 ×2 sessions)
-    d = d.select(
-        "doc",
-        F.col("cidx").cast("long").alias("cidx"),
-        F.array_join(
-            F.slice(F.col("toks"), F.col("start") + 1, chunk_tokens), " "
-        ).alias("chunk"),
-        F.md5(
-            F.array_join(F.slice(F.col("toks"), F.col("start") + 1, chunk_tokens), " ")
-        ).alias("h"),
-    ).localCheckpoint(eager=True)
+    d = share(
+        d.select(
+            "doc",
+            F.col("cidx").cast("long").alias("cidx"),
+            F.array_join(
+                F.slice(F.col("toks"), F.col("start") + 1, chunk_tokens), " "
+            ).alias("chunk"),
+            F.md5(
+                F.array_join(F.slice(F.col("toks"), F.col("start") + 1, chunk_tokens), " ")
+            ).alias("h"),
+        ),
+        mode="eager",
+    )
     firsts = d.groupBy("h").agg(F.min(F.struct("doc", "cidx")).alias("first"))
     d = d.join(firsts, "h")
     is_first = (F.col("doc") == F.col("first.doc")) & (

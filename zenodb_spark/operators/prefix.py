@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from zenodb_spark.operators.util import share
+
 
 def running_total(
     df: DataFrame,
@@ -40,16 +42,10 @@ def running_total(
     # branches can disagree on row→partition assignment and the offsets
     # then correct the wrong rows (observed at sf0.1: ±30-part drift in
     # the Pareto classes). One materialized subtree = one shuffle = one
-    # set of boundaries. localCheckpoint rather than persist(): a persist
-    # is pinned in the CacheManager until an explicit unpersist that no
-    # caller of a lazily-returned frame can place, so long driver sessions
-    # leaked MEMORY_AND_DISK entries; checkpoint blocks are released by
-    # the ContextCleaner as soon as the returned frame is garbage
-    # collected.
-    ranged = (
-        df.repartitionByRange(n, *order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+    # set of boundaries.
+    ranged = share(
+        df.repartitionByRange(n, *order_cols).withColumn("__pid", F.spark_partition_id()),
+        mode="lazy",
     )
     local_w = (
         Window.partitionBy("__pid")

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from zenodb_spark.operators.dedup import normalize_text
-from zenodb_spark.operators.util import spread
+from zenodb_spark.operators.util import share, spread
 
 
 # regime planner bounds for bm25_topk's dense fast path
@@ -79,11 +79,9 @@ def bm25_topk(
         # the scoring action then computes again (within ONE action
         # Catalyst's ReusedExchange dedupes the tf shuffle; across actions
         # nothing does — measured ~1.7× on q64 at sf0.1). A lazy
-        # localCheckpoint materializes tf once, on the estimate action,
-        # and the scoring action reads the checkpointed blocks; blocks are
-        # released by the ContextCleaner when the frame is collected, so
-        # no CacheManager pin leaks from this lazily-consumed helper.
-        tf = tf.localCheckpoint(eager=False)
+        # checkpoint materializes tf once, on the estimate action, and the
+        # scoring action reads the checkpointed blocks.
+        tf = share(tf, mode="lazy")
     dl = tf.groupBy("doc").agg(F.sum("tf").alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),

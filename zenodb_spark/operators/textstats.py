@@ -227,7 +227,7 @@ def unigram_logprob(
     doc_tok feeds three consumers (frequency table, total, final join)
     whose column pruning differs, so Catalyst cannot stage-reuse the
     exchange and the corpus was scanned + exploded 3× (measured plan,
-    round 6); an eager localCheckpoint materializes the doc-token counts
+    round 6); a ``share`` checkpoint materializes the doc-token counts
     once and every consumer reads the blocks.
     """
     from zenodb_spark.operators.dedup import normalize_text

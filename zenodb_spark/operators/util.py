@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 import os
+import sys
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame
@@ -75,6 +76,9 @@ CHECKPOINT_MIN_BYTES = 3 * 1024 * 1024
 # stat'ing each file: checkpointing data this size is at worst a small
 # fixed cost, while per-file driver-side stats are not.
 _CKPT_MANY_FILES = 64
+# Spark's short call-site property: RDDs made while it is set take it as
+# their creation site (the UI's job and storage names)
+_CALL_SITE = "callSite.short"
 
 
 def _scan_files(df: DataFrame) -> list[str]:
@@ -98,28 +102,60 @@ def _file_bytes(spark, uri: str) -> int:
     return fs.getFileStatus(jpath).getLen()
 
 
-def share(df: DataFrame, source: DataFrame | None = None) -> DataFrame:
-    """Materialize a shared multi-consumer subtree with an eager
-    ``localCheckpoint`` unless its scan input is provably small. Consumers
-    see identical rows either way; only the number of scans changes.
+def share(df: DataFrame, source: DataFrame | None = None, mode: str = "gated") -> DataFrame:
+    """Materialize a shared multi-consumer subtree as a ``localCheckpoint``
+    — the engine's one checkpoint call. Consumers see identical rows
+    whichever way it goes; only the number of scans changes.
 
-    The input is sized on ``source`` (default ``df``): its scan files are
-    summed against :data:`CHECKPOINT_MIN_BYTES`, and 64+ files count as big
-    without stat'ing. Every unknown fails toward checkpointing — the choice
-    that is at worst a small fixed cost, where skipping it re-scans a big
-    input once per consumer: a failed probe or stat, and a sized frame with
-    no scan files. A subtree derived from another checkpoint reports no
-    files of its own, so such callers pass the raw scan as ``source``."""
-    src = df if source is None else source
-    files = _scan_files(src)
-    if 0 < len(files) < _CKPT_MANY_FILES:
-        try:
-            size = sum(_file_bytes(src.sparkSession, u) for u in files)
-            if size < CHECKPOINT_MIN_BYTES:
-                return df
-        except Exception:
-            pass
-    return df.localCheckpoint(eager=True)
+    ``mode`` picks when to checkpoint:
+
+    * ``"gated"`` (default): checkpoint eagerly unless the scan input is
+      provably small. The input is sized on ``source`` (default ``df``):
+      its scan files are summed against :data:`CHECKPOINT_MIN_BYTES`, and
+      64+ files count as big without stat'ing. Every unknown fails toward
+      checkpointing — the choice that is at worst a small fixed cost, where
+      skipping it re-scans a big input once per consumer: a failed probe or
+      stat, and a sized frame with no scan files. A subtree derived from
+      another checkpoint reports no files of its own, so such callers pass
+      the raw scan as ``source``.
+    * ``"eager"``: always checkpoint, with one job at the call (sites where
+      a measurement showed the recompute is paid at any scale, or a loop
+      must cut its lineage each round).
+    * ``"lazy"``: always checkpoint, with no job at the call; the first
+      action over the result writes the blocks while it computes.
+
+    Neither ``"eager"`` nor ``"lazy"`` probes files.
+
+    Why a local checkpoint and never ``persist``: a helper returns its
+    frame lazily, so no caller can place the ``unpersist`` a persist
+    needs, and each call would pin a CacheManager entry for the life of
+    the session. Checkpoint blocks are released by the ContextCleaner once
+    the returned frame is garbage collected.
+
+    The checkpoint RDD's creation site names the caller
+    (``module.function``), so a leaked block or a slow job points at the
+    site that made it."""
+    if mode == "gated":
+        src = df if source is None else source
+        files = _scan_files(src)
+        if 0 < len(files) < _CKPT_MANY_FILES:
+            try:
+                size = sum(_file_bytes(src.sparkSession, u) for u in files)
+                if size < CHECKPOINT_MIN_BYTES:
+                    return df
+            except Exception:
+                pass
+    elif mode not in ("eager", "lazy"):
+        raise ValueError(f"unknown share mode {mode!r}")
+    caller = sys._getframe(1)
+    label = f"{caller.f_globals.get('__name__', '?')}.{caller.f_code.co_name}"
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty(_CALL_SITE)
+    sc.setLocalProperty(_CALL_SITE, label)
+    try:
+        return df.localCheckpoint(eager=mode != "lazy")
+    finally:
+        sc.setLocalProperty(_CALL_SITE, prev)
 
 
 def spread(df: DataFrame) -> DataFrame:

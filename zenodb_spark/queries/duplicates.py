@@ -1187,9 +1187,7 @@ def q190_lsh_band_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays — the q25 verify shape, never an all-pairs pass."""
 
     docs = load_table(spark, sf_dir, "documents")
-    # localCheckpoint, not persist: a lazily returned persisted frame stays
-    # in the session cache forever (see dedup._shared_fingerprint_arrays)
-    arrays = dedup.shingle_arrays(docs, "text", "doc_id", 3).localCheckpoint(eager=False)
+    arrays = share(dedup.shingle_arrays(docs, "text", "doc_id", 3), mode="lazy")
     sh = arrays.select("doc", F.explode("shingles").alias("shingle"))
     sig = dedup.minhash_signatures(sh, num_hashes=16)
     band_structs = []

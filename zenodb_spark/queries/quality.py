@@ -1717,9 +1717,8 @@ def q230_hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).alias("tf"))
     # four consumers (dsq, centroids, csq via centroids, cross-term) would
     # otherwise each re-plan the tokenize+explode subtree — one corpus scan
-    # apiece at 100 TB; checkpoint the hashed-TF frame once (lazy: blocks
-    # freed by the ContextCleaner when the result frame is dropped)
-    tf = tf.localCheckpoint(eager=False)
+    # apiece at 100 TB; checkpoint the hashed-TF frame once
+    tf = share(tf, mode="lazy")
     dsq = tf.groupBy("doc", "source").agg(
         F.sum(F.col("tf") * F.col("tf")).alias("tfsq")
     )

@@ -1346,10 +1346,7 @@ def q155_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
              .alias("w"))
     )
     ow = edges.groupBy("src").agg(F.sum("w").alias("outw"))
-    # localCheckpoint (not persist): released by the ContextCleaner when
-    # the returned frame is dropped — a persist here leaked a cache entry
-    # per query invocation over a long driver session
-    e = edges.join(ow, "src").localCheckpoint(eager=False)
+    e = share(edges.join(ow, "src"), mode="lazy")
     nodes = n.select(F.col("n_name").alias("node"))
     r = nodes.withColumn("pr", F.lit(1.0) / F.lit(25.0))
     for _ in range(4):
@@ -1642,13 +1639,11 @@ def q171_trade_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias("w"))
     )
     stats = e0.agg(F.sum("w").alias("tw"), F.count(F.lit(1)).alias("ne"))
-    edges = (
+    edges = share(
         e0.crossJoin(F.broadcast(stats))
         .filter(F.col("w") * F.col("ne") >= F.col("tw"))
-        .select("a", "b")
-        # localCheckpoint (not persist): ContextCleaner frees the blocks
-        # when the result frame is GC'd; persist leaked per invocation
-        .localCheckpoint(eager=False)
+        .select("a", "b"),
+        mode="lazy",
     )
     e1 = edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = edges.select(F.col("a").alias("y"), F.col("b").alias("z"))

@@ -467,18 +467,22 @@ def q72_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows — nothing prunes — so the duplicate explode is paid at any
     # scale; round-7 interleaved A/B kept this a local win too (1.17 vs
     # 1.31 s at sf0.1, min-of-5, consistent across two sessions)
-    pairs = t.filter(n >= 2).select(
-        "doc",
-        F.explode(
-            F.zip_with(
-                F.slice("toks", 1, n - 1),
-                F.slice("toks", 2, n - 1),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("p"),
-    ).select("doc", "p.w1", "p.w2").filter(
-        (F.length("w1") > 0) & (F.length("w2") > 0)
-    ).localCheckpoint(eager=True)
+    pairs = share(
+        t.filter(n >= 2)
+        .select(
+            "doc",
+            F.explode(
+                F.zip_with(
+                    F.slice("toks", 1, n - 1),
+                    F.slice("toks", 2, n - 1),
+                    lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+                )
+            ).alias("p"),
+        )
+        .select("doc", "p.w1", "p.w2")
+        .filter((F.length("w1") > 0) & (F.length("w2") > 0)),
+        mode="eager",
+    )
     big = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
     lp2 = big.join(uni.withColumnRenamed("tok", "w1"), "w1").select(
         "w1",
@@ -497,7 +501,7 @@ def q72_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bigrams are generated inside one task. On Heaps-law corpora where the
     # bigram table outgrows the cap, fall back to the shuffle join on the
     # aggregated (doc, bigram) frame.
-    lp2 = lp2.localCheckpoint(eager=False)
+    lp2 = share(lp2, mode="lazy")
     if lp2.count() <= 1_000_000:
         scored = pairs.join(F.broadcast(lp2), ["w1", "w2"])
         return scored.groupBy("doc").agg(

@@ -43,41 +43,9 @@ def ingest_stream_batch(
     batch_id: int,
     ts_col: str = "ts",
 ) -> None:
-    """Fold one micro-batch into the table's state, exactly-once under
-    checkpoint replay.
-
-    A crash after the stream_part parquet write but before the checkpoint
-    commit re-delivers this batch_id on restart. The table's ledger
-    (``Table._stream_seen``) records every stream-part path: a replayed batch
-    REPLACES its existing slot in ``_parts`` (which ``_load_persisted`` may
-    already have re-opened from disk), and a batch whose part was folded into
-    main by ``compact()`` is skipped entirely — so no path double-counts."""
-    if batch_df.isEmpty():
-        return
-    if db.workdir:
-        path = f"{db.workdir}/{table_name}/stream_part={batch_id}"
-        if path in table._stream_seen:
-            idx = table._stream_seen[path]
-            if idx is None:
-                return  # already compacted into main
-            table.ingest(batch_df, ts_col)
-            table._parts[idx] = table._write_store(table._parts.pop(), path)
-            db._invalidate_plans()
-            return
-        table.ingest(batch_df, ts_col)
-        table._parts[-1] = table._write_store(table._parts[-1], path)
-        table._stream_seen[path] = len(table._parts) - 1
-        db._invalidate_plans()
-    else:
-        table.ingest(batch_df, ts_col)
-        part = table._parts[-1]
-        # a micro-batch DataFrame is not re-computable after the batch
-        # ends — materialize the partial state eagerly
-        from pyspark import StorageLevel
-
-        table._parts[-1] = part.persist(StorageLevel.MEMORY_AND_DISK)
-        table._parts[-1].count()
-        db._invalidate_plans()
+    """Fold one micro-batch into ``table`` (named ``table_name`` in ``db``),
+    exactly-once under checkpoint replay — see ``Table.ingest_batch``."""
+    table.ingest_batch(batch_df, batch_id, ts_col)
 
 
 def start_table_stream(
@@ -97,7 +65,7 @@ def start_table_stream(
     table = db.tables[table_name]
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_stream_batch(db, table, table_name, batch_df, batch_id, ts_col)
+        table.ingest_batch(batch_df, batch_id, ts_col)
 
     def _start(available_now: bool) -> StreamingQuery:
         writer = stream_df.writeStream.foreachBatch(process_batch).outputMode("append")

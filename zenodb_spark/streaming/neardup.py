@@ -69,6 +69,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from zenodb_spark.operators.dedup import minhash_signatures, shingles
+from zenodb_spark.operators.util import share
 
 _BAND_COLS = ["doc", "band", "bh", "batch"]
 
@@ -259,9 +260,10 @@ def fold_neardup_batch(
     directory count for long streams; replay-safe, see module doc)."""
     if batch_df.isEmpty():
         return
-    sig = minhash_signatures(
-        shingles(batch_df, text_col, id_col, n), num_hashes=num_hashes
-    ).localCheckpoint(eager=True)
+    sig = share(
+        minhash_signatures(shingles(batch_df, text_col, id_col, n), num_hashes=num_hashes),
+        mode="eager",
+    )
     cur_bands = _band_rows(sig, num_hashes, bands)
 
     bands_root = os.path.join(state_dir, "bands")
