@@ -91,8 +91,9 @@ def test_maintenance_info_check_merge(db, spark):
 def test_fold_clears_stream_parts_on_disk(spark, tmp_path, fold):
     """A compacted insert plus one streamed micro-batch, folded by
     FilterAndMerge or by compact(), reads the same total after a reopen:
-    both go through Table.fold, which removes the folded stream_part=
-    directories and marks their batches as folded."""
+    both go through Table.fold, which retires the folded stream_part=
+    directories (the next fold deletes them) and marks their batches as
+    folded, also on reopen."""
     wd = str(tmp_path / "store")
     schema = {"sums": {"sql": "SELECT v FROM inbound GROUP BY k, period('10s')"}}
     sql = "SELECT v FROM sums GROUP BY k, period('100s')"

@@ -81,3 +81,20 @@ def test_ingest_uses_no_table_private():
         {n.attr for n in ast.walk(ingest) if isinstance(n, ast.Attribute)} & private
     )
     assert not used, f"streaming/ingest.py reaches into Table: {used}"
+
+
+def test_store_dirs_deleted_and_committed_only_by_versions():
+    """``sources/versions.py`` is the one place that commits or deletes a
+    store directory: the engine and the near-dup stream call neither
+    ``shutil.rmtree`` nor ``os.replace``."""
+    banned = {("shutil", "rmtree"), ("os", "replace")}
+    stray = [
+        f"{rel}:{node.lineno}"
+        for rel in ("engine.py", "streaming/neardup.py")
+        for node in ast.walk(ast.parse((PKG / rel).read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and isinstance(node.func.value, ast.Name)
+        and (node.func.value.id, node.func.attr) in banned
+    ]
+    assert not stray, f"store dirs deleted or committed outside versions: {stray}"

@@ -317,27 +317,6 @@ def test_media_to_ann_pipeline_end_to_end(spark):
     assert rows[0]["cosine"] > 0.999999 > rows[1]["cosine"]
 
 
-def test_pipeline_cli_chain(spark, tmp_path):
-    from zenodb_spark.pipeline_cli import main
-
-    out = str(tmp_path / "cleaned")
-    rc = main(
-        [
-            "--input",
-            "/root/testdata/sf0.001/documents.parquet",
-            "--output",
-            out,
-            "--ops",
-            "dedup,langid,quality,resample",
-        ]
-    )
-    assert rc == 0
-    cleaned = spark.read.parquet(out)
-    assert 0 < cleaned.count() <= 500
-    for col in ("pred_lang", "quality_score", "doc_id", "text"):
-        assert col in cleaned.columns
-
-
 def test_paragraph_dedup_invariants_property(spark):
     """Property check against a brute-force python model: kept+dropped
     equals total chunks, and the set of kept (doc, chunk) pairs is exactly

@@ -128,35 +128,3 @@ def test_ab_lift_variants_partition_users(spark):
     assert sum(r["n_users"] for r in rows) == 150
     for r in rows:
         assert 0 <= r["n_converted"] <= r["n_users"]
-
-
-def test_export_shards_stable_and_complete(spark, tmp_path):
-    from zenodb_spark.sources.export import (
-        export_training_shards,
-        shard_manifest,
-        shard_of,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    p1, p2 = str(tmp_path / "e1"), str(tmp_path / "e2")
-    export_training_shards(docs, p1, 8)
-    export_training_shards(docs.repartition(7), p2, 8)  # different input layout
-
-    m1 = {r["shard"]: (r["n_rows"], r["content_sum"]) for r in shard_manifest(spark, p1).collect()}
-    m2 = {r["shard"]: (r["n_rows"], r["content_sum"]) for r in shard_manifest(spark, p2).collect()}
-    assert m1 == m2  # assignment independent of input partitioning
-    assert sum(n for n, _ in m1.values()) == docs.count()
-    assert set(m1) <= set(range(8))
-
-    # in-shard order is pinned: same sequence on two independent reads
-    import glob
-
-    shard0 = sorted(glob.glob(f"{p1}/shard=*/"))[0]
-    a = [r["doc_id"] for r in spark.read.parquet(shard0).collect()]
-    b = [r["doc_id"] for r in spark.read.parquet(shard0).collect()]
-    assert a == b and len(a) > 0
-
-    # assignment matches the documented rule
-    got = spark.read.parquet(p1).select("doc_id", F.col("shard").cast("long").alias("s"))
-    want = docs.select("doc_id", shard_of("doc_id", 8).alias("w"))
-    assert got.join(want, "doc_id").filter("s != w").count() == 0

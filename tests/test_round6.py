@@ -250,32 +250,6 @@ def test_grouped_quantile_matches_per_group_sort(spark):
         assert got[(g,)] == (k, len(vals), sorted(vals)[k - 1])
 
 
-def test_bloom_write_embeds_filters(spark, tmp_path):
-    """bloom_write must actually produce bloom filters: the written file
-    grows by ~1.2 bytes/ndv over a plain write of identical data (the
-    footer API in this pyarrow build does not expose bloom offsets, so
-    the size delta is the observable)."""
-    import glob
-    import os
-
-    from zenodb_spark.sources.layout import bloom_write
-
-    df = spark.range(0, 50_000).selectExpr(
-        "id", "md5(cast(id as string)) as fp"
-    ).coalesce(1)
-    df.write.parquet(str(tmp_path / "plain"))
-    bloom_write(df, str(tmp_path / "bloom"), ["fp"], ndv=50_000)
-    size = lambda sub: os.path.getsize(glob.glob(f"{tmp_path}/{sub}/*.parquet")[0])
-    delta = size("bloom") - size("plain")
-    assert 30_000 < delta < 300_000, delta
-    # content identical
-    assert (
-        spark.read.parquet(str(tmp_path / "bloom")).count()
-        == spark.read.parquet(str(tmp_path / "plain")).count()
-        == 50_000
-    )
-
-
 class TestCellPairScorerEquivalence:
     """Round-6 optimization: the within-cell pair scoring in
     semdedup_drop_list / cell_topk_pairs moved from a centroid self-join

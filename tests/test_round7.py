@@ -131,6 +131,7 @@ class TestCountDistinctState:
         import shutil
 
         from zenodb_spark.engine import DB
+        from zenodb_spark.sources import versions
 
         wd = f"{tmpdir}/w"
         db = DB(spark, now=_E + 100, workdir=wd)
@@ -139,8 +140,8 @@ class TestCountDistinctState:
             "pts", spark.createDataFrame([Row(ts=_ts(1), k="a", v=1.0)])
         )
         db.tables["m"].compact()
-        tdir = f"{wd}/m/main"
-        assert os.path.isdir(tdir), os.listdir(wd)
+        tdir = versions.base(f"{wd}/m")
+        assert tdir is not None, os.listdir(wd)
         st = spark.read.parquet(tdir)
         legacy_cols = [
             F.col(c).alias(c.replace("__dsetv2", "__dset")) for c in st.columns

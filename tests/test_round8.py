@@ -252,30 +252,3 @@ def test_dim_function_literals_and_nil_dims(spark):
     assert sorted(r["a2"] for r in r3.collect()) == ["a", "bb", "ccc"]
     r4 = q("SELECT v FROM md GROUP BY nosuch, period('1d')").collect()
     assert len(r4) == 1 and r4[0]["nosuch"] is None and r4[0]["v"] == 3.0
-
-
-def test_cluster_conf_arithmetic():
-    """The 100 TB sizing rules as checkable arithmetic: partitions scale
-    with data but never drop below 2 tasks/core; scan splits fit a
-    quarter of a task's memory share; broadcast stays at the O(model)
-    threshold regardless of cluster size."""
-    from zenodb_spark.session import cluster_conf
-
-    c = cluster_conf(data_tb=100, executors=1000, cores_per_executor=4,
-                     executor_mem_gb=16, target_partition_mb=192)
-    # 20% of 100 TB over 192 MB targets ≈ 109k partitions — way above the
-    # 8k floor (2 × 4000 cores)
-    assert int(c["spark.sql.shuffle.partitions"]) > 100_000
-    assert c["spark.sql.files.maxPartitionBytes"] == "256m"  # capped
-    assert c["spark.sql.autoBroadcastJoinThreshold"] == str(64 * 1024 * 1024)
-    # tiny data on a big cluster: the per-core floor wins
-    small = cluster_conf(data_tb=0.01, executors=1000)
-    assert int(small["spark.sql.shuffle.partitions"]) == 8000
-    # memory-constrained executors shrink the scan split
-    lean = cluster_conf(data_tb=1, executors=10, cores_per_executor=8,
-                        executor_mem_gb=8)
-    assert lean["spark.sql.files.maxPartitionBytes"] == "256m" or int(
-        lean["spark.sql.files.maxPartitionBytes"][:-1]) <= 256
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        cluster_conf(0, 10)

@@ -754,8 +754,8 @@ class TestStreamNeardup:
         import os
         import shutil
 
+        from zenodb_spark.sources.versions import current as _read_ptr
         from zenodb_spark.streaming.neardup import (
-            _read_ptr,
             _store_parts,
             compact_neardup_state,
             fold_neardup_batch,
@@ -806,8 +806,8 @@ class TestStreamNeardup:
         import os
 
         from pyspark.sql import functions as F
+        from zenodb_spark.sources.versions import current as _read_ptr
         from zenodb_spark.streaming.neardup import (
-            _read_ptr,
             _store_parts,
             compact_neardup_state,
             fold_neardup_batch,

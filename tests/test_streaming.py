@@ -327,47 +327,3 @@ def test_stateful_stream_key_counts(spark, tmpdir):
     for r in rows:
         final[r["key"]] = max(final.get(r["key"], 0), r["n_total"])
     assert final == {"a": 3, "b": 1, "c": 1}
-
-
-def test_stream_zscore_alerts(spark, tmpdir):
-    """Streaming z-score: stable history then a spike bucket -> one alert
-    for the spiking key, none for the steady key."""
-    from zenodb_spark.streaming.stateful import stream_zscore_alerts
-
-    src = f"{tmpdir}/alert_src"
-    hist, spike = [], []
-    # 14 buckets of calm history for both keys (counts 3 and 2 +/- jitter)
-    for b in range(14):
-        for i in range(3 + (b % 2)):
-            hist.append(Row(k="hot", ts=ts(b * 100 + i)))
-        for i in range(2 + (b % 2)):
-            hist.append(Row(k="calm", ts=ts(b * 100 + 50 + i)))
-    # bucket 14: 'hot' spikes to 30 events; 'calm' stays at 3
-    for i in range(30):
-        spike.append(Row(k="hot", ts=ts(14 * 100 + i % 90)))
-    for i in range(3):
-        spike.append(Row(k="calm", ts=ts(14 * 100 + 50 + i)))
-    spark.createDataFrame(hist).coalesce(1).write.parquet(f"{src}/b0")
-    spark.createDataFrame(spike).coalesce(1).write.parquet(f"{src}/b1")
-    schema = spark.read.parquet(f"{src}/b0").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/b*")
-    )
-    out = stream_zscore_alerts(
-        stream, "k", ts_col="ts", bucket_seconds=100, window_buckets=24,
-        min_history=12, z_threshold=2.0,
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("z_alerts")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM z_alerts").collect()
-    assert {r["key"] for r in rows} == {"hot"}
-    spikes = [r for r in rows if r["n"] == 30]
-    assert spikes and abs(spikes[0]["z"]) > 2.0

@@ -541,3 +541,39 @@ def test_pending_entry_gets_202_after_short_timeout(plain):
     assert status == 202
     assert raw == f"/cached/{ce.permalink}".encode()
     assert waited >= 0.3
+
+
+def test_result_cache_evicts_lru_finished_under_byte_cap(plain, tmp_path, monkeypatch):
+    """Finished payloads stay under RESULT_CACHE_MAX_BYTES: the least
+    recently used finished entries go, from both maps and from disk; a
+    pending entry is never evicted; an evicted permalink answers 404."""
+    from zenodb_spark import web
+
+    monkeypatch.setattr(web, "RESULT_CACHE_MAX_BYTES", 100)
+    rc = web.ResultCache(cache_dir=str(tmp_path))
+    pending = rc.begin("SELECT pending")
+    done = []
+    for i in range(5):
+        ce = rc.begin(f"SELECT {i}")
+        rc.succeed(ce, bytes(40))
+        done.append(ce)
+        assert rc.by_permalink(done[0].permalink) is done[0]  # keep 0 recent
+    held = [ce for ce in rc._by_permalink.values() if ce.data]
+    assert sum(len(ce.data) for ce in held) <= 100
+    assert held == [done[4], done[0]]  # least recently used first
+    assert rc._by_permalink[pending.permalink] is pending
+    assert rc._by_sql["SELECT pending"] is pending
+    for ce in done[1:4]:
+        assert rc.by_permalink(ce.permalink) is None
+        assert ce.sql not in rc._by_sql
+        assert not (tmp_path / f"{ce.permalink}.gz").exists()
+    assert (tmp_path / f"{done[4].permalink}.gz").exists()
+
+    srv, base, _, _ = plain
+    payload = gzip.compress(bytes(range(60)))  # two of these exceed the cap
+    assert 50 < len(payload) <= 100
+    first = srv.cache.begin("SELECT evicted")
+    srv.cache.succeed(first, payload)
+    assert _get(f"{base}/cached/{first.permalink}")[0] == 200
+    srv.cache.succeed(srv.cache.begin("SELECT newer"), payload)
+    assert _get(f"{base}/cached/{first.permalink}")[0] == 404

@@ -21,6 +21,16 @@ Scale notes: state parts are plain DataFrames (parquet-backed when a
 workdir is given); part-append is embarrassingly parallel, merge-on-read is
 one hash aggregate keyed (dims, bucket) with map-side combine. Retention is
 a bucket-range filter → partition pruning on the bucket column.
+
+Store layout with a workdir (``workdir/{table}/``, sources/versions.py):
+``base_v{k}/`` holds the folded state of version k, ``_ptr`` names the
+current k, and each streamed micro-batch sits in ``stream_part={id}/``
+until a fold merges it; all are ``_day``-partitioned. A fold writes a new
+version and commits it atomically. It retires the previous base and the
+stream parts it merged, and the next fold deletes them, so a plan built
+before a fold still reads its files: readers survive one fold, and a
+table holds at most its current and previous base. A store written before
+versioning keeps its base in ``main/`` and reopens as version 0.
 """
 
 from __future__ import annotations
@@ -29,7 +39,6 @@ import dataclasses
 import datetime as dt
 import os
 import re
-import shutil
 import threading
 from contextlib import contextmanager
 from dataclasses import dataclass, field as dfield
@@ -75,6 +84,7 @@ from zenodb_spark.plans.compiler import (
     finalize_expr,
     merge_states,
 )
+from zenodb_spark.sources import versions
 from zenodb_spark.sqlparser.durations import format_duration, parse_duration
 from zenodb_spark.sqlparser.parser import parse
 
@@ -326,10 +336,11 @@ class Table:
         self.dims: list[str] | None = [g.name for g in self.group_by] if not q.group_by_all else None
         self.registry: StateRegistry | None = None
         self._parts: list[DataFrame] = []
-        # streaming exactly-once ledger: stream-part path → index in _parts,
-        # or None once compact() folded it into main. A replayed micro-batch
-        # (crash after the parquet write, before the checkpoint commit)
-        # REPLACES its slot / is skipped instead of double-counting.
+        # streaming exactly-once ledger: stream-part dir name → index in
+        # _parts, or None once a fold committed it into the base. A
+        # replayed micro-batch (crash after the parquet write, before the
+        # checkpoint commit) REPLACES its slot / is skipped instead of
+        # double-counting.
         self._stream_seen: dict[str, int | None] = {}
         self._materialized = False
         self.created_at = db.now()  # backfill depth anchors here
@@ -337,22 +348,24 @@ class Table:
 
     def _load_persisted(self) -> None:
         """Re-open a persisted store (workdir/{table}) without replaying
-        data: the registry is rebuilt deterministically from the table
-        definition; GROUP BY * dims are recovered from the stored schema."""
-        if not self.db.workdir:
+        data: the current version's base plus every stream part no commit
+        retired (a retired part is folded into that base, so the ledger
+        marks its batch folded); the registry is rebuilt deterministically
+        from the table definition; GROUP BY * dims are recovered from the
+        stored schema."""
+        root = self._root()
+        if root is None or not os.path.isdir(root):
             return
-        path = f"{self.db.workdir}/{self.tdef.name}"
-        if not os.path.isdir(path):
-            return
-        parts = []
-        if os.path.isdir(f"{path}/main"):
-            parts.append(self.db.spark.read.parquet(f"{path}/main"))
-        elif any(f.endswith(".parquet") for f in os.listdir(path)):
-            parts.append(self.db.spark.read.parquet(path))  # legacy flat layout
-        for sub in sorted(os.listdir(path)):
+        ptr = versions.current(root)
+        base = versions.base(root, ptr)
+        parts = [self.db.spark.read.parquet(base)] if base else []
+        for sub in sorted(os.listdir(root)):
             if sub.startswith("stream_part="):
-                parts.append(self.db.spark.read.parquet(f"{path}/{sub}"))
-                self._stream_seen[f"{path}/{sub}"] = len(parts) - 1
+                if sub in ptr["retired"]:
+                    self._stream_seen[sub] = None
+                else:
+                    parts.append(self.db.spark.read.parquet(f"{root}/{sub}"))
+                    self._stream_seen[sub] = len(parts) - 1
         if not parts:
             return
         self.registry = build_registry(self.fields)
@@ -377,7 +390,7 @@ class Table:
                 f"table {self.tdef.name!r}: persisted state columns {legacy} "
                 "use the v1 COUNTDISTINCT format; current format is dsetv2 "
                 "(sorted string array). Recompute the store (delete "
-                f"{path}) or re-encode offline before reopening."
+                f"{root}) or re-encode offline before reopening."
             )
         if self.dims is None:
             self.dims = [
@@ -528,48 +541,45 @@ class Table:
         checkpoint commit re-delivers this batch_id on restart. The ledger
         (``_stream_seen``) records every stream-part path: a replayed batch
         REPLACES its existing slot in ``_parts`` (which ``_load_persisted``
-        may already have re-opened from disk), and a batch whose part was
-        folded into main by ``compact()`` is skipped entirely — so no path
+        may already have re-opened from disk), and a batch whose part a
+        fold committed into the base is skipped entirely — so no path
         double-counts. Without a workdir there is no ledger: each batch is
         a new part."""
         if batch_df.isEmpty():
             return
         sub = f"stream_part={batch_id}"
-        path = f"{self.db.workdir}/{self.tdef.name}/{sub}" if self.db.workdir else None
-        slot = self._stream_seen.get(path, len(self._parts))
+        slot = self._stream_seen.get(sub, len(self._parts))
         if slot is None:
-            return  # already compacted into main
+            return  # already folded into the base
         self.ingest(batch_df, ts_col)
         part = self._hold(self._parts.pop(), sub)
         if slot < len(self._parts):
             self._parts[slot] = part
         else:
             self._parts.append(part)
-        if path is not None:
-            self._stream_seen[path] = slot
+        if self.db.workdir:
+            self._stream_seen[sub] = slot
         self.db._invalidate_plans()
 
-    def _hold(self, df: DataFrame, sub: str) -> DataFrame:
+    def _root(self) -> str | None:
+        """The table's store directory, None without a workdir."""
+        return f"{self.db.workdir}/{self.tdef.name}" if self.db.workdir else None
+
+    def _hold(self, df: DataFrame, sub: str | None = None) -> DataFrame:
         """Materialize a part the table keeps. With a workdir the part is
-        written day-partitioned to ``workdir/{table}/{sub}`` and reopened;
-        without one it is persisted memory-and-disk and counted, because a
-        micro-batch or a folded union is not re-computable once its
-        sources are released. The engine's one ``persist``: every cache
-        entry it makes belongs to a part in ``_parts``, which ``fold``
-        unpersists when it replaces it."""
-        if self.db.workdir:
-            return self._write_store(df, f"{self.db.workdir}/{self.tdef.name}/{sub}")
-        held = df.persist(StorageLevel.MEMORY_AND_DISK)
-        held.count()
-        return held
-
-    def _write_store(self, df: DataFrame, path: str) -> DataFrame:
-        """Write a state part day-partitioned and reopen it (retention →
-        partition drop; ASOF/UNTIL → partition pruning).
-
-        Writes to a tmp dir then swaps: the plan being written may READ the
-        current store (compaction folds the existing parts), so an in-place
-        overwrite would delete its own input mid-job."""
+        written day-partitioned (retention → partition drop; ASOF/UNTIL →
+        partition pruning) to ``workdir/{table}/{sub}``, or with no ``sub``
+        to the fresh store version that ``fold`` then commits, and
+        reopened; without one it is persisted memory-and-disk and counted,
+        because a micro-batch or a folded union is not re-computable once
+        its sources are released. The engine's one ``persist``: every
+        cache entry it makes belongs to a part in ``_parts``, which
+        ``fold`` unpersists when it replaces it."""
+        root = self._root()
+        if root is None:
+            held = df.persist(StorageLevel.MEMORY_AND_DISK)
+            held.count()
+            return held
         out = df.withColumn(DAY_COL, F.floor(F.col(BUCKET_COL) / F.lit(DAY_SEC)).cast("long"))
         # partitionBy dims (reference TableOpts.PartitionBy — the follower
         # distribution key, table.go:34–64): cluster files by those dims and
@@ -580,11 +590,8 @@ class Table:
             out = out.repartition(*[F.col(d) for d in pby]).sortWithinPartitions(
                 *[F.col(d) for d in pby], F.col(BUCKET_COL)
             )
-        tmp = f"{path}__tmp"
-        out.write.mode("overwrite").partitionBy(DAY_COL).parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.replace(tmp, path)
+        path = f"{root}/{sub}" if sub else versions.fresh(root)
+        out.write.mode("overwrite").partitionBy(DAY_COL).parquet(path)
         return self.db.spark.read.parquet(path)
 
     def compact(self) -> None:
@@ -628,14 +635,15 @@ class Table:
             )
         else:
             merged = old_parts[0]
-        # consolidated store lives under main/ — sibling stream_part=N
-        # dirs keep their own partition discovery separate
-        merged = self._hold(merged, "main")
+        # the folded base is a new store version; the commit retires the
+        # previous base and the folded stream parts, which stay readable
+        # for plans already built until the next fold (sources/versions.py)
+        merged = self._hold(merged)
         if self.db.workdir:
-            base = f"{self.db.workdir}/{self.tdef.name}"
-            for sub in os.listdir(base):
-                if sub.startswith("stream_part="):
-                    shutil.rmtree(f"{base}/{sub}", ignore_errors=True)
+            versions.commit(
+                self._root(),
+                retire=[sub for sub, slot in self._stream_seen.items() if slot is not None],
+            )
         # Unpersist-discipline (round-4 verdict item 7): the folded stream
         # parts were held per micro-batch (ingest_batch) and the previous
         # compact's merged part may itself be persisted — dropping the

@@ -19,9 +19,10 @@ from zenodb_spark.engine import DB
 from zenodb_spark.functions.measures import cents
 from zenodb_spark.queries.common import BUCKET, C, query, shingle_sql
 from zenodb_spark.queries.zeno import _as_bucket
+from zenodb_spark.sources import versions
 from zenodb_spark.sources.layout import zorder_write
 from zenodb_spark.streaming.ingest import start_table_stream, windowed_rollup_stream
-from zenodb_spark.streaming.neardup import _read_ptr, start_neardup_stream
+from zenodb_spark.streaming.neardup import start_neardup_stream
 from zenodb_spark.streaming.stateful import stream_dedup_first, stream_key_counts
 
 
@@ -868,9 +869,8 @@ def q231_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         try:  # unregister the bucketed band table before its files vanish
-
-            ptr = _read_ptr(f"{tmp}/state/bands")
-            if ptr and ptr.get("table"):
+            ptr = versions.current(f"{tmp}/state/bands")
+            if ptr.get("table"):
                 spark.sql(f"DROP TABLE IF EXISTS {ptr['table']}")
         except Exception:
             pass

@@ -70,53 +70,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
-
-def cluster_conf(
-    data_tb: float,
-    executors: int,
-    cores_per_executor: int = 4,
-    executor_mem_gb: int = 16,
-    target_partition_mb: int = 192,
-) -> dict[str, str]:
-    """Recommended conf overrides for a REAL cluster at a given scale —
-    the arithmetic behind SCALE.md's 100 TB story, as code.
-
-    The sizing rules (each is a guardrail, not a tunable to chase):
-
-    - **shuffle partitions**: post-filter shuffle volume is typically
-      10-30% of scan volume for this engine's aggregate-heavy plans; size
-      so one partition ≈ ``target_partition_mb`` at 20% selectivity, then
-      clamp to ≥ 2 tasks per core (stragglers amortize) — AQE coalesces
-      DOWN at runtime, so erring high is free, erring low is a spill.
-    - **maxPartitionBytes**: scan splits sized so a task's columnar batch
-      + aggregation hash map fit comfortably in (executor_mem /
-      cores) / 4 — quarter headroom for the map side of partial
-      aggregation and for codegen buffers.
-    - **broadcast threshold**: stays at 64 MB (SCALE.md's O(model)
-      policy) — raising it on big clusters invites corpus-sized builds;
-      dimension tables that belong broadcast already fit.
-    - **AQE advisory size**: matches target_partition_mb so runtime
-      coalescing aims at the same task shape the static sizing chose.
-
-    Returns a dict to pass as ``get_spark(extra_conf=...)`` (or to apply
-    to spark-submit). Pure arithmetic — safe to unit test."""
-    if data_tb <= 0 or executors <= 0:
-        raise ValueError("data_tb and executors must be positive")
-    total_cores = executors * cores_per_executor
-    shuffle_bytes = data_tb * 1024**4 * 0.20
-    by_size = shuffle_bytes / (target_partition_mb * 1024**2)
-    shuffle_parts = int(max(by_size, total_cores * 2))
-    task_mem_mb = executor_mem_gb * 1024 // cores_per_executor
-    max_partition_mb = min(256, max(32, task_mem_mb // 4))
-    return {
-        "spark.sql.shuffle.partitions": str(shuffle_parts),
-        "spark.sql.files.maxPartitionBytes": f"{max_partition_mb}m",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": f"{target_partition_mb}m",
-        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-        "spark.executor.memory": f"{executor_mem_gb}g",
-        "spark.executor.cores": str(cores_per_executor),
-        # partial-state appends + compaction write many small-ish files;
-        # keep committer v2 semantics off (atomic rename correctness) and
-        # let the engine's day-partition layout handle pruning
-        "spark.sql.parquet.filterPushdown": "true",
-    }

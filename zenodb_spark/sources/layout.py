@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["zorder_value", "zorder_write", "bloom_write"]
+__all__ = ["zorder_value", "zorder_write"]
 
 BITS = 16  # per-dimension resolution: 65536 rank buckets
 
@@ -114,29 +114,3 @@ def zorder_write(
     finally:
         spark.catalog.dropGlobalTempView(view)
 
-
-def bloom_write(
-    df,
-    path: str,
-    cols: list[str],
-    ndv: int = 1_000_000,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet with per-column BLOOM FILTERS on ``cols`` — the
-    point-lookup companion to z-order's range clustering: min/max stats
-    prune range predicates, but an equality probe on a high-cardinality
-    unsorted column (content fingerprint, user id) overlaps every file's
-    [min, max] and scans everything. A bloom filter answers "definitely
-    not in this row group" for ~1.2 MB per 10⁶ distinct values, so point
-    lookups skip row groups wholesale; Spark's vectorized reader consults
-    them automatically when an equality predicate is pushed.
-
-    ``ndv`` sizes the filter (expected distinct values per file); set it
-    near the real per-file cardinality — oversizing wastes the bytes,
-    undersizing inflates the false-positive rate toward useless."""
-    w = df.write.mode(mode)
-    for c in cols:
-        w = w.option(f"parquet.bloom.filter.enabled#{c}", "true").option(
-            f"parquet.bloom.filter.expected.ndv#{c}", str(int(ndv))
-        )
-    w.parquet(path)

@@ -25,25 +25,28 @@ a function of the data (q231 uses doc_id % 4).
 State layout (exactly-once, crash-safe):
     state_dir/bands/batch={id}/   (doc, band, bh)     per-batch slices
     state_dir/bands/base_v{k}/    (doc, band, bh, batch)  compacted base
-    state_dir/bands/_ptr          JSON {"version": k[, "table", "buckets"]}
+    state_dir/bands/_ptr          current version [, "table", "buckets"]
     state_dir/sigs/...            same shape, (doc, h0..h{n-1})
-Slices are written with per-batch overwrite so a checkpoint replay of a
-batch id is idempotent — the same part-replace ledger idea as
-streaming/ingest.py. Marked output lands in ``out_dir/batch={id}`` the
-same way.
+Each root is a versioned store (sources/versions.py, the protocol engine
+tables commit their folds through): the pointer names the current base,
+and a commit keeps the previous base until the next one. Slices are
+written with per-batch overwrite so a checkpoint replay of a batch id is
+idempotent — the same part-replace ledger idea as streaming/ingest.py.
+Marked output lands in ``out_dir/batch={id}`` the same way.
 
-Compaction (``compact_neardup_state``) folds slices into a NEW versioned
-base dir and then atomically repoints ``_ptr`` (``os.replace``); readers
-always resolve the pointer first, so every crash window leaves a complete
-store: a crash before the pointer flips leaves base_v{k}+slices (the old
-complete view, the half-written base_v{k+1} is garbage-collected on the
-next compact); a crash after the flip but before slice removal leaves
-base_v{k+1}+slices (duplicated rows, harmless — every consumer is
-set-semantic: candidate and dropped frames are distinct()-ed, and compact
-itself dropDuplicates()-es). External compaction MUST NOT run
-concurrently with an active stream (it removes slice dirs a running fold
-may be reading); the sanctioned path is ``compact_every`` on the fold,
-which compacts synchronously between batches.
+Compaction (``compact_neardup_state``) folds slices into a NEW version
+and commits it; readers always resolve the pointer first, so every crash
+window leaves a complete store: a crash before the commit leaves
+base_v{k}+slices (the old complete view; the half-written base_v{k+1} is
+swept by the next compact); a crash after the commit but before slice
+removal leaves base_v{k+1}+slices (duplicated rows, harmless — every
+consumer is set-semantic: candidate and dropped frames are distinct()-ed,
+and compact itself dropDuplicates()-es). The slices are deleted right
+after the commit, because the stream's own synchronous fold is their
+only reader. External compaction MUST NOT run concurrently with an
+active stream (it removes slice dirs a running fold may be reading); the
+sanctioned path is ``compact_every`` on the fold, which compacts
+synchronously between batches.
 
 Scale shape: the per-batch cost is |batch| signature aggregation + a
 band-keyed equi-join against the band store — the standard LSH join whose
@@ -60,9 +63,7 @@ driver-resident.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,6 +71,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from zenodb_spark.operators.dedup import minhash_signatures, shingles
 from zenodb_spark.operators.util import share
+from zenodb_spark.sources import versions
 
 _BAND_COLS = ["doc", "band", "bh", "batch"]
 
@@ -94,27 +96,9 @@ def _band_rows(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     )
 
 
-# -- versioned base-store pointer ------------------------------------------
-
-
-def _read_ptr(root: str) -> dict | None:
-    p = os.path.join(root, "_ptr")
-    if not os.path.isfile(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-def _write_ptr(root: str, ptr: dict) -> None:
-    tmp = os.path.join(root, "_ptr.tmp")
-    with open(tmp, "w") as f:
-        json.dump(ptr, f)
-    os.replace(tmp, os.path.join(root, "_ptr"))  # atomic on POSIX
-
-
-def _band_table_name(state_dir: str, version: int) -> str:
-    tag = hashlib.md5(os.path.abspath(state_dir).encode()).hexdigest()[:12]
-    return f"neardup_bands_{tag}_v{version}"
+def _band_table_name(base: str) -> str:
+    tag = hashlib.md5(os.path.abspath(base).encode()).hexdigest()[:12]
+    return f"neardup_bands_{tag}"
 
 
 def _ensure_band_table(
@@ -122,7 +106,8 @@ def _ensure_band_table(
 ) -> None:
     """Re-register the bucketed base as an external catalog table — the
     in-memory catalog forgets tables across sessions but the bucket spec
-    in ``_ptr`` + the bucket-suffixed file names survive on disk."""
+    in the store pointer + the bucket-suffixed file names survive on
+    disk."""
     if spark.catalog.tableExists(name):
         return
     schema = spark.read.parquet(path).schema
@@ -141,15 +126,13 @@ def _store_parts(spark: SparkSession, root: str, cols: list[str]) -> list[DataFr
     union erases the bucket partitioning and re-introduces the exchange).
     Pointer-first resolution makes reads crash-tolerant (module doc)."""
     parts = []
-    ptr = _read_ptr(root)
-    if ptr:
-        base = os.path.join(root, f"base_v{ptr['version']}")
-        if os.path.isdir(base) and os.listdir(base):
-            if ptr.get("table") and ptr.get("buckets"):
-                _ensure_band_table(spark, ptr["table"], base, ptr["buckets"])
-                parts.append(spark.table(ptr["table"]).select(*cols))
-            else:
-                parts.append(spark.read.parquet(base).select(*cols))
+    ptr = versions.current(root)
+    base = versions.base(root, ptr)
+    if base and ptr.get("table"):
+        _ensure_band_table(spark, ptr["table"], base, ptr["buckets"])
+        parts.append(spark.table(ptr["table"]).select(*cols))
+    elif base:
+        parts.append(spark.read.parquet(base).select(*cols))
     if os.path.isdir(root) and any(e.startswith("batch=") for e in os.listdir(root)):
         sl = spark.read.option("basePath", root).parquet(f"{root}/batch=*")
         sl = sl.withColumn("batch", F.col("batch").cast("long"))
@@ -160,14 +143,13 @@ def _store_parts(spark: SparkSession, root: str, cols: list[str]) -> list[DataFr
 def compact_neardup_state(
     spark: SparkSession, state_dir: str, bucket_base: int | None = None
 ) -> None:
-    """Fold per-batch band/signature slices into a NEW versioned base and
-    atomically repoint ``_ptr`` — the streaming analogue of engine
-    ``compact()``: a long-running stream otherwise accumulates one
-    directory per micro-batch and every fold pays a wider and wider file
-    listing. Crash windows and the concurrent-stream prohibition are
-    documented in the module docstring; stale versions (from a crash mid-
-    compact) are garbage-collected at the START of the next compact, so
-    the operation is self-healing.
+    """Fold per-batch band/signature slices into a NEW store version and
+    commit it — the streaming analogue of engine ``compact()``: a
+    long-running stream otherwise accumulates one directory per
+    micro-batch and every fold pays a wider and wider file listing. Crash
+    windows and the concurrent-stream prohibition are documented in the
+    module docstring; a version left by a crash mid-compact is swept at
+    the start of the next compact, so the operation is self-healing.
 
     With ``bucket_base``, the bands base is written CLUSTERED BY
     (band, bh) into that many buckets (sources/bucketed.py) and the table
@@ -175,25 +157,11 @@ def compact_neardup_state(
     join exchange-free on the history side."""
     for sub in ("bands", "sigs"):
         root = os.path.join(state_dir, sub)
-        if not os.path.isdir(root):
-            continue
-        ptr = _read_ptr(root) or {"version": 0}
-        ver = ptr["version"]
-        # garbage-collect crash leftovers: any base version other than the
-        # pointed one is either a half-written future or an unswept past
-        for e in os.listdir(root):
-            if e.startswith("base_v") and e != f"base_v{ver}":
-                stale = os.path.join(root, e)
-                sv = e.removeprefix("base_v")
-                if sub == "bands" and sv.isdigit():
-                    spark.sql(
-                        "DROP TABLE IF EXISTS "
-                        + _band_table_name(state_dir, int(sv))
-                    )
-                shutil.rmtree(stale)
-            elif e.startswith("_base_"):  # pre-versioning staging remnants
-                shutil.rmtree(os.path.join(root, e))
-        batches = [e for e in os.listdir(root) if e.startswith("batch=")]
+        batches = (
+            [e for e in os.listdir(root) if e.startswith("batch=")]
+            if os.path.isdir(root)
+            else []
+        )
         if not batches:
             continue
         if sub == "bands":
@@ -208,32 +176,24 @@ def compact_neardup_state(
         # replay-after-compact can duplicate a slice into the base; fold
         # the duplicates out so the base stays tight over many compactions
         df = df.dropDuplicates()
-        new_ver = ver + 1
-        dest = os.path.join(root, f"base_v{new_ver}")
+        old_table = versions.current(root).get("table")
+        dest = versions.fresh(root)
+        meta = {}
         if sub == "bands" and bucket_base:
             from zenodb_spark.sources.bucketed import write_bucketed
 
-            name = _band_table_name(state_dir, new_ver)
+            name = _band_table_name(dest)
             spark.sql(f"DROP TABLE IF EXISTS {name}")
             write_bucketed(
                 df, name, ["band", "bh"], bucket_base,
                 sort_cols=["band", "bh"], path=dest,
             )
-            new_ptr = {"version": new_ver, "table": name, "buckets": bucket_base}
+            meta = {"table": name, "buckets": bucket_base}
         else:
             df.write.mode("overwrite").parquet(dest)
-            new_ptr = {"version": new_ver}
-        _write_ptr(root, new_ptr)  # <- the atomic commit point
-        if ver:
-            if sub == "bands":
-                spark.sql(
-                    f"DROP TABLE IF EXISTS {_band_table_name(state_dir, ver)}"
-                )
-            old = os.path.join(root, f"base_v{ver}")
-            if os.path.isdir(old):
-                shutil.rmtree(old)
-        for b in batches:
-            shutil.rmtree(os.path.join(root, b))
+        versions.commit(root, discard=batches, **meta)
+        if old_table:  # only the pointed base is read through the catalog
+            spark.sql(f"DROP TABLE IF EXISTS {old_table}")
 
 
 def fold_neardup_batch(

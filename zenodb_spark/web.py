@@ -89,6 +89,9 @@ DEFAULT_SHORT_TIMEOUT = 5.0
 DEFAULT_COALESCE_WINDOW = 5.0  # reference web/query.go:187
 DEFAULT_MAX_RESPONSE_BYTES = 32 * 1024 * 1024
 DEFAULT_CACHE_TTL = 2 * 3600.0
+# gzipped payload bytes the result cache keeps for finished entries; past
+# it the least recently used are evicted (memory and disk)
+RESULT_CACHE_MAX_BYTES = 256 * 1024 * 1024
 BATCH_HISTORY = 1024  # QueryRunner.batches keeps the sizes of this many recent batches
 
 
@@ -126,7 +129,9 @@ class CacheEntry:
 class ResultCache:
     """Thread-safe SQL→entry + permalink→entry cache with TTL and optional
     disk persistence (one gzip payload file per permalink + a JSON index —
-    the reference's boltdb buckets, web/cache.go:27–30)."""
+    the reference's boltdb buckets, web/cache.go:27–30). ``_by_permalink``
+    is kept least recently used first; finished payloads are capped at
+    RESULT_CACHE_MAX_BYTES."""
 
     PURGE_INTERVAL = 60.0
 
@@ -157,14 +162,35 @@ class ResultCache:
             if ce.expired() and ce.status != STATUS_PENDING
         ]
         for ce in dead:
-            if self._by_sql.get(ce.sql) is ce:
-                del self._by_sql[ce.sql]
-            del self._by_permalink[ce.permalink]
-            if self.cache_dir:
-                try:
-                    os.remove(self._payload_path(ce.permalink))
-                except FileNotFoundError:
-                    pass
+            self._drop_locked(ce)
+
+    def _evict_locked(self) -> None:
+        """Drop least recently used finished entries until their gzipped
+        payloads total at most RESULT_CACHE_MAX_BYTES. Pending entries are
+        never evicted (their runner still holds them)."""
+        held = sum(len(ce.data or b"") for ce in self._by_permalink.values())
+        for ce in list(self._by_permalink.values()):
+            if held <= RESULT_CACHE_MAX_BYTES:
+                break
+            if ce.status != STATUS_PENDING and ce.data:
+                held -= len(ce.data)
+                self._drop_locked(ce)
+
+    def _drop_locked(self, ce: CacheEntry) -> None:
+        """Forget ``ce`` in both maps and remove its disk payload."""
+        if self._by_sql.get(ce.sql) is ce:
+            del self._by_sql[ce.sql]
+        del self._by_permalink[ce.permalink]
+        if self.cache_dir:
+            try:
+                os.remove(self._payload_path(ce.permalink))
+            except FileNotFoundError:
+                pass
+
+    def _touch_locked(self, ce: CacheEntry) -> CacheEntry:
+        """Mark ``ce`` most recently used."""
+        self._by_permalink[ce.permalink] = self._by_permalink.pop(ce.permalink)
+        return ce
 
     # -- disk layer ---------------------------------------------------------
     def _index_path(self) -> str:
@@ -196,6 +222,7 @@ class ResultCache:
             ce.done.set()  # the index holds finished entries only
             self._by_sql[ce.sql] = ce
             self._by_permalink[ce.permalink] = ce
+        self._evict_locked()
 
     def _payload_path(self, permalink: str) -> str:
         return os.path.join(self.cache_dir, f"{permalink}.gz")
@@ -247,7 +274,7 @@ class ResultCache:
             self._purge_locked()
             ce = self._by_sql.get(sql)
             if ce is not None and not ce.expired():
-                return ce, False
+                return self._touch_locked(ce), False
             ce = CacheEntry(sql=sql, expires=time.time() + self.ttl)
             self._by_sql[sql] = ce
             self._by_permalink[ce.permalink] = ce
@@ -256,14 +283,15 @@ class ResultCache:
     def by_permalink(self, permalink: str) -> CacheEntry | None:
         with self._lock:
             ce = self._by_permalink.get(permalink)
-            if ce is not None and ce.expired():
+            if ce is None or ce.expired():
                 return None
-            return ce
+            return self._touch_locked(ce)
 
     def succeed(self, ce: CacheEntry, data: bytes) -> None:
         with self._lock:
             ce.data = data
             ce.status = STATUS_SUCCESS
+            self._evict_locked()
             self._flush_locked()
         ce.done.set()
 
